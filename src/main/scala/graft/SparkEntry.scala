@@ -1459,7 +1459,7 @@ object SparkEntry {
 
   /** Two-level routing replay (q_embed_route_fine): the exact arithmetic of
     * `DoubleCentroidIndex.nearest`'s k > 64 branch
-    * (NativeExpressions.scala:481-562) in DuckDB. `cent` is the k seed
+    * (NativeExpressions.scala:210-291) in DuckDB. `cent` is the k seed
     * centroids (first k vectors, float→double); the coarse quantizer is
     * `coarseIters` Lloyd iterations over the CENTROID MATRIX seeded by its
     * first `coarseK` rows — per-coarse means accumulate SEQUENTIALLY in
@@ -1611,9 +1611,9 @@ object SparkEntry {
     // explicit multiply chain — repeated IEEE multiplies, never pow()
     def powChain(e: String, p: Int) = Seq.fill(p)(e).mkString("*")
     // per side: the distinct 60-bit shingle-hash set (first 15 hex chars —
-    // ShingleMd5Hashes60Expr's value) and the Carter-Wegman signature (h1 =
+    // NativeExpressions.shingleMd5Hashes60's value) and the Carter-Wegman signature (h1 =
     // chars 1-14, h2 = chars 15-28 of the SAME md5; hash j = h1 + j*h2 —
-    // MinhashCw56Expr's family)
+    // NativeExpressions.minhashCw56's family)
     def sigCte(src: String, setCol: String): String =
       s"""SELECT doc_id,
          |  list_distinct([ CAST(${ladder("m", 1, 15)} AS BIGINT)

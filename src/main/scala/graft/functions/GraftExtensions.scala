@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -9,7 +8,7 @@ import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.NativeExpressions._
 
-/** SQL registration of the native kernel expressions, two ways:
+/** SQL registration of the native kernel functions, two ways:
   *
   *   - [[GraftExtensions]] — the standard extension-library path: set
   *     `spark.sql.extensions=graft.functions.GraftExtensions` (or
@@ -19,9 +18,14 @@ import graft.functions.NativeExpressions._
   *     ALREADY-RUNNING session's registry (extensions only apply at session
   *     construction; a library handed an existing session needs this).
   *
-  * Static int parameters (shingle width, signature length, ...) must be
-  * foldable int literals — rejected loudly otherwise, matching the JSONPath
-  * compiler's reject-don't-guess policy.
+  * Each SQL function builds through the [[NativeExpressions]] Column
+  * function of the same kernel, so SQL and the Column API produce the same
+  * `StaticInvoke` / `Invoke` and share its type rules: an input Spark can
+  * implicitly cast (an int where a string is expected) is cast, and one it
+  * cannot cast (`shingle_hashes` on an `array<bigint>`) fails analysis with
+  * `DATATYPE_MISMATCH`. Static int parameters (shingle width, signature
+  * length, ...) must be foldable int literals — rejected loudly otherwise,
+  * matching the JSONPath compiler's reject-don't-guess policy.
   */
 object NativeFunctions {
 
@@ -37,58 +41,31 @@ object NativeFunctions {
     args
   }
 
+  /** A builder for `name` taking `arity` arguments: `build` gets them as
+    * Columns plus a reader for int-literal parameters by position.
+    */
+  private def fn(name: String, arity: Int)(build: (Seq[Column], Int => Int) => Column)
+      : (String, Seq[Expression] => Expression) =
+    name -> { (args: Seq[Expression]) =>
+      val checked = nArgs(name, arity, args)
+      ColumnBridge.expression(build(checked.map(ColumnBridge.column),
+        pos => intArg(name, pos, checked(pos))))
+    }
+
   /** (name, builder) for every SQL-exposed native function. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "shingle_hashes" -> { args: Seq[Expression] =>
-      val Seq(t, n) = nArgs("shingle_hashes", 2, args)
-      ShingleHashesExpr(t, intArg("shingle_hashes", 1, n))
-    },
-    "minhash_signature" -> { args: Seq[Expression] =>
-      val Seq(h, k) = nArgs("minhash_signature", 2, args)
-      MinHashSignatureExpr(h, intArg("minhash_signature", 1, k))
-    },
-    "simhash64" -> { args: Seq[Expression] =>
-      val Seq(h) = nArgs("simhash64", 1, args)
-      SimHash64Expr(h)
-    },
-    "vec_dot" -> { args: Seq[Expression] =>
-      val Seq(a, b) = nArgs("vec_dot", 2, args)
-      VecDotExpr(a, b)
-    },
-    "lsh_buckets" -> { args: Seq[Expression] =>
-      val Seq(v, t, b) = nArgs("lsh_buckets", 3, args)
-      LshBucketsExpr(v, intArg("lsh_buckets", 1, t), intArg("lsh_buckets", 2, b))
-    },
-    "char_ngrams" -> { args: Seq[Expression] =>
-      val Seq(t, n) = nArgs("char_ngrams", 2, args)
-      CharNgramsExpr(t, intArg("char_ngrams", 1, n))
-    },
-    "word_bigrams" -> { args: Seq[Expression] =>
-      val Seq(t) = nArgs("word_bigrams", 1, args)
-      WordBigramsExpr(t)
-    },
-    "winnowing_fingerprints" -> { args: Seq[Expression] =>
-      val Seq(t, k, w) = nArgs("winnowing_fingerprints", 3, args)
-      WinnowingExpr(t, intArg("winnowing_fingerprints", 1, k),
-        intArg("winnowing_fingerprints", 2, w))
-    },
-    "repetition_ratios" -> { args: Seq[Expression] =>
-      val Seq(t) = nArgs("repetition_ratios", 1, args)
-      RepetitionRatiosExpr(t)
-    },
-    "word_window_md5" -> { args: Seq[Expression] =>
-      val Seq(t, w) = nArgs("word_window_md5", 2, args)
-      WordWindowMd5Expr(t, intArg("word_window_md5", 1, w))
-    },
-    "shingle_md5_hashes60" -> { args: Seq[Expression] =>
-      val Seq(t, n) = nArgs("shingle_md5_hashes60", 2, args)
-      ShingleMd5Hashes60Expr(t, intArg("shingle_md5_hashes60", 1, n))
-    },
-    "winnow_md5_hex" -> { args: Seq[Expression] =>
-      val Seq(t, k, w) = nArgs("winnow_md5_hex", 3, args)
-      WinnowMd5HexExpr(t, intArg("winnow_md5_hex", 1, k),
-        intArg("winnow_md5_hex", 2, w))
-    }
+    fn("shingle_hashes", 2)((a, int) => shingleHashes(a(0), int(1))),
+    fn("minhash_signature", 2)((a, int) => minhashSignature(a(0), int(1))),
+    fn("simhash64", 1)((a, _) => simhash64(a(0))),
+    fn("vec_dot", 2)((a, _) => vecDot(a(0), a(1))),
+    fn("lsh_buckets", 3)((a, int) => lshBuckets(a(0), int(1), int(2))),
+    fn("char_ngrams", 2)((a, int) => charNgrams(a(0), int(1))),
+    fn("word_bigrams", 1)((a, _) => wordBigrams(a(0))),
+    fn("winnowing_fingerprints", 3)((a, int) => winnowingFingerprints(a(0), int(1), int(2))),
+    fn("repetition_ratios", 1)((a, _) => repetitionRatios(a(0))),
+    fn("word_window_md5", 2)((a, int) => wordWindowMd5(a(0), int(1))),
+    fn("shingle_md5_hashes60", 2)((a, int) => shingleMd5Hashes60(a(0), int(1))),
+    fn("winnow_md5_hex", 3)((a, int) => winnowMd5Hex(a(0), int(1), int(2)))
   )
 
   private def info(name: String): ExpressionInfo =

@@ -438,7 +438,7 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(if (m == nWin) out else java.util.Arrays.copyOf(out, m))
   }
 
-  /** One-pass repetition-ratio kernel backing `RepetitionRatiosExpr`:
+  /** One-pass repetition-ratio kernel backing `NativeExpressions.repetitionRatios`:
     * struct(n_tokens, u, b, tr) where u/b/tr are the fractions of the
     * token / word-2-gram / word-3-gram MULTISETS taken by their most
     * frequent element (0.0 when the document is too short for that order).
@@ -570,7 +570,7 @@ object Kernels {
     new GenericArrayData(out)
   }
 
-  /** Portable shingle hashing backing `ShingleMd5Hashes60Expr`: the word
+  /** Portable shingle hashing backing `NativeExpressions.shingleMd5Hashes60`: the word
     * n-gram shingles of [[shingleHashes]] (same ' '-split token boundaries —
     * a shingle's bytes are exactly the `concat_ws(" ")` of its n tokens, so
     * the raw byte slice IS the shingle string), each hashed to its md5
@@ -622,7 +622,7 @@ object Kernels {
       if (k == nShingles) out else java.util.Arrays.copyOf(out, k))
   }
 
-  /** Portable Carter-Wegman minhash signature backing `MinhashCw56Expr`:
+  /** Portable Carter-Wegman minhash signature backing `NativeExpressions.minhashCw56`:
     * over the word n-gram shingles (same ' '-split boundaries as
     * [[shingleMd5Hashes60]]), ONE md5 per shingle yields two independent
     * 56-bit values — h1 from digest bytes 0–6 (hex chars 1–14) and h2 from
@@ -682,7 +682,7 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
-  /** Portable winnowing backing `WinnowMd5HexExpr`: character-k-gram md5 HEX
+  /** Portable winnowing backing `NativeExpressions.winnowMd5Hex`: character-k-gram md5 HEX
     * strings (code-point slicing, like [[winnowingFingerprints]]) with
     * lexicographic sliding-window minima. The hex rendering is monotonic in
     * the digest's unsigned byte order ('0' < … < '9' < 'a' < … < 'f'), so
@@ -758,7 +758,7 @@ object Kernels {
   }
 }
 
-/** One-pass multi-profile n-gram scorer backing `ProfileBestMatchExpr`: the
+/** One-pass multi-profile n-gram scorer backing `NativeExpressions.profileBestMatch`: the
   * per-language profiles are inverted ONCE into a trigram → language-indices
   * map (a bounded model artifact, languages × profileSize entries), so
   * scoring a document is a single pass over its grams — O(|grams|) — instead

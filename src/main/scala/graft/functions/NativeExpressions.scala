@@ -2,253 +2,66 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal,
+  RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the hot per-row kernels (backed by
-  * [[Kernels]]), with codegen — each compiles to a single static call inside
-  * whole-stage codegen instead of an interpreted higher-order-function lambda
-  * per element. Preference order per the Spark-first design: built-in
-  * functions where they're fast; a native `Expression` with `doGenCode` where
-  * the built-in path is interpreted (higher-order functions); UDFs never.
+/** Column functions for the hot per-row kernels. Each one is a single call
+  * into [[Kernels]] or into a trained carrier object, built from Catalyst's
+  * own invoke expressions: a static kernel is a `StaticInvoke` on `Kernels`,
+  * and a carrier kernel (Bloom filter, language profiles, centroid index,
+  * BPE memo) is an `Invoke` on the carrier held as an object `Literal`,
+  * which whole-stage codegen ships in its references array. Both compile to
+  * one direct method call inside whole-stage codegen and fall back to a
+  * reflective call in interpreted mode. Preference order per the
+  * Spark-first design: built-in functions where they're fast; a kernel call
+  * where the built-in path is interpreted (higher-order functions); UDFs
+  * never.
   *
-  * Each expression is bit-compatible with a Column-combinator twin in
+  * Each kernel is bit-compatible with a Column-combinator twin in
   * `Dedup` / `Similarity` / `TextAnalysis` (differential-tested in
   * `NativeKernelsSpec`), so the combinator form documents the semantics and
-  * the native form carries the hot path.
+  * the kernel form carries the hot path.
+  *
+  * Input types. Every column argument declares the type the kernel reads
+  * (`string`, `array<bigint>`, `array<float>`, ...). An input that Spark
+  * can implicitly cast to it is cast, as for a built-in function (an int
+  * passed as text becomes a string); one that it cannot cast (an
+  * `array<bigint>` passed as text) fails analysis with Spark's
+  * `DATATYPE_MISMATCH` error. A null input gives a null result. Static
+  * parameters (shingle width, signature length, ...) are checked here, when
+  * the Column is built.
   */
 object NativeExpressions {
 
-  private def kernels = "graft.functions.Kernels"
+  private def kernel(method: String, dataType: DataType,
+      args: (Column, DataType)*): Column =
+    ColumnBridge.column(StaticInvoke(Kernels.getClass, dataType, method,
+      args.map(a => expr(a._1)), inputTypes = args.map(_._2),
+      returnNullable = false))
 
-  /** `array<bigint>` of distinct xxhash64 word-n-gram shingle hashes. */
-  case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
-    require(n >= 1, s"shingle width must be >= 1, got $n")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.shingleHashes(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.shingleHashes($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
+  private def carrier(target: AnyRef, method: String, dataType: DataType,
+      args: (Column, DataType)*): Column =
+    ColumnBridge.column(Invoke(Literal.fromObject(target), method, dataType,
+      args.map(a => expr(a._1)), methodInputTypes = args.map(_._2),
+      returnNullable = false))
 
-  /** `array<bigint>` k-permutation MinHash signature of a hash array. */
-  case class MinHashSignatureExpr(child: Expression, k: Int) extends UnaryExpression {
-    require(k >= 1, s"signature length must be >= 1, got $k")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected array<bigint>, got ${t.sql}")
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.minhashSignature(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.minhashSignature($c, $k)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  // parameters as catalyst Literals, not `lit`: a `lit` node is converted
+  // only when a Dataset resolves the Column, and the SQL builders hand the
+  // expression straight to the analyzer
+  private def param(v: Any, t: DataType): (Column, DataType) =
+    ColumnBridge.column(Literal(v, t)) -> t
+  private def int(v: Int): (Column, DataType) = param(v, IntegerType)
 
-  /** `bigint` SimHash fingerprint of a hash array. */
-  case class SimHash64Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected array<bigint>, got ${t.sql}")
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.simhash64(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.simhash64($c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `double` dot product of two float or two double arrays (element-wise
-    * double widening, left-to-right accumulation).
-    */
-  case class VecDotExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    private def elemType: Option[DataType] = (left.dataType, right.dataType) match {
-      case (ArrayType(a, _), ArrayType(b, _)) if a == b && (a == FloatType || a == DoubleType) =>
-        Some(a)
-      case _ => None
-    }
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (elemType.isDefined) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"expected two array<float> or two array<double>, got " +
-          s"${left.dataType.sql} and ${right.dataType.sql}")
-    private def method: String =
-      if (elemType.contains(FloatType)) "dotFloat" else "dotDouble"
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-      if (elemType.contains(FloatType)) Kernels.dotFloat(x, y) else Kernels.dotDouble(x, y)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$kernels.$method($a, $b)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** `array<int>` of all random-hyperplane LSH bucket keys of a float vector. */
-  case class LshBucketsExpr(child: Expression, tables: Int, bits: Int) extends UnaryExpression {
-    require(tables >= 1 && bits >= 1 && bits <= 30, s"bad LSH shape ($tables tables, $bits bits)")
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected array<float>, got ${t.sql}")
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.lshBuckets(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], tables, bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.lshBuckets($c, $tables, $bits)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<string>` of adjacent word bigrams (single-space separator). */
-  case class WordBigramsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.wordBigrams(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.wordBigrams($c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<string>` of distinct character n-grams. */
-  case class CharNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
-    require(n >= 1, s"n-gram width must be >= 1, got $n")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.charNgrams(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.charNgrams($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `int` edit distance capped at 1: 0, 1, or −1 meaning "more than 1". */
-  case class EditWithin1Expr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (left.dataType == StringType && right.dataType == StringType)
-        TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"expected two strings, got ${left.dataType.sql}, ${right.dataType.sql}")
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.editWithin1(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$kernels.editWithin1($a, $b)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** `array<string>` SymSpell deletion neighborhood (self + distinct
-    * single-code-point deletions).
-    */
-  case class DeletionVariantsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.deletionVariants(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.deletionVariants($c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<bigint>` of distinct winnowing fingerprints (k-gram size, window w). */
-  case class WinnowingExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
-    require(k >= 1 && w >= 1, s"bad winnowing shape (k=$k, w=$w)")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.winnowingFingerprints(input.asInstanceOf[UTF8String], k, w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.winnowingFingerprints($c, $k, $w)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<bigint>` of distinct 60-bit md5-prefix word-n-gram shingle
-    * hashes — the ENGINE-PORTABLE twin of [[ShingleHashesExpr]] (see
-    * [[Kernels.shingleMd5Hashes60]]).
-    */
-  case class ShingleMd5Hashes60Expr(child: Expression, n: Int) extends UnaryExpression {
-    require(n >= 1, s"shingle width must be >= 1, got $n")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.shingleMd5Hashes60(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.shingleMd5Hashes60($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<bigint>` Carter-Wegman minhash signature over word-n-gram
-    * shingles — one md5 per shingle, k running minima of h1 + j·h2 in one
-    * pass (see [[Kernels.minhashCw56]]). Empty array when the text has
-    * fewer than n tokens.
-    */
-  case class MinhashCw56Expr(child: Expression, n: Int, k: Int)
-      extends UnaryExpression {
-    require(n >= 1, s"shingle width must be >= 1, got $n")
-    require(k >= 1 && k <= 64, s"signature length must be in [1,64], got $k")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.minhashCw56(input.asInstanceOf[UTF8String], n, k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.minhashCw56($c, $n, $k)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<string>` of distinct md5-hex winnowing window minima — the
-    * ENGINE-PORTABLE twin of [[WinnowingExpr]] (see [[Kernels.winnowMd5Hex]]).
-    */
-  case class WinnowMd5HexExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
-    require(k >= 1 && w >= 1, s"bad winnowing shape (k=$k, w=$w)")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.winnowMd5Hex(input.asInstanceOf[UTF8String], k, w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.winnowMd5Hex($c, $k, $w)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val ints = ArrayType(IntegerType, containsNull = false)
+  private val strings = ArrayType(StringType, containsNull = false)
+  // input types accept either element nullability
+  private val hashArray = ArrayType(LongType)
+  private val floatVector = ArrayType(FloatType)
 
   /** Serializable carrier for a trained [[org.apache.spark.util.sketch.BloomFilter]]
     * riding inside generated code (reference-object pattern, like
@@ -268,84 +81,6 @@ object NativeExpressions {
       new BloomRef(bos.toByteArray)
     }
   }
-
-  /** `boolean` — membership probe of a long column against a trained Bloom
-    * filter (no false negatives; false positives at the filter's fpp). The
-    * filter is a bounded model artifact riding the references array, so the
-    * probe is a single virtual call inside whole-stage codegen — never a UDF.
-    */
-  case class BloomMightContainExpr(child: Expression, bloom: BloomRef)
-    extends UnaryExpression {
-    override def dataType: DataType = BooleanType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected bigint, got ${t.sql}")
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      bloom.mightContainLong(input.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomRef", bloom, classOf[BloomRef].getName)
-      defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `struct<n_tokens:int, u:double, b:double, tr:double>` — token count and
-    * top unigram/bigram/trigram multiset fractions, one pass over the text
-    * bytes (see [[Kernels.repetitionRatios]]).
-    */
-  case class RepetitionRatiosExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_tokens", IntegerType, nullable = false),
-      StructField("u", DoubleType, nullable = false),
-      StructField("b", DoubleType, nullable = false),
-      StructField("tr", DoubleType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.repetitionRatios(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.repetitionRatios($c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `struct<matched:int, cand_lang:string>` — best-scoring language of a
-    * distinct-gram array against a fixed profile set (see [[ProfileMatcher]]).
-    * The profile set rides along as a reference object (it is a model
-    * artifact, not a literal), so the row path is still a single static call
-    * inside whole-stage codegen.
-    */
-  case class ProfileBestMatchExpr(
-      child: Expression, langs: Seq[String], profiles: Seq[Seq[String]])
-    extends UnaryExpression {
-    require(langs.nonEmpty, "empty language profile set")
-    require(langs.length == profiles.length,
-      s"${langs.length} languages but ${profiles.length} profiles")
-
-    @transient private lazy val matcher =
-      new ProfileMatcher(langs.toArray, profiles.map(_.toArray).toArray)
-
-    override def dataType: DataType = StructType(Seq(
-      StructField("matched", IntegerType, nullable = false),
-      StructField("cand_lang", StringType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected array<string>, got ${t.sql}")
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      matcher.bestMatch(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("profileMatcher", matcher,
-        classOf[ProfileMatcher].getName)
-      defineCodeGen(ctx, ev, c => s"$ref.bestMatch($c)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** Serializable carrier for a trained FLOAT centroid matrix (reference-
     * object pattern like [[ProfileMatcher]]): nearest-cell assignment and
     * triangle-inequality cell admission run as ONE compiled loop over the
@@ -582,245 +317,206 @@ object NativeExpressions {
     }
   }
 
-  /** `struct<cell:int, dot:double>` — nearest float-centroid cell of a float
-    * vector plus the dot with that centroid (the index rides as a reference
-    * object; one static call inside whole-stage codegen).
+  /** `double` dot product of two float or two double arrays (element-wise
+    * double widening, left-to-right accumulation).
+    *
+    * The one kernel that stays an expression class: the element type picks
+    * `Kernels.dotFloat` or `Kernels.dotDouble`, and a column's type is only
+    * known once analysis has resolved it. A single `StaticInvoke` would have
+    * to cast float vectors to `array<double>`, a per-row array copy on the
+    * similarity hot path. So the class only checks the types and then
+    * replaces itself with the matching `StaticInvoke`.
     */
-  case class NearestCellExpr(child: Expression, index: FloatCentroidIndex)
-      extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("cell", IntegerType, nullable = false),
-      StructField("dot", DoubleType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected array<float>, got ${t.sql}")
+  case class VecDotExpr(left: Expression, right: Expression)
+      extends BinaryExpression with RuntimeReplaceable {
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(a, _), ArrayType(b, _)) if a == b && (a == FloatType || a == DoubleType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b) => TypeCheckResult.TypeCheckFailure(
+        s"expected two array<float> or two array<double>, got ${a.sql} and ${b.sql}")
     }
-    override protected def nullSafeEval(input: Any): Any =
-      index.nearest(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("centroidIndex", index,
-        classOf[FloatCentroidIndex].getName)
-      defineCodeGen(ctx, ev, c => s"$ref.nearest($c)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `struct<cell:int, d2:double>` — nearest double-centroid (k-means) cell
-    * of a float vector plus the squared L2 distance to it.
-    */
-  case class NearestCentroidDistExpr(child: Expression, index: DoubleCentroidIndex)
-      extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("cell", IntegerType, nullable = false),
-      StructField("d2", DoubleType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected array<float>, got ${t.sql}")
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      index.nearest(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("centroidIndex", index,
-        classOf[DoubleCentroidIndex].getName)
-      defineCodeGen(ctx, ev, c => s"$ref.nearest($c)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `array<int>` — the triangle-inequality-admissible cells of a vector
-    * given its norm and its per-query floor (see
-    * [[FloatCentroidIndex.admissible]]).
-    */
-  case class AdmissibleCellsExpr(
-      vec: Expression, nrm: Expression, floor: Expression,
-      index: FloatCentroidIndex, margin: Double)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def first: Expression = vec
-    override def second: Expression = nrm
-    override def third: Expression = floor
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      (vec.dataType, nrm.dataType, floor.dataType) match {
-        case (ArrayType(FloatType, _), DoubleType, DoubleType) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-          s"expected (array<float>, double, double), got (${a.sql}, ${b.sql}, ${c.sql})")
-      }
-    override protected def nullSafeEval(v: Any, n: Any, f: Any): Any =
-      index.admissible(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        n.asInstanceOf[Double], f.asInstanceOf[Double], margin)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("centroidIndex", index,
-        classOf[FloatCentroidIndex].getName)
-      defineCodeGen(ctx, ev, (v, n, f) => s"$ref.admissible($v, $n, $f, $margin)")
-    }
-    override protected def withNewChildrenInternal(
-        newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-      copy(vec = newFirst, nrm = newSecond, floor = newThird)
-  }
-
-  /** `array<string>` md5 hex of every `w`-word sliding window (see
-    * [[Kernels.wordWindowMd5]]) — portable span fingerprints for
-    * substring-level dedup.
-    */
-  case class WordWindowMd5Expr(child: Expression, w: Int) extends UnaryExpression {
-    require(w >= 1, s"window width must be >= 1, got $w")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.wordWindowMd5(input.asInstanceOf[UTF8String], w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernels.wordWindowMd5($c, $w)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `int` — first index at which two equal-length long arrays agree, -1
-    * when none (see [[Kernels.firstIndexEqual]]): the banded-LSH join-side
-    * candidate dedup predicate.
-    */
-  case class FirstIndexEqualExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (a, b) => TypeCheckResult.TypeCheckFailure(
-          s"expected two array<bigint>, got ${a.sql} and ${b.sql}")
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.firstIndexEqual(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$kernels.firstIndexEqual($a, $b)")
+    override def dataType: DataType = DoubleType
+    override lazy val replacement: Expression = StaticInvoke(Kernels.getClass, DoubleType,
+      left.dataType match {
+        case ArrayType(FloatType, _) => "dotFloat"
+        case _ => "dotDouble"
+      },
+      Seq(left, right), returnNullable = false)
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
   }
 
+  // ------------------------------------------------------------ Column API
+
+  /** `array<bigint>` of distinct xxhash64 word-n-gram shingle hashes. */
+  def shingleHashes(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    kernel("shingleHashes", longs, text -> StringType, int(n))
+  }
+
+  /** `array<bigint>` k-permutation MinHash signature of a hash array. */
+  def minhashSignature(hashes: Column, k: Int): Column = {
+    require(k >= 1, s"signature length must be >= 1, got $k")
+    kernel("minhashSignature", longs, hashes -> hashArray, int(k))
+  }
+
+  /** `bigint` SimHash fingerprint of a hash array. */
+  def simhash64(hashes: Column): Column =
+    kernel("simhash64", LongType, hashes -> hashArray)
+
+  /** See [[VecDotExpr]]. */
+  def vecDot(a: Column, b: Column): Column =
+    ColumnBridge.column(VecDotExpr(expr(a), expr(b)))
+
+  /** `array<int>` of all random-hyperplane LSH bucket keys of a float vector. */
+  def lshBuckets(v: Column, tables: Int, bits: Int): Column = {
+    require(tables >= 1 && bits >= 1 && bits <= 30, s"bad LSH shape ($tables tables, $bits bits)")
+    kernel("lshBuckets", ints, v -> floatVector, int(tables), int(bits))
+  }
+
+  /** `array<string>` of adjacent word bigrams (single-space separator). */
+  def wordBigrams(text: Column): Column =
+    kernel("wordBigrams", strings, text -> StringType)
+
+  /** `array<string>` of distinct character n-grams. */
+  def charNgrams(text: Column, n: Int): Column = {
+    require(n >= 1, s"n-gram width must be >= 1, got $n")
+    kernel("charNgrams", strings, text -> StringType, int(n))
+  }
+
+  /** `array<bigint>` of distinct winnowing fingerprints (k-gram size, window w). */
+  def winnowingFingerprints(text: Column, k: Int, w: Int): Column = {
+    require(k >= 1 && w >= 1, s"bad winnowing shape (k=$k, w=$w)")
+    kernel("winnowingFingerprints", longs, text -> StringType, int(k), int(w))
+  }
+
+  /** `array<string>` SymSpell deletion neighborhood (self + distinct
+    * single-code-point deletions).
+    */
+  def deletionVariants(text: Column): Column =
+    kernel("deletionVariants", strings, text -> StringType)
+
+  /** `int` edit distance capped at 1: 0, 1, or −1 meaning "more than 1". */
+  def editWithin1(a: Column, b: Column): Column =
+    kernel("editWithin1", IntegerType, a -> StringType, b -> StringType)
+
+  /** `struct<n_tokens:int, u:double, b:double, tr:double>` — token count and
+    * top unigram/bigram/trigram multiset fractions, one pass over the text
+    * bytes (see [[Kernels.repetitionRatios]]).
+    */
+  def repetitionRatios(text: Column): Column =
+    kernel("repetitionRatios", StructType(Seq(
+      StructField("n_tokens", IntegerType, nullable = false),
+      StructField("u", DoubleType, nullable = false),
+      StructField("b", DoubleType, nullable = false),
+      StructField("tr", DoubleType, nullable = false))), text -> StringType)
+
+  /** `boolean` — membership probe of a long column against a trained Bloom
+    * filter (no false negatives; false positives at the filter's fpp). The
+    * filter is a bounded model artifact riding the references array, so the
+    * probe is a single virtual call inside whole-stage codegen — never a UDF.
+    */
+  def bloomMightContain(h: Column, bloom: BloomRef): Column =
+    carrier(bloom, "mightContainLong", BooleanType, h -> LongType)
+
+  /** `array<string>` md5 hex of every `w`-word sliding window (see
+    * [[Kernels.wordWindowMd5]]) — portable span fingerprints for
+    * substring-level dedup.
+    */
+  def wordWindowMd5(text: Column, w: Int): Column = {
+    require(w >= 1, s"window width must be >= 1, got $w")
+    kernel("wordWindowMd5", strings, text -> StringType, int(w))
+  }
+
+  /** `array<bigint>` of distinct 60-bit md5-prefix word-n-gram shingle
+    * hashes — the ENGINE-PORTABLE twin of [[shingleHashes]] (see
+    * [[Kernels.shingleMd5Hashes60]]).
+    */
+  def shingleMd5Hashes60(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    kernel("shingleMd5Hashes60", longs, text -> StringType, int(n))
+  }
+
+  /** `array<bigint>` Carter-Wegman minhash signature over word-n-gram
+    * shingles — one md5 per shingle, k running minima of h1 + j·h2 in one
+    * pass (see [[Kernels.minhashCw56]]). Empty array when the text has
+    * fewer than n tokens.
+    */
+  def minhashCw56(text: Column, n: Int, k: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    require(k >= 1 && k <= 64, s"signature length must be in [1,64], got $k")
+    kernel("minhashCw56", longs, text -> StringType, int(n), int(k))
+  }
+
+  /** `array<string>` of distinct md5-hex winnowing window minima — the
+    * ENGINE-PORTABLE twin of [[winnowingFingerprints]] (see
+    * [[Kernels.winnowMd5Hex]]).
+    */
+  def winnowMd5Hex(text: Column, k: Int, w: Int): Column = {
+    require(k >= 1 && w >= 1, s"bad winnowing shape (k=$k, w=$w)")
+    kernel("winnowMd5Hex", strings, text -> StringType, int(k), int(w))
+  }
+
+  /** `struct<matched:int, cand_lang:string>` — best-scoring language of a
+    * distinct-gram array against a fixed profile set (see [[ProfileMatcher]]).
+    * The profile set rides along as a reference object (it is a model
+    * artifact, not a literal), so the row path is still a single call
+    * inside whole-stage codegen.
+    */
+  def profileBestMatch(grams: Column, profiles: Seq[(String, Seq[String])]): Column =
+    carrier(new ProfileMatcher(profiles.map(_._1).toArray, profiles.map(_._2.toArray).toArray),
+      "bestMatch", StructType(Seq(
+        StructField("matched", IntegerType, nullable = false),
+        StructField("cand_lang", StringType, nullable = false))),
+      grams -> ArrayType(StringType))
+
+  /** `struct<cell:int, dot:double>` — nearest float-centroid cell of a float
+    * vector plus the dot with that centroid (see [[FloatCentroidIndex.nearest]]).
+    */
+  def nearestCellInfo(v: Column, index: FloatCentroidIndex): Column =
+    carrier(index, "nearest", StructType(Seq(
+      StructField("cell", IntegerType, nullable = false),
+      StructField("dot", DoubleType, nullable = false))), v -> floatVector)
+
+  /** `struct<cell:int, d2:double>` — nearest double-centroid (k-means) cell
+    * of a float vector plus the squared L2 distance to it.
+    */
+  def nearestCentroidDist(v: Column, index: DoubleCentroidIndex): Column =
+    carrier(index, "nearest", StructType(Seq(
+      StructField("cell", IntegerType, nullable = false),
+      StructField("d2", DoubleType, nullable = false))), v -> floatVector)
+
+  /** `array<int>` — the triangle-inequality-admissible cells of a vector
+    * given its norm and its per-query floor (see
+    * [[FloatCentroidIndex.admissible]]).
+    */
+  def admissibleCells(
+      v: Column, nrm: Column, floor: Column,
+      index: FloatCentroidIndex, margin: Double): Column =
+    carrier(index, "admissible", ints,
+      v -> floatVector, nrm -> DoubleType, floor -> DoubleType, param(margin, DoubleType))
+
+  /** `int` — first index at which two equal-length long arrays agree, -1
+    * when none (see [[Kernels.firstIndexEqual]]): the banded-LSH join-side
+    * candidate dedup predicate.
+    */
+  def firstIndexEqual(a: Column, b: Column): Column =
+    kernel("firstIndexEqual", IntegerType, a -> hashArray, b -> hashArray)
+
   /** `struct<n_words:bigint, n_tokens:bigint, tokens_hash:string>` — the
     * whole per-document BPE encode as one compiled pass (memo rides as a
     * reference object; see [[BpeMemoKernel]]).
     */
-  case class BpeEncodeStatsExpr(child: Expression, memo: BpeMemoKernel)
-      extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
+  def bpeEncodeStats(text: Column, memo: BpeMemoKernel): Column =
+    carrier(memo, "encodeStats", StructType(Seq(
       StructField("n_words", LongType, nullable = false),
       StructField("n_tokens", LongType, nullable = false),
-      StructField("tokens_hash", StringType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      memo.encodeStats(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeMemo", memo, classOf[BpeMemoKernel].getName)
-      defineCodeGen(ctx, ev, c => s"$ref.encodeStats($c)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
+      StructField("tokens_hash", StringType, nullable = false))), text -> StringType)
 
   /** `bigint` — per-document BPE token count under the memo (OOV words
-    * count 1); the [[BpeEncodeStatsExpr]] value without the fingerprint.
+    * count 1); the [[bpeEncodeStats]] value without the fingerprint.
     */
-  case class BpeTokenCountExpr(child: Expression, memo: BpeMemoKernel)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"expected string, got ${child.dataType.sql}")
-    override protected def nullSafeEval(input: Any): Any =
-      memo.tokenCount(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeMemo", memo, classOf[BpeMemoKernel].getName)
-      defineCodeGen(ctx, ev, c => s"$ref.tokenCount($c)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  // ------------------------------------------------------------ Column API
-
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-
-  def shingleHashes(text: Column, n: Int): Column =
-    ColumnBridge.column(ShingleHashesExpr(expr(text), n))
-
-  def minhashSignature(hashes: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSignatureExpr(expr(hashes), k))
-
-  def simhash64(hashes: Column): Column =
-    ColumnBridge.column(SimHash64Expr(expr(hashes)))
-
-  def vecDot(a: Column, b: Column): Column =
-    ColumnBridge.column(VecDotExpr(expr(a), expr(b)))
-
-  def lshBuckets(v: Column, tables: Int, bits: Int): Column =
-    ColumnBridge.column(LshBucketsExpr(expr(v), tables, bits))
-
-  def wordBigrams(text: Column): Column =
-    ColumnBridge.column(WordBigramsExpr(expr(text)))
-
-  def charNgrams(text: Column, n: Int): Column =
-    ColumnBridge.column(CharNgramsExpr(expr(text), n))
-
-  def winnowingFingerprints(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowingExpr(expr(text), k, w))
-
-  def deletionVariants(text: Column): Column =
-    ColumnBridge.column(DeletionVariantsExpr(expr(text)))
-
-  def editWithin1(a: Column, b: Column): Column =
-    ColumnBridge.column(EditWithin1Expr(expr(a), expr(b)))
-
-  def repetitionRatios(text: Column): Column =
-    ColumnBridge.column(RepetitionRatiosExpr(expr(text)))
-
-  def bloomMightContain(h: Column, bloom: BloomRef): Column =
-    ColumnBridge.column(BloomMightContainExpr(expr(h), bloom))
-
-  def wordWindowMd5(text: Column, w: Int): Column =
-    ColumnBridge.column(WordWindowMd5Expr(expr(text), w))
-
-  def shingleMd5Hashes60(text: Column, n: Int): Column =
-    ColumnBridge.column(ShingleMd5Hashes60Expr(expr(text), n))
-
-  def minhashCw56(text: Column, n: Int, k: Int): Column =
-    ColumnBridge.column(MinhashCw56Expr(expr(text), n, k))
-
-  def winnowMd5Hex(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowMd5HexExpr(expr(text), k, w))
-
-  def profileBestMatch(grams: Column, profiles: Seq[(String, Seq[String])]): Column =
-    ColumnBridge.column(
-      ProfileBestMatchExpr(expr(grams), profiles.map(_._1), profiles.map(_._2)))
-
-  def nearestCellInfo(v: Column, index: FloatCentroidIndex): Column =
-    ColumnBridge.column(NearestCellExpr(expr(v), index))
-
-  def nearestCentroidDist(v: Column, index: DoubleCentroidIndex): Column =
-    ColumnBridge.column(NearestCentroidDistExpr(expr(v), index))
-
-  def admissibleCells(
-      v: Column, nrm: Column, floor: Column,
-      index: FloatCentroidIndex, margin: Double): Column =
-    ColumnBridge.column(
-      AdmissibleCellsExpr(expr(v), expr(nrm), expr(floor), index, margin))
-
-  def firstIndexEqual(a: Column, b: Column): Column =
-    ColumnBridge.column(FirstIndexEqualExpr(expr(a), expr(b)))
-
-  def bpeEncodeStats(text: Column, memo: BpeMemoKernel): Column =
-    ColumnBridge.column(BpeEncodeStatsExpr(expr(text), memo))
-
   def bpeTokenCount(text: Column, memo: BpeMemoKernel): Column =
-    ColumnBridge.column(BpeTokenCountExpr(expr(text), memo))
+    carrier(memo, "tokenCount", LongType, text -> StringType)
 }

@@ -111,7 +111,7 @@ object Dedup {
     * for benchmark sets too large to broadcast-join comfortably. A Bloom
     * filter over the benchmark's distinct shingle hashes (a bounded model
     * artifact: ~1.2 MB per million shingles at 1% fpp) rides inside codegen
-    * via [[NativeExpressions.BloomMightContainExpr]] and prunes corpus
+    * via [[NativeExpressions.bloomMightContain]] and prunes corpus
     * shingles MAP-SIDE, before any join: only true matches plus an fpp
     * fraction of the corpus ever reach the exact re-check join, so when that
     * join must shuffle (benchmark beyond broadcast size), the shuffled volume
@@ -191,7 +191,7 @@ object Dedup {
   /** MinHash signature, Column-combinator form: for each of k hash
     * permutations, the minimum `xxhash64(h, j)` over a shingle-hash array.
     * Null for documents with no shingles. This is the executable definition
-    * of the native `MinHashSignatureExpr` (bit-identical, differential-tested)
+    * of the native `NativeExpressions.minhashSignature` (bit-identical, differential-tested)
     * — the hot path uses the native kernel.
     *
     * A note on expression structure, which dominates cost at scale: a Column
@@ -648,7 +648,7 @@ object Dedup {
     simhashFromHashes(transform(shingles(text, n), t => xxhash64(t)))
 
   /** The 64 per-bit majority votes over a materialized hash-array column —
-    * the Column-combinator twin of the native `SimHash64Expr` kernel
+    * the Column-combinator twin of the native `NativeExpressions.simhash64` kernel
     * (differential-tested in NativeKernelsSpec).
     */
   def simhashFromHashes(hs: Column): Column = {
@@ -694,7 +694,7 @@ object Dedup {
       .filter(size(col("hs")) > 0)
       .select(col("id"), NativeExpressions.simhash64(col("hs")).as("fp"))
 
-  /** Column-combinator twin of the native `ShingleMd5Hashes60Expr` kernel
+  /** Column-combinator twin of the native `NativeExpressions.shingleMd5Hashes60` kernel
     * (bit-identical, differential-tested in NativeKernelsSpec) — the
     * executable definition of the portable 60-bit shingle hash; the serving
     * path above uses the fused kernel (the per-shingle interpreted
@@ -1155,7 +1155,7 @@ object Dedup {
     * Mining of Massive Datasets §3.4, the standard banding analysis).
     *
     * The signature here uses a PORTABLE Carter-Wegman double-hash family
-    * served by the fused [[graft.functions.NativeExpressions.MinhashCw56Expr]]
+    * served by the fused [[graft.functions.NativeExpressions.minhashCw56]]
     * kernel (the engine's production path uses xxhash64 —
     * [[minhashSignatureFromHashes]]): ONE md5 per shingle yields two
     * independent 56-bit halves h1 (digest bytes 0–6) and h2 (bytes 7–13),
@@ -1169,7 +1169,7 @@ object Dedup {
     * the family bit-replayable by a SQL oracle; the audit's subject is the
     * banding GEOMETRY (b, r), hash-family-independent. The exact Jaccard
     * compares the 60-bit shingle-hash SETS ([[graft.functions
-    * .NativeExpressions.ShingleMd5Hashes60Expr]] — set ops over longs, the
+    * .NativeExpressions.shingleMd5Hashes60]] — set ops over longs, the
     * oracle replays the same hex60 values), and the analytic curve is
     * computed with explicit multiplication chains (j·j·j·j), not pow() —
     * repeated IEEE multiplies are deterministic across engines where libm
@@ -1221,7 +1221,7 @@ object Dedup {
     val r = numHashes / bands
     // one fused pass per side: the 60-bit shingle-hash SET (for the exact
     // jaccard — set ops over longs, bit-replayed by the oracle's hex60
-    // ladder) and the Carter-Wegman signature (MinhashCw56Expr: one md5
+    // ladder) and the Carter-Wegman signature (NativeExpressions.minhashCw56: one md5
     // per shingle, k running minima of h1 + j*h2)
     val base = docs
       .select(col("doc_id"), col("text"), tokens(col("text")).as("tk"))

@@ -812,7 +812,7 @@ object Similarity {
   /** LSH bucket key for one hash table, Column-combinator form: `bits`
     * random-hyperplane sign bits; hyperplane (table, j)'s i-th component is
     * ±1 derived from xxhash64(table, j, i) — deterministic, no stored model.
-    * Executable twin of the native `LshBucketsExpr` (which computes every
+    * Executable twin of the native `NativeExpressions.lshBuckets` (which computes every
     * table's key in one pass); differential-tested in NativeKernelsSpec.
     */
   def lshBucket(v: Column, table: Int, bits: Int): Column = {

@@ -45,24 +45,6 @@ object Sketches {
         approx_count_distinct(col("term"), rsd).as("n_distinct_terms"),
         count(lit(1)).as("n_terms"))
 
-  /** Approximate-quantile twin of [[TextAnalysis.tokenDistribution]]:
-    * `approx_percentile` (Greenwald-Khanna, `accuracy` inverse-epsilon)
-    * instead of the exact interpolating `percentile` — same call shape, same
-    * output schema, group-size-independent state. SketchesSpec pins the
-    * rank-error bound against the exact form.
-    */
-  def tokenDistributionApprox(docs: DataFrame, accuracy: Int = 10000): DataFrame = {
-    def q(p: Double, name: String) =
-      approx_percentile(col("n_tokens"), lit(p), lit(accuracy)).cast("double").as(name)
-    docs
-      .select(col("source"), size(split(col("text"), " ")).as("n_tokens"))
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        round(sum(col("n_tokens")).cast("double") / count(lit(1)), 6).as("avg_tokens"),
-        q(0.25, "p25"), q(0.5, "p50"), q(0.75, "p75"), q(0.9, "p90"))
-  }
-
   // ---------------------------------------------------------------------
   // Sketch AUDITS — error-as-data. The sketch estimates themselves are
   // engine-specific (an HLL register set / GK summary is not reproducible

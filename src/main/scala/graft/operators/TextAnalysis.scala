@@ -143,7 +143,7 @@ object TextAnalysis {
       .withColumnRenamed("rank", "rk")
 
   /** Character n-grams of a text column (default trigrams) —
-    * Column-combinator twin of the native `CharNgramsExpr` kernel
+    * Column-combinator twin of the native `NativeExpressions.charNgrams` kernel
     * (differential-tested); the scoring paths use the native form.
     */
   def charNgrams(text: Column, n: Int = 3): Column =
@@ -423,7 +423,7 @@ object TextAnalysis {
     * window minimum is the lexicographic string minimum — both recomputable
     * by a SQL oracle character-for-character (the [[graft.operators.Dedup]]
     * `wordWindowMd5` move, applied to character k-grams). Served by the
-    * fused `WinnowMd5HexExpr` kernel — the per-k-gram interpreted md5-lambda
+    * fused `NativeExpressions.winnowMd5Hex` kernel — the per-k-gram interpreted md5-lambda
     * form ([[portableFingerprintSet]], kept as the executable definition and
     * differential-tested) made the registered query ~19× slower at sf0.1.
     *
@@ -440,7 +440,7 @@ object TextAnalysis {
         size(col("fps")).as("n_fingerprints"),
         array_min(col("fps")).as("min_fingerprint"))
 
-  /** Column-combinator twin of the native `WinnowMd5HexExpr` kernel
+  /** Column-combinator twin of the native `NativeExpressions.winnowMd5Hex` kernel
     * (bit-identical, differential-tested in NativeKernelsSpec). Structured as
     * two projections so the k-gram hash array materializes ONCE per row;
     * putting it inline inside the window lambda would re-derive every md5
@@ -462,7 +462,7 @@ object TextAnalysis {
           .otherwise(array().cast("array<string>")).as("fps"))
 
   /** The distinct winnowing fingerprint set of a text column —
-    * Column-combinator twin of the native `WinnowingExpr` kernel
+    * Column-combinator twin of the native `NativeExpressions.winnowingFingerprints` kernel
     * (differential-tested in NativeKernelsSpec).
     */
   def fingerprintSet(text: Column, k: Int = 8, w: Int = 4): Column = {
@@ -545,7 +545,7 @@ object TextAnalysis {
   }
 
   /** Adjacent word bigrams, Column-combinator form — the executable twin of
-    * the native `WordBigramsExpr` kernel (differential-tested in
+    * the native `NativeExpressions.wordBigrams` kernel (differential-tested in
     * NativeKernelsSpec): every consecutive token pair of `split(text, " ")`
     * joined with a single space, empty array below two tokens.
     */
@@ -647,6 +647,9 @@ object TextAnalysis {
     */
   def moreLikeThis(docs: DataFrame, seedIds: Seq[Long], k: Int = 10): DataFrame = {
     require(seedIds.nonEmpty, "moreLikeThis: no seed documents")
+    // a repeated seed would build a second `_num_$s` pivot column with the
+    // same name, an ambiguous reference
+    val seeds = seedIds.distinct
     val terms = docs
       .select(col("doc_id"), explode(toks(col("text"))).as("term"))
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -676,9 +679,9 @@ object TextAnalysis {
     val norms = w.groupBy("doc_id")
       .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
       .localCheckpoint()
-    val seedW = w.filter(col("doc_id").isin(seedIds: _*))
+    val seedW = w.filter(col("doc_id").isin(seeds: _*))
       .select(col("doc_id").as("seed_id"), col("term"), col("w").as("ws"))
-    val seedNorm = norms.filter(col("doc_id").isin(seedIds: _*))
+    val seedNorm = norms.filter(col("doc_id").isin(seeds: _*))
       .select(col("doc_id").as("seed_id"), col("nrm").as("ns"))
     // numerators PIVOTED on the bounded seed set (r16, guide §2.3): one
     // doc-keyed aggregate with |seeds| sum columns replaces the
@@ -689,12 +692,12 @@ object TextAnalysis {
     // (seed, doc) pair shared no term ⟺ the old aggregate had no such
     // group, and the seed row itself is excluded after unpivot exactly as
     // the old pre-aggregation filter did.
-    val numCols = seedIds.map(s =>
+    val numCols = seeds.map(s =>
       sum(when(col("seed_id") === s, col("w") * col("ws"))).as(s"_num_$s"))
     val scored = w.join(broadcast(seedW), Seq("term"))
       .groupBy(col("doc_id"))
       .agg(numCols.head, numCols.tail: _*)
-      .select(col("doc_id"), explode(array(seedIds.map(s =>
+      .select(col("doc_id"), explode(array(seeds.map(s =>
         struct(lit(s).as("seed_id"), col(s"_num_$s").as("num"))): _*)).as("p"))
       .select(col("doc_id"), col("p.seed_id").as("seed_id"), col("p.num").as("num"))
       .filter(col("num").isNotNull && col("doc_id") =!= col("seed_id"))

@@ -36,8 +36,11 @@ object MaterializedState {
 
   private val built = new ConcurrentHashMap[String, String]()
 
+  // the prefix keeps the leaf visible: Spark's file listing treats a name
+  // starting with `_` or `.` (an absolute dir sanitizes to `_root_...`) as
+  // hidden and logs "All paths were ignored" on every read
   private def stateDir(sfDir: String): Path =
-    Paths.get("target", "state", sfDir.replaceAll("[^A-Za-z0-9.]+", "_"))
+    Paths.get("target", "state", "snapshot" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_"))
       .toAbsolutePath
 
   /** Write the snapshot for this scale factor (once per JVM); returns its

@@ -23,6 +23,15 @@ class MaterializedStateSpec extends AnyFunSuite {
     assert(state.except(raw).isEmpty && raw.except(state).isEmpty)
   }
 
+  test("snapshot directory is not hidden from Spark's file listing") {
+    // Spark skips a path whose name starts with `_` or `.`; an absolute
+    // sfDir sanitized naively starts with `_`
+    val leaf = java.nio.file.Paths.get(MaterializedState.ensure(spark, sfDir))
+      .getFileName.toString
+    assert(!leaf.startsWith("_") && !leaf.startsWith("."), s"hidden snapshot dir: $leaf")
+    assert(MaterializedState.read(spark, sfDir).count() == raw.count())
+  }
+
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec =
     df.queryExecution.executedPlan.collectLeaves().collectFirst {
       case s: FileSourceScanExec => s

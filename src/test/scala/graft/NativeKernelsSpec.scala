@@ -665,4 +665,76 @@ class NativeKernelsSpec extends AnyFunSuite {
     assert(row.getSeq[Long](0).length == 2)
     assert(row.getDouble(1) == 11.0)
   }
+
+  test("every kernel call compiles inside whole-stage codegen; bad input types fail analysis") {
+    import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.functions.{BpeMemoKernel, NativeFunctions}
+    val cents = emb.select("embedding").limit(4).collect().map(_.getSeq[Float](0).toArray)
+    val floatIdx = new NativeExpressions.FloatCentroidIndex(cents, Array.fill(cents.length)(0.1))
+    val doubleIdx = new NativeExpressions.DoubleCentroidIndex(cents.map(_.map(_.toDouble)))
+    val bloom = NativeExpressions.BloomRef(
+      org.apache.spark.util.sketch.BloomFilter.create(100, 0.01))
+    val memo = new BpeMemoKernel(Array("a"), Array(Array("a")))
+    val text = col("text")
+    val hs = NativeExpressions.shingleHashes(text, 3)
+    val v = col("embedding")
+    val onDocs = Seq(
+      "shingleHashes" -> hs,
+      "minhashSignature" -> NativeExpressions.minhashSignature(hs, 16),
+      "simhash64" -> NativeExpressions.simhash64(hs),
+      "wordBigrams" -> NativeExpressions.wordBigrams(text),
+      "charNgrams" -> NativeExpressions.charNgrams(text, 3),
+      "winnowingFingerprints" -> NativeExpressions.winnowingFingerprints(text, 4, 3),
+      "deletionVariants" -> NativeExpressions.deletionVariants(text),
+      "editWithin1" -> NativeExpressions.editWithin1(text, text),
+      "repetitionRatios" -> NativeExpressions.repetitionRatios(text),
+      "bloomMightContain" -> NativeExpressions.bloomMightContain(col("doc_id"), bloom),
+      "wordWindowMd5" -> NativeExpressions.wordWindowMd5(text, 3),
+      "shingleMd5Hashes60" -> NativeExpressions.shingleMd5Hashes60(text, 3),
+      "minhashCw56" -> NativeExpressions.minhashCw56(text, 3, 16),
+      "winnowMd5Hex" -> NativeExpressions.winnowMd5Hex(text, 4, 3),
+      "profileBestMatch" -> NativeExpressions.profileBestMatch(
+        NativeExpressions.charNgrams(text, 3), Seq("aa" -> Seq("abc"), "zz" -> Seq("bcd"))),
+      "firstIndexEqual" -> NativeExpressions.firstIndexEqual(hs, hs),
+      "bpeEncodeStats" -> NativeExpressions.bpeEncodeStats(text, memo),
+      "bpeTokenCount" -> NativeExpressions.bpeTokenCount(text, memo))
+    val onEmb = Seq(
+      "vecDot" -> NativeExpressions.vecDot(v, v),
+      "lshBuckets" -> NativeExpressions.lshBuckets(v, 4, 5),
+      "nearestCellInfo" -> NativeExpressions.nearestCellInfo(v, floatIdx),
+      "nearestCentroidDist" -> NativeExpressions.nearestCentroidDist(v, doubleIdx),
+      "admissibleCells" -> NativeExpressions.admissibleCells(
+        v, lit(1.0), lit(0.5), floatIdx, 0.01))
+    def finalPlan(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    for ((frame, calls) <- Seq(docs -> onDocs, emb -> onEmb); (name, call) <- calls) {
+      val out = frame.select(call.as("k"))
+      out.collect()
+      val plan = finalPlan(out.queryExecution.executedPlan)
+      val holders = plan.collect {
+        case p: ProjectExec if p.projectList.exists(_.exists {
+          case _: StaticInvoke | _: Invoke => true
+          case _ => false
+        }) => p
+      }
+      assert(holders.nonEmpty, s"$name: no ProjectExec holds the kernel call\n$plan")
+      val inCodegen = plan.collect { case w: WholeStageCodegenExec => w.child.collect {
+        case p: ProjectExec => p
+      } }.flatten
+      holders.foreach(h => assert(inCodegen.exists(_ eq h),
+        s"$name: kernel projection is outside whole-stage codegen\n$plan"))
+    }
+
+    NativeFunctions.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT shingle_hashes(array(1L, 2L), 3)").collect()
+    }
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    // a castable input is implicitly cast, as for a built-in function
+    assert(spark.sql("SELECT size(char_ngrams(12345, 2))").head().getInt(0) == 4)
+  }
 }

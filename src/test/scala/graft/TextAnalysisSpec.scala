@@ -301,6 +301,18 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(out.forall(r => r.getAs[Long]("seed_id") != r.getAs[Long]("doc_id")))
   }
 
+  test("more-like-this: a repeated seed id gives the same rows as listing it once") {
+    val docs = Seq(
+      (0L, "apple banana"),
+      (1L, "apple cherry"),
+      (2L, "apple durian"),
+      (3L, "banana cherry")).toDF("doc_id", "text")
+    val once = TextAnalysis.moreLikeThis(docs, Seq(0L, 1L), k = 2)
+    val repeated = TextAnalysis.moreLikeThis(docs, Seq(0L, 0L, 1L), k = 2)
+    assert(repeated.count() == once.count())
+    assert(repeated.exceptAll(once).isEmpty && once.exceptAll(repeated).isEmpty)
+  }
+
   test("tfidf keywords: a doc-unique term outranks a corpus-wide term") {
     val docs = Seq(
       (1L, "common common zebra"),
