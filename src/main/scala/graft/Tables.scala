@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.state.ParquetRelations
+
 /** Loaders for the driver-provided parquet tables (TESTDATA.md) plus the
   * canonical mapping from the `events` table to the reference's
   * stock-transaction stream shape.
@@ -15,8 +17,16 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** The driver table `<dir>/<name>.parquet`, through the per-session
+    * relation memo ([[graft.state.ParquetRelations.read]]): its files are
+    * listed and its schema inferred once per session and file listing. Each
+    * call re-fingerprints the path (sorted relative file, length and mtime,
+    * plus the schema-inference settings such as `nanosAsLong`; no data is
+    * read) and gets a fresh relation, so a table rewritten under the same
+    * path returns its new rows.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRelations.read(spark, s"$dir/$name.parquet")
 
   /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) in some driver
     * substrates (Spark's reader rejects that type outright unless read as a

@@ -256,6 +256,17 @@ object Dedup {
     * ([[nearDuplicatePairs]]) and cross-side ([[incrementalNearDedup]])
     * candidate generators — tuning the banding scheme in one place cannot
     * desynchronize their candidate recall.
+    *
+    * The rows come from exploding the literal band ids and reading each
+    * band's key with `element_at`, not from `posexplode(bkts)`: for a
+    * generator over a column Catalyst infers `size(bkts) > 0` and pushes it
+    * below these projections with the aliases substituted, and that Filter
+    * (no common-subexpression elimination) recomputed the shingle hashes
+    * and MinHash signature once per band, 21 times per document. Over a
+    * literal array it infers nothing. Every index is in range, so a key is
+    * never null; `coalesce` says so to Catalyst when ANSI mode is off (where
+    * `element_at` is nullable), so the bucket joins infer no `IsNotNull`
+    * filter either.
     */
   private def bandBuckets(withSh: DataFrame, k: Int, bandSize: Int): DataFrame = {
     require(k % bandSize == 0, s"k=$k must be a multiple of bandSize=$bandSize")
@@ -266,8 +277,8 @@ object Dedup {
         array((0 until nBands).map { b =>
           xxhash64(lit(b), slice(col("sig"), b * bandSize + 1, bandSize))
         }: _*).as("bkts"))
-      .select(col("id"), col("bkts"),
-        posexplode(col("bkts")).as(Seq("band", "bkt")))
+      .select(col("id"), col("bkts"), explode(array((0 until nBands).map(lit): _*)).as("band"))
+      .withColumn("bkt", coalesce(element_at(col("bkts"), col("band") + 1), lit(0L)))
   }
 
   /** The join-side candidate dedup (r16, guide §2.3/§2.4): a pair agreeing

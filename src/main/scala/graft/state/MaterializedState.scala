@@ -58,9 +58,18 @@ object MaterializedState {
 
   /** The serving table. Filters over `symbol` push into the scan and prune
     * files/row-groups via the sorted layout's min/max statistics.
+    *
+    * The relation comes from [[ParquetRelations.read]]: the snapshot is
+    * listed and its schema inferred once per session, and each later call
+    * only re-fingerprints the directory — the sorted (relative file, length,
+    * mtime) of its files plus the schema-inference settings, no data read —
+    * and gets a copy of the memoized relation with fresh attribute ids. A
+    * key lookup therefore runs one Spark job (its own scan), not two, and a
+    * snapshot rewritten under the same directory is re-resolved, never
+    * served stale.
     */
   def read(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
+    ParquetRelations.read(spark, ensure(spark, sfDir))
 
   // private[graft] so the fresh-JVM rerun spec can clear the memo and
   // re-enter the build path against a pre-existing on-disk layout

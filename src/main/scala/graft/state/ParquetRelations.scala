@@ -1,0 +1,139 @@
+package graft.state
+
+import java.nio.file.{FileVisitResult, Files, Paths, SimpleFileVisitor, Path => NioPath}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.WeakHashMap
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graft.RelationBridge
+
+/** Parquet relations resolved once per (session, path, file listing).
+  *
+  * `spark.read.parquet` lists the path through Hadoop (on `file:` that
+  * loads every file's permissions), infers the schema with a one-task Spark
+  * job, and analyzes a new relation — 100–200 ms per call, about half of a
+  * key lookup. [[read]] pays that once: a per-session memo keeps, for each
+  * path, one entry of (fingerprint, analyzed relation). Every call hands out
+  * a copy of that relation with fresh attribute ids, exactly what a new
+  * `spark.read.parquet` would give (so a query that joins a table with
+  * itself stays unambiguous), with no listing, no job and no re-analysis —
+  * the reuse Spark's own session catalog applies to a catalog table's
+  * relation.
+  *
+  * The fingerprint is the sorted (relative file, length, mtime) of every
+  * file under the path, listed with `java.nio` on `file:` paths and with
+  * Hadoop `listStatus` elsewhere (neither reads data or permissions), plus
+  * the session settings that change the inferred schema. A mismatch
+  * re-resolves and replaces the entry, so a table rewritten under the same
+  * path is never served stale. A path that cannot be listed that way (a
+  * glob, a missing path) is resolved on every call, which also raises
+  * Spark's own error for a missing one.
+  *
+  * Sessions are weakly keyed. An entry's relation is bound to its session,
+  * which keeps the key reachable, so a session's entries are also dropped
+  * when its SparkContext stops: a stopped session stays collectable.
+  */
+object ParquetRelations {
+
+  /** Session settings that change the schema Spark infers from a footer. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private final case class Fingerprint(files: Seq[(String, Long, Long)], settings: Seq[Option[String]])
+
+  /** One path's memo entry; concurrent first readers share one resolution. */
+  private final class Entry(val fingerprint: Option[Fingerprint]) {
+    private var relation: LogicalRelation = _
+    def get(spark: SparkSession, path: String): LogicalRelation = synchronized {
+      if (relation == null) relation = resolve(spark, path)
+      relation
+    }
+  }
+
+  private val sessions = new WeakHashMap[SparkSession, ConcurrentHashMap[String, Entry]]()
+
+  private def memoOf(spark: SparkSession): ConcurrentHashMap[String, Entry] =
+    sessions.synchronized {
+      val known = sessions.get(spark)
+      if (known != null) known
+      else {
+        val sc = spark.sparkContext
+        sc.addSparkListener(new SparkListener {
+          override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+            sessions.synchronized(sessions.keySet.removeIf(_.sparkContext eq sc))
+        })
+        val fresh = new ConcurrentHashMap[String, Entry]()
+        sessions.put(spark, fresh)
+        fresh
+      }
+    }
+
+  /** The parquet table at `path`, resolved at most once per file listing. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val fp = fingerprint(spark, path)
+    val entry = memoOf(spark).compute(path, (_, old) =>
+      if (old != null && fp.isDefined && old.fingerprint == fp) old else new Entry(fp))
+    RelationBridge.freshCopy(spark, entry.get(spark, path))
+  }
+
+  private def resolve(spark: SparkSession, path: String): LogicalRelation =
+    spark.read.parquet(path).queryExecution.analyzed match {
+      case relation: LogicalRelation => relation
+      case other =>
+        throw new IllegalStateException(s"parquet read of $path is not a file relation:\n$other")
+    }
+
+  private def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] = {
+    val p = new Path(path)
+    val scheme = p.toUri.getScheme
+    val files =
+      if (scheme == null || scheme == "file") localFiles(Paths.get(p.toUri.getPath))
+      else hadoopFiles(spark, p)
+    files.map(fs => Fingerprint(fs.sorted, inferenceConfs.map(spark.conf.getOption)))
+  }
+
+  /** (relative file, length, mtime in ns) under a local path, from one
+    * directory walk that reads attributes only.
+    */
+  private[graft] def localFiles(root: NioPath): Option[Seq[(String, Long, Long)]] =
+    if (!Files.exists(root)) None
+    else {
+      val out = ArrayBuffer[(String, Long, Long)]()
+      Files.walkFileTree(root, new SimpleFileVisitor[NioPath] {
+        override def visitFile(f: NioPath, a: BasicFileAttributes): FileVisitResult = {
+          if (a.isRegularFile)
+            out += ((root.relativize(f).toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS)))
+          FileVisitResult.CONTINUE
+        }
+      })
+      Some(out.toSeq)
+    }
+
+  /** The same through Hadoop `listStatus`, for other file systems; it uses
+    * only path, length and mtime, never permissions.
+    */
+  private[graft] def hadoopFiles(spark: SparkSession, root: Path): Option[Seq[(String, Long, Long)]] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) None
+    else {
+      val top = fs.getFileStatus(root)
+      val base = top.getPath.toUri.getPath.stripSuffix("/")
+      def walk(st: FileStatus): Iterator[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk) else Iterator(st)
+      Some(walk(top).map { st =>
+        (st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"), st.getLen, st.getModificationTime)
+      }.toSeq)
+    }
+  }
+}

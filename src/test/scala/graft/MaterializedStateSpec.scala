@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 
@@ -32,7 +38,7 @@ class MaterializedStateSpec extends AnyFunSuite {
     assert(MaterializedState.read(spark, sfDir).count() == raw.count())
   }
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec =
+  private def scanOf(df: DataFrame): FileSourceScanExec =
     df.queryExecution.executedPlan.collectLeaves().collectFirst {
       case s: FileSourceScanExec => s
     }.getOrElse(fail("no file scan in plan"))
@@ -105,6 +111,66 @@ class MaterializedStateSpec extends AnyFunSuite {
     val againRows = MaterializedState.bucketedJoin(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(againRows == firstRows)
+  }
+
+  /** Tags of the Spark jobs `body` starts, read from a local property the
+    * calling threads set. The listener bus delivers events in order, so once
+    * a tagged barrier job has arrived every job started before it has too.
+    */
+  private def jobsStartedBy(body: => Unit): Seq[String] = {
+    val tags = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.probe"))).foreach(tags.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.probe", "barrier")
+      spark.range(1).count()
+      sc.setLocalProperty("graft.probe", null)
+      val end = System.nanoTime() + 30000000000L
+      while (!tags.contains("barrier") && System.nanoTime() < end) Thread.sleep(10)
+      assert(tags.contains("barrier"), "listener never saw the barrier job")
+      tags.asScala.toSeq.filterNot(_ == "barrier")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tagged[T](tag: String)(body: => T): T = {
+    spark.sparkContext.setLocalProperty("graft.probe", tag)
+    try body finally spark.sparkContext.setLocalProperty("graft.probe", null)
+  }
+
+  test("a second read of the same snapshot launches no Spark job and still prunes by key") {
+    val path = MaterializedState.ensure(spark, sfDir)
+    MaterializedState.read(spark, sfDir)
+    // the listener does see a read's schema-inference job
+    assert(jobsStartedBy(tagged("plain")(spark.read.parquet(path))).nonEmpty)
+    var again: DataFrame = null
+    assert(jobsStartedBy { again = tagged("memo")(MaterializedState.read(spark, sfDir)) }.isEmpty)
+    val pushed = scanOf(InteractiveQueries.keyQuery(again, "U000007")).metadata("PushedFilters")
+    assert(pushed.contains("EqualTo(symbol,U000007)"), s"PushedFilters=$pushed")
+    assert(InteractiveQueries.keyQuery(again, "U000007").collect().toSet ==
+      raw.filter(col("symbol") === "U000007").collect().toSet)
+  }
+
+  test("four threads making a session's first read at once share one resolution") {
+    MaterializedState.ensure(spark, sfDir)
+    val fresh: SparkSession = spark.newSession()
+    val go = new CountDownLatch(1)
+    val frames = new ConcurrentLinkedQueue[DataFrame]()
+    val jobs = jobsStartedBy {
+      val threads = (0 until 4).map(i => new Thread(() => {
+        go.await()
+        tagged(s"reader$i")(frames.add(MaterializedState.read(fresh, sfDir)))
+      }))
+      threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+    }
+    assert(frames.size == 4)
+    assert(jobs.size == 1, s"expected one schema-inference job, got $jobs")
+    val expected: Set[Row] = raw.collect().toSet
+    frames.asScala.foreach(df => assert(df.collect().toSet == expected))
   }
 
   test("filtered range collapses key bounds and compiled predicate into one scan") {

@@ -153,8 +153,17 @@ class NativeKernelsSpec extends AnyFunSuite {
     assert(rows(5) == Seq("é 日本", "日本 😀"))
   }
 
+  /** The corpus as one partition per core: the interpreted combinator
+    * twins are the slowest specs in the suite, and the single-file
+    * documents table would run each as one task. The split goes through
+    * the RDD because Catalyst pushes the comparison filter, kernels and
+    * all, below a `repartition` into the scan's single task.
+    */
+  private def spread(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd.repartition(spark.sparkContext.defaultParallelism), df.schema)
+
   test("winnowingFingerprints == sliding array_min form, incl. short texts") {
-    for (df <- Seq(docs.select("text"), fixturesDF.select("text"))) {
+    for (df <- Seq(spread(docs.select("text")), fixturesDF.select("text"))) {
       val both = df.select(
         TextAnalysis.fingerprintSet(col("text"), 8, 4).as("slow"),
         NativeExpressions.winnowingFingerprints(col("text"), 8, 4).as("fast"))
@@ -240,7 +249,7 @@ class NativeKernelsSpec extends AnyFunSuite {
   }
 
   test("winnowMd5Hex == two-projection md5 window-min combinator twin") {
-    for (df <- Seq(docs.select("doc_id", "text"), fixturesDF);
+    for (df <- Seq(spread(docs.select("doc_id", "text")), fixturesDF);
          (k, w) <- Seq((8, 4), (3, 2))) {
       val slow = TextAnalysis.portableFingerprintSet(df, k, w)
         .withColumnRenamed("fps", "slow")
