@@ -9,11 +9,14 @@ import org.apache.spark.sql.functions._
 /** The reference's interactive-query surface (SURVEY §2.4) as pure
   * `DataFrame => DataFrame` functions over the materialized aggregate.
   *
-  * Each query is a logical plan: Catalyst's predicate pushdown + partition
-  * pruning subsume the reference's murmur2 key→partition routing
+  * Each query is a logical plan: predicate pushdown plus file skipping
+  * subsume the reference's murmur2 key→partition routing
   * (`controller/StockController.java:364-375`) and its scatter-gather across
-  * hosts (`:102-139`) — a filter over a partitioned table touches exactly the
-  * partitions that can match, and the union of scan tasks IS the gather.
+  * hosts (`:102-139`). Over the snapshot `MaterializedState.read` serves, a
+  * key, multi-key or range filter opens only the files whose footer key
+  * interval can match (`graft.state.SkippingFileIndex`), and the union of
+  * scan tasks IS the gather. Other predicates read every file and skip row
+  * groups inside them.
   */
 object InteractiveQueries {
 

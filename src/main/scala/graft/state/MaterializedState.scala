@@ -21,10 +21,12 @@ import graft.util.Fs
   * Layout chosen for the serving patterns (key point lookup, key-range scan,
   * multi-key): range-partitioned by `symbol` and sorted within partitions, so
   * every parquet file covers a disjoint key interval and carries tight
-  * min/max symbol statistics. Catalyst then prunes:
-  *   - KeyQuery / MultiKeyQuery → `PushedFilters: [EqualTo/In(symbol,...)]`
-  *     + row-group skip via column min/max;
-  *   - RangeQuery → only the files whose [min,max] intersects the bounds.
+  * min/max symbol statistics. A query then skips data twice:
+  *   - files: [[read]]'s relation lists through [[SkippingFileIndex]], which
+  *     keeps only the files whose footer [min, max] can match a KeyQuery,
+  *     MultiKeyQuery or RangeQuery bound (one file of eight for a key);
+  *   - row groups: `PushedFilters: [EqualTo/In/GreaterThanOrEqual/...(symbol,...)]`
+  *     skip row groups inside the files read, via column min/max.
   * At cluster scale the same layout is a bucketed/sorted table (or liquid
   * clustering); the number of range partitions is sized to target file size,
   * not hardcoded — here 8 keeps files non-trivial at the test SFs.
@@ -56,8 +58,8 @@ object MaterializedState {
       dir.toString
     })
 
-  /** The serving table. Filters over `symbol` push into the scan and prune
-    * files/row-groups via the sorted layout's min/max statistics.
+  /** The serving table. Filters over `symbol` drop the files whose key
+    * interval cannot match and push into the scan to skip row groups.
     *
     * The relation comes from [[ParquetRelations.read]]: the snapshot is
     * listed and its schema inferred once per session, and each later call

@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.RelationBridge
 
 /** Parquet relations resolved once per (session, path, file listing).
@@ -35,9 +35,21 @@ import org.apache.spark.sql.graft.RelationBridge
   * glob, a missing path) is resolved on every call, which also raises
   * Spark's own error for a missing one.
   *
+  * Each entry's relation lists its files through a [[SkippingFileIndex]]
+  * around the `InMemoryFileIndex` Spark built, so a query drops the files
+  * whose footer min/max cannot match its key or range filters. The index
+  * holds the entry's manifest: per file and top-level column, the [min, max]
+  * of its values, read from the footers on the first query with such a
+  * filter and kept for the entry's life. The manifest therefore belongs to
+  * the same fingerprint: a rewritten table gets a new entry and is pruned
+  * against fresh intervals, never stale ones.
+  *
   * Sessions are weakly keyed. An entry's relation is bound to its session,
   * which keeps the key reachable, so a session's entries are also dropped
-  * when its SparkContext stops: a stopped session stays collectable.
+  * when its SparkContext stops: a stopped session stays collectable. A
+  * session discarded while its SparkContext runs (a dropped `newSession()`)
+  * is not: its entries, their manifests included, stay reachable until the
+  * context stops.
   */
 object ParquetRelations {
 
@@ -89,7 +101,9 @@ object ParquetRelations {
 
   private def resolve(spark: SparkSession, path: String): LogicalRelation =
     spark.read.parquet(path).queryExecution.analyzed match {
-      case relation: LogicalRelation => relation
+      case relation @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        val index = new SkippingFileIndex(fs.location, () => fs.getHadoopConf(fs.sparkSession, fs.options))
+        relation.copy(relation = fs.copy(location = index)(fs.sparkSession))
       case other =>
         throw new IllegalStateException(s"parquet read of $path is not a file relation:\n$other")
     }

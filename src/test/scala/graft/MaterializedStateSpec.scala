@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
 import scala.jdk.CollectionConverters._
@@ -8,16 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.operators.{InteractiveQueries, StockAggregation}
-import graft.state.MaterializedState
+import graft.state.{MaterializedState, ParquetRelations}
+import graft.util.Fs
 
 /** Serving-path checks: the IQ functions read the materialized snapshot, the
   * snapshot equals the raw-recompute aggregate, and key predicates actually
   * reach the parquet scan (pushdown + file pruning via the sorted layout).
   */
-class MaterializedStateSpec extends AnyFunSuite {
+class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -179,5 +183,132 @@ class MaterializedStateSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     // exactly one scan, no shuffle: predicate evaluated inside the scan stage
     assert(!plan.contains("Exchange"), s"unexpected shuffle in serving plan:\n$plan")
+  }
+
+  /** The rows of `df` and the number of files its scans read, from the
+    * executed scans' `numFiles` metric.
+    */
+  private def rowsAndFiles(df: DataFrame): (Set[Row], Long) = {
+    val rows = df.collect().toSet
+    val scans = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty, "no file scan in plan")
+    (rows, scans.map(_.metrics("numFiles").value).sum)
+  }
+
+  /** Each snapshot file's (lo, hi) symbol, in key order, from a plain read. */
+  private lazy val fileIntervals: Seq[(String, String)] =
+    spark.read.parquet(MaterializedState.ensure(spark, sfDir))
+      .groupBy(input_file_name()).agg(min("symbol"), max("symbol"))
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq.sortBy(_._1)
+
+  private def rawWhere(cond: org.apache.spark.sql.Column): Set[Row] =
+    raw.filter(cond).collect().toSet
+
+  test("a key outside every interval reads no file and returns no rows") {
+    val key = "A000000"
+    assert(key < fileIntervals.head._1)
+    val (rows, files) = rowsAndFiles(InteractiveQueries.keyQuery(state, key))
+    assert(rows.isEmpty && rawWhere(col("symbol") === key).isEmpty)
+    assert(files == 0, s"read $files files")
+  }
+
+  test("a key query reads the one file whose interval holds the key") {
+    val key = fileIntervals(fileIntervals.length / 2)._1
+    val (rows, files) = rowsAndFiles(InteractiveQueries.keyQuery(state, key))
+    assert(rows.size == 1 && rows == rawWhere(col("symbol") === key))
+    assert(files == 1, s"read $files files")
+  }
+
+  test("a range that straddles two file intervals reads two files") {
+    val i = fileIntervals.length / 2
+    val (lower, upper) = (fileIntervals(i - 1)._2, fileIntervals(i)._1)
+    val (rows, files) = rowsAndFiles(InteractiveQueries.rangeQuery(state, Some(lower), Some(upper)))
+    assert(rows.size == 2 && rows == rawWhere(col("symbol").between(lower, upper)))
+    assert(files == 2, s"read $files files")
+  }
+
+  test("a 12-symbol multi-key query (an InSet) reads only the files that hold its keys") {
+    val (first, last) = (fileIntervals.head, fileIntervals.last)
+    // two keys held by the snapshot, ten below every interval
+    val keys = Seq(first._1, last._2) ++ (1 to 10).map(n => f"A$n%06d")
+    val df = InteractiveQueries.multiKeyQuery(state, keys)
+    assert(df.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[InSet])),
+      s"expected an InSet:\n${df.queryExecution.optimizedPlan}")
+    val (rows, files) = rowsAndFiles(df)
+    assert(rows.size == 2 && rows == rawWhere(col("symbol").isin(keys: _*)))
+    assert(files == 2, s"read $files files")
+  }
+
+  test("a key predicate ORed with a non-key predicate keeps every file") {
+    val key = fileIntervals.head._1
+    val cond = col("symbol") === key || col("buys") > 1000000.0
+    val (rows, files) = rowsAndFiles(state.filter(cond))
+    assert(rows == rawWhere(cond))
+    assert(files == fileIntervals.length, s"read $files of ${fileIntervals.length} files")
+  }
+
+  test("a UTF8_LCASE comparison on symbol answers as an unpruned read does") {
+    val key = fileIntervals(fileIntervals.length / 2)._1
+    val cond = collate(col("symbol"), "UTF8_LCASE") === key.toLowerCase
+    val unpruned = spark.read.parquet(MaterializedState.ensure(spark, sfDir)).filter(cond)
+      .collect().toSet
+    val (rows, _) = rowsAndFiles(state.filter(cond))
+    assert(rows.size == 1 && rows == unpruned)
+    assert(rows == rawWhere(col("symbol") === key))
+  }
+
+  private def withTempDir(body: String => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft-skipping-")
+    try body(dir.toString) finally Fs.deleteRecursively(dir)
+  }
+
+  test("a snapshot rewritten under the same directory is pruned against its new intervals") {
+    withTempDir { dir =>
+      val path = s"$dir/snap"
+      val key = fileIntervals.last._1
+      def write(df: DataFrame): Unit =
+        df.repartitionByRange(4, col("symbol")).sortWithinPartitions("symbol")
+          .write.mode("overwrite").parquet(path)
+      write(raw.filter(col("symbol") < key))
+      def keyOn() = rowsAndFiles(ParquetRelations.read(spark, path).filter(col("symbol") === key))
+      val (before, beforeFiles) = keyOn()
+      assert(before.isEmpty && beforeFiles == 0, s"read $beforeFiles files")
+      write(raw)
+      val (after, afterFiles) = keyOn()
+      assert(after.size == 1 && after == rawWhere(col("symbol") === key))
+      assert(afterFiles == 1, s"read $afterFiles files")
+    }
+  }
+
+  test("a mergeSchema change on the same files keeps the index answering") {
+    withTempDir { dir =>
+      val s = spark.newSession()
+      val path = s"$dir/snap"
+      val (lowKey, highKey) = (fileIntervals.head._1, fileIntervals.last._1)
+      raw.filter(col("symbol") < highKey).write.parquet(path)
+      raw.filter(col("symbol") >= highKey).withColumn("extra", lit(1L))
+        .write.mode("append").parquet(path)
+      val files = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
+      // the raw aggregate's columns of each row, whichever footer set the schema
+      def keyOn(key: String): (Set[Row], Long) = {
+        val (rows, n) = rowsAndFiles(ParquetRelations.read(s, path).filter(col("symbol") === key))
+        (rows.map(r => Row.fromSeq(r.toSeq.take(raw.columns.length))), n)
+      }
+      val (narrow, narrowFiles) = keyOn(highKey)
+      assert(narrow == rawWhere(col("symbol") === highKey))
+      assert(narrowFiles < files, s"read $narrowFiles of $files files")
+      s.conf.set("spark.sql.parquet.mergeSchema", "true")
+      val merged = ParquetRelations.read(s, path)
+      assert(merged.columns.contains("extra"))
+      val (high, highFiles) = keyOn(highKey)
+      assert(high == rawWhere(col("symbol") === highKey))
+      assert(highFiles < files, s"read $highFiles of $files files")
+      assert(keyOn(lowKey)._1 == rawWhere(col("symbol") === lowKey))
+      // files without `extra` have no statistics for it, so they are kept
+      val (withExtra, extraFiles) = rowsAndFiles(merged.filter(col("extra") === 1L))
+      assert(withExtra.map(_.getString(0)) == raw.filter(col("symbol") >= highKey)
+        .collect().map(_.getString(0)).toSet)
+      assert(extraFiles == files, s"read $extraFiles of $files files")
+    }
   }
 }
