@@ -9,6 +9,9 @@
 # hits both; min over passes is the estimator. Appends one solo-record JSON
 # line per query per pass (StreamingBench jvm_seq:0 shape) to the out file.
 #
+# Cores come from `nproc` and the heap from run_main.sh's SPARK_DRIVER_MEM
+# default, so the protocol fits whatever box runs it.
+#
 # Usage: run_streaming_solo.sh <sf-dir> <out.jsonl> [passes=2] [q_a q_b ...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -29,9 +32,9 @@ PARTS=64
 [[ "$SF" == *sf0.1* ]] && PARTS=32
 for pass in $(seq 1 "$PASSES"); do
   for q in "${QS[@]}"; do
-    SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$(nproc)" \
       SPARK_GRAFT_SHUFFLE_PARTITIONS=$PARTS SPARK_GRAFT_ONLY="$q" \
-      scripts/run_main.sh -m48g graft.StreamingBench \
+      scripts/run_main.sh graft.StreamingBench \
       2>/dev/null | grep '^{' >> "$OUT"
   done
 done

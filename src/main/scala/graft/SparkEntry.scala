@@ -426,7 +426,7 @@ object SparkEntry {
     // containment over canonical rows only — duplicate groups collapse to
     // one representative before any pair is listed, so true-pair output is
     // bounded by the SURVIVOR corpus, not by duplicate-group-size². This
-    // registers the exact pipeline ContainmentWallBench measured on the
+    // registers the exact pipeline measured (BENCH_r15_containment_guarded.jsonl) on the
     // substrate where the unguarded plan hit the sf10-replica disk wall
     // (4.6 s vs 69 GB spill). Deploy-scale callers wanting containment on
     // an uncurated corpus should reach for THIS name.

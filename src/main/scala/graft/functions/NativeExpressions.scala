@@ -190,7 +190,7 @@ object NativeExpressions {
     *
     * `forceFlat = true` disables the two-level branch at any k — the exact
     * flat scan used ONLY as the A/B baseline by the routing differentials
-    * (`NativeKernelsSpec`, `graft.RouteBench`); no registered plan sets it.
+    * (`NativeKernelsSpec`, `BENCH_r12_route_k.jsonl`); no registered plan sets it.
     *
     * REGIME BOUNDARY (r12 study, `BENCH_r12_route_k.jsonl`): two-level
     * routing is measured EXACT at serving occupancy — N/k ≳ 100 rows per

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * over ≤ vocabCap short strings with INCREMENTAL pair-count maintenance
   * (inverted pair→type index + lazy-invalidation heap), so each merge costs
   * only the types containing the winning pair — measured: 32,768 merges
-  * over a 100k-type vocabulary in 74 s (`graft.BpeProbe wide 32768`; the
+  * over a 100k-type vocabulary in 74 s (`BENCH_r12_bpe_probe.txt`; the
   * original rescan-everything loop, kept as the spec baseline, is
   * O(numMerges · Σ|type|) ≈ hours at that depth) — and the cost is
   * independent of corpus row count, exactly like the language-ID profiles

@@ -409,7 +409,7 @@ object Dedup {
     * registered pipelines do) so containment sees bounded duplicate
     * groups; on salted (bounded-group) substrates the identical plan reads
     * 1.9–2.8×/decade, and the dedup-first order is itself MEASURED on the
-    * wall's own substrate (graft.ContainmentWallBench, r14): containment
+    * wall's own substrate (r14, `BENCH_r14_containment_guarded.jsonl`): containment
     * over the 4,756 near-dup survivors of the same 500k-doc corpus costs
     * 4.6 s with zero disk pressure. Since r15 that guarded composition is
     * a REGISTERED, oracle-backed query — `q_dedup_containment_guarded`

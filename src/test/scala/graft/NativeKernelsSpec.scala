@@ -557,8 +557,8 @@ class NativeKernelsSpec extends AnyFunSuite {
     // k ≈ 2000); this pins the routing at k=1024 (32 coarse cells) over the
     // 5000-vector sf0.1 corpus against the SAME kernel with forceFlat=true
     // — one boolean away from the production path, exact at any k.
-    // RouteBench records the same differential (plus the alternating cost
-    // samples) on the scaled sf1/sf10 corpora → BENCH_r12_route_k.jsonl.
+    // BENCH_r12_route_k.jsonl records the same differential (plus the
+    // alternating cost samples) on the scaled sf1/sf10 corpora.
     val emb01 = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .select("vec_id", "embedding")
     val cents = Similarity.trainKmeans(emb01, k = 1024, iters = 2)

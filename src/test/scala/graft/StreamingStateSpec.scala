@@ -114,6 +114,40 @@ class StreamingStateSpec extends AnyFunSuite {
       "at least one occurrence must be dropped as an in-delay duplicate")
   }
 
+  test("a twin replays once per run directory: a repeat call starts no query, a new parameter gets its own run") {
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      // delivered synchronously, from the thread that starts the query
+      override def onQueryStarted(event: QueryStartedEvent): Unit = starts.incrementAndGet()
+      override def onQueryProgress(event: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val first = StreamingState.streamingDedupBounded(spark, sfDir, "12 hours")
+      val afterFirst = starts.get()
+      val again = StreamingState.streamingDedupBounded(spark, sfDir, "12 hours")
+      assert(starts.get() == afterFirst, "a repeat call with the same arguments started a query")
+      val other = StreamingState.streamingDedupBounded(spark, sfDir, "1 hour")
+      val afterOther = starts.get()
+      assert(afterOther == afterFirst + 1, "a new run must start exactly one query")
+      StreamingState.streamingDedupBounded(spark, sfDir, "1 hour")
+      assert(starts.get() == afterOther, "a repeat call with the same arguments started a query")
+
+      def runDirs(df: org.apache.spark.sql.DataFrame) =
+        df.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getParentFile.getParent).toSet
+      assert(runDirs(first) == runDirs(again) && runDirs(first).size == 1)
+      assert(runDirs(other).size == 1 && runDirs(other) != runDirs(first),
+        "two delays must own two run directories")
+      def emissions(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getInt(1))).toSet
+      assert(emissions(first) == emissions(again))
+      assert(emissions(other) != emissions(first),
+        "a different delay must give a different emission set")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("watermarked windowed streaming agg over time-ordered replay equals batch windowed agg") {
     val streamed = StreamingState.windowedSnapshot(spark, sfDir)
     val batch = StockAggregation
@@ -128,13 +162,9 @@ class StreamingStateSpec extends AnyFunSuite {
     // Reuse the round-robin (event_id % N) staging: every chunk spans the full
     // time range, so from micro-batch 2 on, almost every row is older than
     // (max ts seen - 0s) and must be dropped by the watermark.
-    val root = java.nio.file.Paths.get("target", "streamstate", "spec_ooo").toAbsolutePath
-    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-    val staging = root.resolve("staging")
-    java.nio.file.Files.createDirectories(staging)
-    StreamingState.stageChunks(
-      Tables.transactionsChunkedTs(spark, sfDir, StreamingState.NumChunks), root, staging)
-    val out = StreamingState.runWindowed(spark, root, staging, "1 hour", "0 seconds")
+    val out = StreamingState.windowedRun(sfDir, "spec_ooo",
+      Tables.transactionsChunkedTs(spark, sfDir, StreamingState.NumChunks),
+      "1 hour", "0 seconds")
     val finalShares = spark.read.parquet(out)
       .groupBy("window_start_s", "symbol")
       .agg(max_by(col("number_shares"), col("batch_id")).as("number_shares"))
