@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. One untimed warm-up pass over every query (absorbs JVM /
   * codegen / parquet-footer warm-up), then FIVE timed passes per query with
@@ -35,30 +34,7 @@ object Bench {
     // pass a size-proportional value here and decade ratios measure the PLAN
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bounded-buffer aggregates (top-k, postings) group by thousands of
-      // keys; the 128-group default would demote them to sort-based
-      // aggregation (a full sort of the candidate stream). Buffers are
-      // size-capped, so a large hash map of them is tiny.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-      // cap status-store retention: with the UI off, the app/SQL status
-      // listeners still retain per-execution plan+metric snapshots (default
-      // 1000 executions / 100k tasks). A 179-query × 6-pass run accumulates
-      // gigabytes of that, and late queries drown in full GCs — measured as
-      // a map-only serde query "costing" 48 s at sf1 while its solo bench
-      // is 0.95 s. Retention is observability, not execution; cap it hard.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.retainedDeadExecutors", "5")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus, shufflePartitions).getOrCreate()
 
     val errors = scala.collection.mutable.Map.empty[String, String]
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-capture main (r15 optimization evidence): dumps
   * `.explain("formatted")` for the named registered queries to
@@ -29,15 +28,7 @@ object Plans {
       }
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus, cpus).getOrCreate()
     val names =
       if (qlist == "all") SparkEntry.queries.keys.toSeq.sorted
       else qlist.split(",").toSeq

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-pass profiling main — the scale-investigation tool Bench is not:
   * runs ONE registered query ONCE, prints wall time plus every non-zero
@@ -14,19 +13,12 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
+    val b = GraftSession.builder(cpus, cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
-      b = b.config(k, v)
+      b.config(k, v)
     })
     val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // CONSTRUCTION is timed separately (r16): queries that build session
     // artifacts (label propagation, eager checkpoints) run jobs inside the
     // registration lambda, and a probe that starts its clock after

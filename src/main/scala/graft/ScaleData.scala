@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-testing stager: derives an N×-scale copy of the driver's test
@@ -83,14 +83,7 @@ object ScaleData {
     val factor = factorStr.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus, cpus).getOrCreate()
 
     def replicate(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(i => shift(df, i)).reduce(_ unionByName _)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold end-to-end benchmark for the STREAMING twins. `graft.Bench` medians
   * re-reads of the cached snapshot (the streaming runs are one-time
   * computeIfAbsent artifacts), so its numbers measure the serving read, not
@@ -49,19 +47,7 @@ object StreamingBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus, shufflePartitions).getOrCreate()
 
     val names = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSeq).getOrElse(DefaultQueries)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bounded-buffer aggregates (top-k, postings) group by thousands of
-      // keys; the 128-group default would demote them to sort-based
-      // aggregation (a full sort of the candidate stream). Buffers are
-      // size-capped, so a large hash map of them is tiny.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-      // cap status-store retention (see Bench: unbounded per-execution
-      // snapshots GC-thrash a long many-query JVM)
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(cpus, cpus).getOrCreate()
     // abort the gate loudly if a data-dependent engine knob has diverged
     // from the constant its oracle SQL hardcodes (semdedup-family k)
     SparkEntry.assertOracleCoupling(spark, sfDir)

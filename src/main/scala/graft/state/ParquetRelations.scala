@@ -62,20 +62,33 @@ object ParquetRelations {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.caseSensitive")
 
-  private final case class Fingerprint(files: Seq[(String, Long, Long)], settings: Seq[Option[String]])
+  private[graft] final case class Fingerprint(files: Seq[(String, Long, Long)], settings: Seq[Option[String]])
 
-  /** One path's memo entry; concurrent first readers share one resolution. */
-  private final class Entry(val fingerprint: Option[Fingerprint]) {
-    private var relation: LogicalRelation = _
-    def get(spark: SparkSession, path: String): LogicalRelation = synchronized {
-      if (relation == null) relation = resolve(spark, path)
-      relation
+  /** One memo entry, valid for one fingerprint. The value is computed under
+    * the entry's own lock, never inside the map's: concurrent first readers
+    * share one computation, and a computation may consult another entry of
+    * the same map (the artifact memo's radii need its centroids).
+    */
+  private[state] final class Entry[V](val fingerprint: Option[Fingerprint]) {
+    private var value: Option[V] = None
+    def get(compute: => V): V = synchronized {
+      if (value.isEmpty) value = Some(compute)
+      value.get
     }
   }
 
-  private val sessions = new WeakHashMap[SparkSession, ConcurrentHashMap[String, Entry]]()
+  /** The entry of `key` valid for `fp`: the current one if its fingerprint
+    * matches, else a fresh one that replaces it. No fingerprint never matches.
+    */
+  private[state] def entryFor[K, V](memo: ConcurrentHashMap[K, Entry[V]], key: K,
+      fp: Option[Fingerprint]): Entry[V] =
+    memo.compute(key, (_, old) =>
+      if (old != null && fp.isDefined && old.fingerprint == fp) old else new Entry[V](fp))
 
-  private def memoOf(spark: SparkSession): ConcurrentHashMap[String, Entry] =
+  private val sessions =
+    new WeakHashMap[SparkSession, ConcurrentHashMap[String, Entry[LogicalRelation]]]()
+
+  private def memoOf(spark: SparkSession): ConcurrentHashMap[String, Entry[LogicalRelation]] =
     sessions.synchronized {
       val known = sessions.get(spark)
       if (known != null) known
@@ -85,7 +98,7 @@ object ParquetRelations {
           override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
             sessions.synchronized(sessions.keySet.removeIf(_.sparkContext eq sc))
         })
-        val fresh = new ConcurrentHashMap[String, Entry]()
+        val fresh = new ConcurrentHashMap[String, Entry[LogicalRelation]]()
         sessions.put(spark, fresh)
         fresh
       }
@@ -93,10 +106,8 @@ object ParquetRelations {
 
   /** The parquet table at `path`, resolved at most once per file listing. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fp = fingerprint(spark, path)
-    val entry = memoOf(spark).compute(path, (_, old) =>
-      if (old != null && fp.isDefined && old.fingerprint == fp) old else new Entry(fp))
-    RelationBridge.freshCopy(spark, entry.get(spark, path))
+    val entry = entryFor(memoOf(spark), path, fingerprint(spark, path))
+    RelationBridge.freshCopy(spark, entry.get(resolve(spark, path)))
   }
 
   private def resolve(spark: SparkSession, path: String): LogicalRelation =
@@ -108,7 +119,11 @@ object ParquetRelations {
         throw new IllegalStateException(s"parquet read of $path is not a file relation:\n$other")
     }
 
-  private def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] = {
+  /** The listing fingerprint of `path` (see the object doc); `None` when it
+    * cannot be listed that way. [[ArtifactStore]] keys trained artifacts on
+    * it too.
+    */
+  private[graft] def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] = {
     val p = new Path(path)
     val scheme = p.toUri.getScheme
     val files =

@@ -939,10 +939,9 @@ object StreamingState {
           .as("kmv_est"))
   }
 
-  /** A day-keyed event for the streaming rate limiter. */
-  final case class DayEvent(event_id: Long, user_id: Long, day: Int, us: Long)
-
-  /** [[DayEvent]] plus the event-time column the rate-limit TTL watermarks. */
+  /** A day-keyed event for the streaming rate limiter, with the event-time
+    * column the rate-limit TTL watermarks.
+    */
   final case class DayEventT(
       event_id: Long, user_id: Long, day: Int, us: Long, et: java.sql.Timestamp)
 

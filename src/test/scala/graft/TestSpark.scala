@@ -4,21 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites (tests fork a single JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bounded-buffer aggregates (top-k, postings) group by thousands of
-      // keys; the 128-group default would demote them to sort-based
-      // aggregation (a full sort of the candidate stream). Buffers are
-      // size-capped, so a large hash map of them is tiny.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-      .appName("graft-tests")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.builder("4", "4").appName("graft-tests").getOrCreate()
 }
