@@ -1541,11 +1541,6 @@ object SparkEntry {
       |           i -> a.v[i]::DOUBLE * b.v[i]::DOUBLE)) / (a.nrm * b.nrm) AS raw
       |FROM n a JOIN n b ON a.vec_id < b.vec_id""".stripMargin
 
-  // threshold on the UNROUNDED cosine, rounded only for output — matching
-  // the engine's cosinePairs
-  private val simPairsSelect: String =
-    "SELECT vec_a, vec_b, round(raw, 6) AS score FROM s WHERE raw >= 0.45"
-
   /** Langid oracle pieces (shared by q_text_langid and q_pipeline_curation):
     * distinct character trigrams per doc of `table`, as a CTE body.
     */

@@ -9,14 +9,18 @@ import org.apache.spark.sql.functions._
 /** The reference's interactive-query surface (SURVEY §2.4) as pure
   * `DataFrame => DataFrame` functions over the materialized aggregate.
   *
-  * Each query is a logical plan: predicate pushdown plus file skipping
-  * subsume the reference's murmur2 key→partition routing
-  * (`controller/StockController.java:364-375`) and its scatter-gather across
-  * hosts (`:102-139`). Over the snapshot `MaterializedState.read` serves, a
-  * key, multi-key or range filter opens only the files whose footer key
-  * interval can match (`graft.state.SkippingFileIndex`), and the union of
-  * scan tasks IS the gather. Other predicates read every file and skip row
-  * groups inside them.
+  * Each query is a logical plan over whatever `MaterializedState.read`
+  * serves. A snapshot at or below Spark's broadcast threshold is a
+  * driver-resident `LocalRelation`: Catalyst's `ConvertToLocalRelation`
+  * evaluates these filters while optimizing, so a query opens no file and
+  * runs no Spark job. A larger snapshot is a parquet scan, where predicate
+  * pushdown plus file skipping subsume the reference's murmur2
+  * key→partition routing (`controller/StockController.java:364-375`) and
+  * its scatter-gather across hosts (`:102-139`): a key, multi-key or range
+  * filter opens only the files whose footer key interval can match
+  * (`graft.state.SkippingFileIndex`), and the union of scan tasks IS the
+  * gather. Other predicates read every file and skip row groups inside
+  * them.
   */
 object InteractiveQueries {
 

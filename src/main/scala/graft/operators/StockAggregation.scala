@@ -100,7 +100,6 @@ object StockAggregation {
     * compile-time checked inputs.
     */
   def aggregateTyped(txns: DataFrame): DataFrame = {
-    import org.apache.spark.sql.{Encoder, Encoders}
     val spark = txns.sparkSession
     import spark.implicits._
     val ds = txns.select(

@@ -1,10 +1,12 @@
 package graft.state
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RelationBridge
 
 import graft.Tables
 import graft.operators.StockAggregation
@@ -18,11 +20,23 @@ import graft.util.Fs
   * lookup (rounds 1–2 here) would re-scan the raw table at 100 TB; serving
   * from the snapshot makes a key query O(matching row-groups).
   *
+  * [[read]] serves the snapshot one of two ways, decided on every call from
+  * the session's conf by the rule Spark uses to broadcast a relation:
+  *   - at or below `spark.sql.autoBroadcastJoinThreshold` (the parquet
+  *     relation's size estimate at least 0 and at most the threshold) it is
+  *     driver-resident, a `LocalRelation` of its rows, the reference's
+  *     in-memory store (`store/CustomInMemoryBytesStoreSupplier.java`).
+  *     Catalyst's `ConvertToLocalRelation` evaluates a query's filters while
+  *     optimizing, and collecting runs no Spark job and opens no file;
+  *   - above it, the file-skipping parquet scan below, the only path that
+  *     can serve a snapshot too large for the driver.
+  *
   * Layout chosen for the serving patterns (key point lookup, key-range scan,
   * multi-key): range-partitioned by `symbol` and sorted within partitions, so
   * every parquet file covers a disjoint key interval and carries tight
-  * min/max symbol statistics. A query then skips data twice:
-  *   - files: [[read]]'s relation lists through [[SkippingFileIndex]], which
+  * min/max symbol statistics. A query on the scan path then skips data
+  * twice:
+  *   - files: the relation lists through [[SkippingFileIndex]], which
   *     keeps only the files whose footer [min, max] can match a KeyQuery,
   *     MultiKeyQuery or RangeQuery bound (one file of eight for a key);
   *   - row groups: `PushedFilters: [EqualTo/In/GreaterThanOrEqual/...(symbol,...)]`
@@ -58,20 +72,37 @@ object MaterializedState {
       dir.toString
     })
 
-  /** The serving table. Filters over `symbol` drop the files whose key
-    * interval cannot match and push into the scan to skip row groups.
+  /** The serving table: driver-resident at or below Spark's broadcast
+    * threshold, otherwise the file-skipping scan (see the object doc).
     *
-    * The relation comes from [[ParquetRelations.read]]: the snapshot is
-    * listed and its schema inferred once per session, and each later call
-    * only re-fingerprints the directory — the sorted (relative file, length,
+    * Both start from [[ParquetRelations.read]]: the snapshot is listed and
+    * its schema inferred once per session, and each later call only
+    * re-fingerprints the directory — the sorted (relative file, length,
     * mtime) of its files plus the schema-inference settings, no data read —
-    * and gets a copy of the memoized relation with fresh attribute ids. A
-    * key lookup therefore runs one Spark job (its own scan), not two, and a
-    * snapshot rewritten under the same directory is re-resolved, never
-    * served stale.
+    * and gets a copy of the memoized relation with fresh attribute ids. On
+    * the scan path, filters over `symbol` drop the files whose key interval
+    * cannot match and push into the scan to skip row groups. On the
+    * driver-resident path, the rows are collected once per (directory,
+    * fingerprint) with that relation's schema, and each call gets a copy of
+    * the `LocalRelation` with fresh attribute ids. Either way a snapshot
+    * rewritten under the same directory is re-read, never served stale.
     */
-  def read(spark: SparkSession, sfDir: String): DataFrame =
-    ParquetRelations.read(spark, ensure(spark, sfDir))
+  def read(spark: SparkSession, sfDir: String): DataFrame = serve(spark, ensure(spark, sfDir))
+
+  /** Driver-resident snapshots, one entry per directory, valid for one
+    * listing fingerprint. JVM-wide, not per session: a `LocalRelation` holds
+    * no session. Concurrent first readers share one collect job.
+    */
+  private val resident = new ConcurrentHashMap[String, ParquetRelations.Entry[LocalRelation]]()
+
+  /** [[read]] of the snapshot written at `path`. */
+  private[graft] def serve(spark: SparkSession, path: String): DataFrame = {
+    val fp = ParquetRelations.fingerprint(spark, path)
+    val scan = ParquetRelations.read(spark, path, fp)
+    if (!RelationBridge.fitsBroadcast(scan)) scan
+    else RelationBridge.freshCopy(spark,
+      ParquetRelations.entryFor(resident, path, fp).get(RelationBridge.collectLocal(scan)))
+  }
 
   // private[graft] so the fresh-JVM rerun spec can clear the memo and
   // re-enter the build path against a pre-existing on-disk layout

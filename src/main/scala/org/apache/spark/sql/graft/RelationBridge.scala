@@ -1,23 +1,44 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-/** Hands out an already-analyzed relation again. `Dataset.ofRows` and the
-  * plan's analyzed mark are `private[sql]`; a library that memoizes resolved
-  * relations (`graft.state.ParquetRelations`) needs both, so this object
-  * lives under the `org.apache.spark.sql` package, like [[ColumnBridge]].
+/** Hands out an already-analyzed relation again. `Dataset.ofRows`, the
+  * plan's analyzed mark and the session's typed conf are `private[sql]` or
+  * classic-only; a library that memoizes resolved relations
+  * (`graft.state.ParquetRelations`, `graft.state.MaterializedState`) needs
+  * them, so this object lives under the `org.apache.spark.sql` package, like
+  * [[ColumnBridge]].
   */
 object RelationBridge {
 
   /** A DataFrame over a copy of `relation` with fresh attribute ids — what
-    * a new read of the same files gives — marked analyzed, because the
-    * analyzer has nothing left to resolve in it.
+    * a new read of the same files (or a new `LocalRelation` of the same
+    * rows) gives — marked analyzed, because the analyzer has nothing left to
+    * resolve in it.
     */
-  def freshCopy(spark: SparkSession, relation: LogicalRelation): DataFrame = {
+  def freshCopy(spark: SparkSession, relation: LogicalPlan with MultiInstanceRelation): DataFrame = {
     val copy = relation.newInstance()
     copy.setAnalyzed()
     Dataset.ofRows(ClassicConversions.castToImpl(spark), copy)
   }
+
+  /** Whether `df` is small enough for Spark to broadcast it: the rule
+    * `JoinSelection` applies, its size estimate at least 0 and at most the
+    * session's `spark.sql.autoBroadcastJoinThreshold`.
+    */
+  def fitsBroadcast(df: DataFrame): Boolean = {
+    val ds = ClassicConversions.castToImpl(df)
+    val size = ds.queryExecution.analyzed.stats.sizeInBytes
+    size >= 0 && size <= ds.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+  }
+
+  /** `df`'s rows, collected by one Spark job, as a driver-resident relation
+    * over `df`'s own attributes.
+    */
+  def collectLocal(df: DataFrame): LocalRelation =
+    LocalRelation.fromExternalRows(ClassicConversions.castToImpl(df).queryExecution.analyzed.output,
+      df.collect().toSeq)
 }

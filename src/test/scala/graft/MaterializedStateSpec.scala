@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -18,8 +18,10 @@ import graft.state.{MaterializedState, ParquetRelations}
 import graft.util.Fs
 
 /** Serving-path checks: the IQ functions read the materialized snapshot, the
-  * snapshot equals the raw-recompute aggregate, and key predicates actually
-  * reach the parquet scan (pushdown + file pruning via the sorted layout).
+  * snapshot equals the raw-recompute aggregate, a snapshot within Spark's
+  * broadcast threshold answers from the driver with no Spark job, and above
+  * it key predicates actually reach the parquet scan (pushdown + file
+  * pruning via the sorted layout).
   */
 class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -27,6 +29,18 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val state = MaterializedState.read(spark, sfDir)
   private lazy val raw = StockAggregation.aggregate(Tables.transactions(spark, sfDir))
+
+  /** `body` with Spark's broadcast threshold off, so that
+    * `MaterializedState.read` serves the file-skipping scan.
+    */
+  private def scanning[T](body: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  /** The snapshot as the scan path serves it. */
+  private lazy val scanned = scanning(MaterializedState.read(spark, sfDir))
 
   test("snapshot equals the raw-recompute aggregate") {
     assert(state.count() == raw.count())
@@ -48,20 +62,20 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }.getOrElse(fail("no file scan in plan"))
 
   test("key query pushes the symbol predicate into the parquet scan") {
-    val scan = scanOf(InteractiveQueries.keyQuery(state, "U000007"))
+    val scan = scanOf(InteractiveQueries.keyQuery(scanned, "U000007"))
     val pushed = scan.metadata("PushedFilters")
     assert(pushed.contains("EqualTo(symbol,U000007)"), s"PushedFilters=$pushed")
   }
 
   test("range bounds push down, and the layout gives disjoint per-file key intervals") {
-    val bounded = InteractiveQueries.rangeQuery(state, Some("U000004"), Some("U000009"))
+    val bounded = InteractiveQueries.rangeQuery(scanned, Some("U000004"), Some("U000009"))
     val pushed = scanOf(bounded).metadata("PushedFilters")
     assert(pushed.contains("GreaterThanOrEqual(symbol,U000004)") &&
       pushed.contains("LessThanOrEqual(symbol,U000009)"), s"PushedFilters=$pushed")
     // The range-partition + sort layout means every parquet file covers a
     // disjoint symbol interval — the property that lets the pushed bounds
     // skip whole row groups via column min/max statistics.
-    val intervals = state
+    val intervals = scanned
       .select(input_file_name().as("f"), col("symbol"))
       .groupBy("f").agg(min("symbol").as("lo"), max("symbol").as("hi"))
       .collect().map(r => (r.getString(1), r.getString(2))).sortBy(_._1)
@@ -146,7 +160,7 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     try body finally spark.sparkContext.setLocalProperty("graft.probe", null)
   }
 
-  test("a second read of the same snapshot launches no Spark job and still prunes by key") {
+  test("a second read of the same snapshot launches no Spark job and still prunes by key") { scanning {
     val path = MaterializedState.ensure(spark, sfDir)
     MaterializedState.read(spark, sfDir)
     // the listener does see a read's schema-inference job
@@ -157,11 +171,12 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(pushed.contains("EqualTo(symbol,U000007)"), s"PushedFilters=$pushed")
     assert(InteractiveQueries.keyQuery(again, "U000007").collect().toSet ==
       raw.filter(col("symbol") === "U000007").collect().toSet)
-  }
+  } }
 
   test("four threads making a session's first read at once share one resolution") {
     MaterializedState.ensure(spark, sfDir)
     val fresh: SparkSession = spark.newSession()
+    fresh.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val go = new CountDownLatch(1)
     val frames = new ConcurrentLinkedQueue[DataFrame]()
     val jobs = jobsStartedBy {
@@ -201,20 +216,20 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .groupBy(input_file_name()).agg(min("symbol"), max("symbol"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq.sortBy(_._1)
 
-  private def rawWhere(cond: org.apache.spark.sql.Column): Set[Row] =
+  private def rawWhere(cond: Column): Set[Row] =
     raw.filter(cond).collect().toSet
 
   test("a key outside every interval reads no file and returns no rows") {
     val key = "A000000"
     assert(key < fileIntervals.head._1)
-    val (rows, files) = rowsAndFiles(InteractiveQueries.keyQuery(state, key))
+    val (rows, files) = rowsAndFiles(InteractiveQueries.keyQuery(scanned, key))
     assert(rows.isEmpty && rawWhere(col("symbol") === key).isEmpty)
     assert(files == 0, s"read $files files")
   }
 
   test("a key query reads the one file whose interval holds the key") {
     val key = fileIntervals(fileIntervals.length / 2)._1
-    val (rows, files) = rowsAndFiles(InteractiveQueries.keyQuery(state, key))
+    val (rows, files) = rowsAndFiles(InteractiveQueries.keyQuery(scanned, key))
     assert(rows.size == 1 && rows == rawWhere(col("symbol") === key))
     assert(files == 1, s"read $files files")
   }
@@ -222,7 +237,7 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a range that straddles two file intervals reads two files") {
     val i = fileIntervals.length / 2
     val (lower, upper) = (fileIntervals(i - 1)._2, fileIntervals(i)._1)
-    val (rows, files) = rowsAndFiles(InteractiveQueries.rangeQuery(state, Some(lower), Some(upper)))
+    val (rows, files) = rowsAndFiles(InteractiveQueries.rangeQuery(scanned, Some(lower), Some(upper)))
     assert(rows.size == 2 && rows == rawWhere(col("symbol").between(lower, upper)))
     assert(files == 2, s"read $files files")
   }
@@ -231,7 +246,7 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val (first, last) = (fileIntervals.head, fileIntervals.last)
     // two keys held by the snapshot, ten below every interval
     val keys = Seq(first._1, last._2) ++ (1 to 10).map(n => f"A$n%06d")
-    val df = InteractiveQueries.multiKeyQuery(state, keys)
+    val df = InteractiveQueries.multiKeyQuery(scanned, keys)
     assert(df.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[InSet])),
       s"expected an InSet:\n${df.queryExecution.optimizedPlan}")
     val (rows, files) = rowsAndFiles(df)
@@ -242,7 +257,7 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a key predicate ORed with a non-key predicate keeps every file") {
     val key = fileIntervals.head._1
     val cond = col("symbol") === key || col("buys") > 1000000.0
-    val (rows, files) = rowsAndFiles(state.filter(cond))
+    val (rows, files) = rowsAndFiles(scanned.filter(cond))
     assert(rows == rawWhere(cond))
     assert(files == fileIntervals.length, s"read $files of ${fileIntervals.length} files")
   }
@@ -252,7 +267,7 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val cond = collate(col("symbol"), "UTF8_LCASE") === key.toLowerCase
     val unpruned = spark.read.parquet(MaterializedState.ensure(spark, sfDir)).filter(cond)
       .collect().toSet
-    val (rows, _) = rowsAndFiles(state.filter(cond))
+    val (rows, _) = rowsAndFiles(scanned.filter(cond))
     assert(rows.size == 1 && rows == unpruned)
     assert(rows == rawWhere(col("symbol") === key))
   }
@@ -309,6 +324,81 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(withExtra.map(_.getString(0)) == raw.filter(col("symbol") >= highKey)
         .collect().map(_.getString(0)).toSet)
       assert(extraFiles == files, s"read $extraFiles of $files files")
+    }
+  }
+
+  /** Whether `df` answers from a driver-resident relation: no file scan. */
+  private def resident(df: DataFrame): Boolean =
+    collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }.isEmpty
+
+  test("a read snapshot serves key, multi-key, range and filtered-range queries with no Spark job") {
+    val symbols = raw.select("symbol").collect().map(_.getString(0)).sorted
+    val (key, i) = (symbols(symbols.length / 2), symbols.length / 3)
+    val keys = Seq(symbols.head, key, symbols.last)
+    val (lower, upper) = (symbols(i), symbols(i + 5))
+    val cases: Seq[(String, DataFrame => DataFrame, Column)] = Seq(
+      ("key", InteractiveQueries.keyQuery(_, key), col("symbol") === key),
+      ("multi-key", InteractiveQueries.multiKeyQuery(_, keys), col("symbol").isin(keys: _*)),
+      ("range", InteractiveQueries.rangeQuery(_, Some(lower), Some(upper)),
+        col("symbol").between(lower, upper)),
+      ("filtered range",
+        InteractiveQueries.filteredRangeQuery(_, Some(symbols.head), Some(upper), "@.buys > @.sells"),
+        col("symbol") <= upper && col("buys") > col("sells")))
+    MaterializedState.read(spark, sfDir)
+    cases.foreach { case (name, query, cond) =>
+      var rows = Set.empty[Row]
+      val jobs = jobsStartedBy {
+        rows = tagged(name)(query(MaterializedState.read(spark, sfDir)).collect().toSet)
+      }
+      assert(jobs.isEmpty, s"$name started $jobs")
+      assert(rows.nonEmpty && rows == rawWhere(cond), name)
+    }
+  }
+
+  test("with the broadcast threshold off, read serves the parquet scan") {
+    scanOf(scanned)
+    assert(resident(state), s"expected a driver-resident snapshot:\n${state.queryExecution.executedPlan}")
+  }
+
+  test("a driver-resident snapshot rewritten under the same directory is served its new rows") {
+    withTempDir { dir =>
+      val path = s"$dir/snap"
+      val key = fileIntervals.last._1
+      raw.filter(col("symbol") < key).write.parquet(path)
+      def keyOn(): Set[Row] = {
+        val df = InteractiveQueries.keyQuery(MaterializedState.serve(spark, path), key)
+        assert(resident(df), s"expected a driver-resident read:\n${df.queryExecution.executedPlan}")
+        df.collect().toSet
+      }
+      assert(keyOn().isEmpty)
+      raw.write.mode("overwrite").parquet(path)
+      val after = keyOn()
+      assert(after.size == 1 && after == rawWhere(col("symbol") === key))
+    }
+  }
+
+  test("four threads making a snapshot's first driver-resident read at once start one collect job") {
+    withTempDir { dir =>
+      val path = s"$dir/snap"
+      raw.write.parquet(path)
+      // the session's schema inference is its own job, outside the count
+      ParquetRelations.read(spark, path)
+      val go = new CountDownLatch(1)
+      val frames = new ConcurrentLinkedQueue[DataFrame]()
+      val jobs = jobsStartedBy {
+        val threads = (0 until 4).map(i => new Thread(() => {
+          go.await()
+          tagged(s"reader$i")(frames.add(MaterializedState.serve(spark, path)))
+        }))
+        threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+      }
+      assert(frames.size == 4)
+      assert(jobs.size == 1, s"expected one collect job, got $jobs")
+      val expected: Set[Row] = raw.collect().toSet
+      frames.asScala.foreach { df =>
+        assert(resident(df))
+        assert(df.collect().toSet == expected)
+      }
     }
   }
 }
