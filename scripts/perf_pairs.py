@@ -5,6 +5,7 @@
         [--workloads lookup,live,recompute] [--seeds 41-50] [--seconds 10] \
         [--out pairs.jsonl]
     python3 scripts/perf_pairs.py --report pairs.jsonl [--bench BENCHMARK.json]
+    python3 scripts/test_perf_pairs.py     # the gate on synthetic pairs files
 
 DIR is a checkout of each side (a clean clone of the parent commit, and the
 change). For every workload and seed it runs `perfbench/run.py --trace 0`
@@ -15,7 +16,8 @@ so an interrupted run keeps what it measured, and `--report` re-reads it.
 The report gives, per workload and end-to-end metric of BENCHMARK.json
 (the change's, unless `--bench`): each side's median and quartiles, the
 change's median over the parent's, how many pairs the change won (ties
-count for neither side), and the failed and attempted operations per side.
+count for neither side), and the failed and attempted operations per side
+with their share.
 A verdict follows the two rules of a same-box comparison:
   - `gain`: the change won at least 9/10 of the pairs and the medians differ
     by more than the parent's interquartile distance;
@@ -23,6 +25,10 @@ A verdict follows the two rules of a same-box comparison:
     than the metric's bound; `unresolved` when the parent's own spread
     (interquartile distance over median) is wider than the bound and not
     every change run beats every parent run; `ok` otherwise.
+
+The exit status gates the change: 1 if, in any workload, a metric's verdict
+is `REGRESSION`, a run of either side is not `correct`, or the change's
+share of failed operations is above the parent's; 0 otherwise.
 """
 import argparse
 import json
@@ -82,6 +88,7 @@ def quartiles(xs):
 
 
 def report(path, bench_path):
+    """Print the report; return the reasons the gate fails (none: empty)."""
     with open(bench_path) as f:
         metrics = json.load(f)["end_to_end"]
     runs = defaultdict(dict)  # (workload, seed) -> side -> record
@@ -90,14 +97,23 @@ def report(path, bench_path):
             if line.strip():
                 rec = json.loads(line)
                 runs[(rec["workload"], rec["seed"])][rec["side"]] = rec
+    gate = []
     for workload in sorted({w for w, _ in runs}):
         pairs = [sides for (w, _), sides in sorted(runs.items()) if w == workload and len(sides) == 2]
         print(f"\n{workload}: {len(pairs)} pairs")
+        share = {}
         for side in ("parent", "change"):
             att = sum(p[side]["attempted"] for p in pairs)
             failed = sum(p[side]["failed"] for p in pairs)
-            wrong = sum(1 for p in pairs if not p[side]["correct"])
-            print(f"  {side}: {failed} failed of {att} attempted; {wrong} runs not correct")
+            share[side] = failed / att if att else 0.0
+            recs = [r[side] for (w, _), r in runs.items() if w == workload and side in r]
+            wrong = sum(1 for r in recs if not r["correct"])
+            print(f"  {side}: {failed} failed of {att} attempted ({share[side]:.2%});"
+                  f" {wrong} of {len(recs)} runs not correct")
+            if wrong:
+                gate.append(f"{workload}: {wrong} {side} runs not correct")
+        if share["change"] > share["parent"]:
+            gate.append(f"{workload}: failed share {share['parent']:.2%} -> {share['change']:.2%}")
         print(f"  {'metric':<18} {'parent med [q1, q3]':>28} {'change med [q1, q3]':>28}"
               f" {'ratio':>6} {'wins':>6}  verdict")
         for m in metrics:
@@ -121,9 +137,13 @@ def report(path, bench_path):
                 verdict = "unresolved"
             else:
                 verdict = "ok"
+            if verdict == "REGRESSION":
+                gate.append(f"{workload}: {name} regressed ({cm / pm:.3f})")
             print(f"  {name:<18} {pm:>10.4g} [{p1:.4g}, {p3:.4g}]".ljust(48)
                   + f" {cm:>10.4g} [{c1:.4g}, {c3:.4g}]".ljust(29)
                   + f" {cm / pm:>6.3f} {wins:>3}/{len(got):<2}  {verdict}")
+    print("\ngate: " + ("FAIL\n  " + "\n  ".join(gate) if gate else "ok"))
+    return gate
 
 
 def main():
@@ -138,12 +158,13 @@ def main():
     ap.add_argument("--bench", help="BENCHMARK.json with the metrics and bounds")
     args = ap.parse_args()
     if args.report:
-        report(args.report, args.bench or os.path.join(HERE, "..", "BENCHMARK.json"))
-        return
-    if not (args.parent and args.change):
-        ap.error("--parent and --change are required unless --report is given")
-    measure(args)
-    report(args.out, args.bench or os.path.join(args.change, "BENCHMARK.json"))
+        gate = report(args.report, args.bench or os.path.join(HERE, "..", "BENCHMARK.json"))
+    else:
+        if not (args.parent and args.change):
+            ap.error("--parent and --change are required unless --report is given")
+        measure(args)
+        gate = report(args.out, args.bench or os.path.join(args.change, "BENCHMARK.json"))
+    sys.exit(1 if gate else 0)
 
 
 if __name__ == "__main__":

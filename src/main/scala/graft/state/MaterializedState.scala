@@ -24,10 +24,13 @@ import graft.util.Fs
   * the session's conf by the rule Spark uses to broadcast a relation:
   *   - at or below `spark.sql.autoBroadcastJoinThreshold` (the parquet
   *     relation's size estimate at least 0 and at most the threshold) it is
-  *     driver-resident, a `LocalRelation` of its rows, the reference's
-  *     in-memory store (`store/CustomInMemoryBytesStoreSupplier.java`).
-  *     Catalyst's `ConvertToLocalRelation` evaluates a query's filters while
-  *     optimizing, and collecting runs no Spark job and opens no file;
+  *     driver-resident, a `LocalRelation` of its rows sorted by `symbol`
+  *     ([[KeySortedRows]]), the reference's in-memory store
+  *     (`store/CustomInMemoryBytesStoreSupplier.java`). A key, multi-key or
+  *     range query binary-searches those rows for its answer
+  *     (`graft.operators.InteractiveQueries`); any other query is left to
+  *     Catalyst, whose `ConvertToLocalRelation` evaluates its filters while
+  *     optimizing. Collecting runs no Spark job and opens no file;
   *   - above it, the file-skipping parquet scan below, the only path that
   *     can serve a snapshot too large for the driver.
   *
@@ -82,26 +85,32 @@ object MaterializedState {
     * and gets a copy of the memoized relation with fresh attribute ids. On
     * the scan path, filters over `symbol` drop the files whose key interval
     * cannot match and push into the scan to skip row groups. On the
-    * driver-resident path, the rows are collected once per (directory,
-    * fingerprint) with that relation's schema, and each call gets a copy of
-    * the `LocalRelation` with fresh attribute ids. Either way a snapshot
-    * rewritten under the same directory is re-read, never served stale.
+    * driver-resident path, the rows are collected and sorted by `symbol`
+    * once per (directory, fingerprint) with that relation's schema, and each
+    * call gets a copy of the `LocalRelation` with fresh attribute ids that
+    * shares the sorted rows. Either way a snapshot rewritten under the same
+    * directory is re-read, never served stale, and a deleted one drops its
+    * rows and raises Spark's own missing-path error.
     */
   def read(spark: SparkSession, sfDir: String): DataFrame = serve(spark, ensure(spark, sfDir))
 
   /** Driver-resident snapshots, one entry per directory, valid for one
     * listing fingerprint. JVM-wide, not per session: a `LocalRelation` holds
-    * no session. Concurrent first readers share one collect job.
+    * no session. Concurrent first readers share one collect job. A
+    * directory deleted since loses its entry on its next read.
     */
-  private val resident = new ConcurrentHashMap[String, ParquetRelations.Entry[LocalRelation]]()
+  private[graft] val resident = new ConcurrentHashMap[String, ParquetRelations.Entry[LocalRelation]]()
 
   /** [[read]] of the snapshot written at `path`. */
   private[graft] def serve(spark: SparkSession, path: String): DataFrame = {
     val fp = ParquetRelations.fingerprint(spark, path)
+    // a path that no longer lists keeps no rows; the read below raises
+    // Spark's error for a missing one
+    if (fp.isEmpty) resident.remove(path)
     val scan = ParquetRelations.read(spark, path, fp)
     if (!RelationBridge.fitsBroadcast(scan)) scan
-    else RelationBridge.freshCopy(spark,
-      ParquetRelations.entryFor(resident, path, fp).get(RelationBridge.collectLocal(scan)))
+    else RelationBridge.freshCopy(spark, ParquetRelations.entryFor(resident, path, fp)
+      .get(KeySortedRows.sort(RelationBridge.collectLocal(scan), "symbol")))
   }
 
   // private[graft] so the fresh-JVM rerun spec can clear the memo and

@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset}
 
 /** Hands out an already-analyzed relation again. `Dataset.ofRows`, the
-  * plan's analyzed mark and the session's typed conf are `private[sql]` or
-  * classic-only; a library that memoizes resolved relations
-  * (`graft.state.ParquetRelations`, `graft.state.MaterializedState`) needs
+  * plan's analyzed mark, a Dataset's plan and the session's typed conf are
+  * `private[sql]` or classic-only; a library that memoizes resolved
+  * relations (`graft.state.ParquetRelations`, `graft.state.MaterializedState`)
+  * and answers queries on them (`graft.operators.InteractiveQueries`) needs
   * them, so this object lives under the `org.apache.spark.sql` package, like
   * [[ColumnBridge]].
   */
@@ -19,11 +20,22 @@ object RelationBridge {
     * rows) gives — marked analyzed, because the analyzer has nothing left to
     * resolve in it.
     */
-  def freshCopy(spark: SparkSession, relation: LogicalPlan with MultiInstanceRelation): DataFrame = {
-    val copy = relation.newInstance()
-    copy.setAnalyzed()
-    Dataset.ofRows(ClassicConversions.castToImpl(spark), copy)
+  def freshCopy(spark: SparkSession, relation: LogicalPlan with MultiInstanceRelation): DataFrame =
+    ofAnalyzed(spark, relation.newInstance())
+
+  /** A DataFrame over `plan` as it is, its attribute ids kept, marked
+    * analyzed: `plan` must need no resolution (a relation over resolved
+    * attributes).
+    */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    Dataset.ofRows(ClassicConversions.castToImpl(spark), plan)
   }
+
+  /** The plan `df` was built over, as given to it: reading it runs no
+    * analysis.
+    */
+  def logicalOf(df: DataFrame): LogicalPlan = ClassicConversions.castToImpl(df).queryExecution.logical
 
   /** Whether `df` is small enough for Spark to broadcast it: the rule
     * `JoinSelection` applies, its size estimate at least 0 and at most the

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -374,6 +374,19 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       raw.write.mode("overwrite").parquet(path)
       val after = keyOn()
       assert(after.size == 1 && after == rawWhere(col("symbol") === key))
+    }
+  }
+
+  test("a deleted driver-resident snapshot drops its rows and raises Spark's missing-path error") {
+    withTempDir { dir =>
+      val path = s"$dir/snap"
+      raw.write.parquet(path)
+      assert(resident(MaterializedState.serve(spark, path)))
+      assert(MaterializedState.resident.containsKey(path))
+      Fs.deleteRecursively(java.nio.file.Paths.get(path))
+      val e = intercept[AnalysisException](MaterializedState.serve(spark, path))
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      assert(!MaterializedState.resident.containsKey(path))
     }
   }
 
