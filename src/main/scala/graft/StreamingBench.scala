@@ -1,9 +1,9 @@
 package graft
 
 /** Cold end-to-end benchmark for the STREAMING twins. `graft.Bench` medians
-  * re-reads of the cached snapshot (the streaming runs are one-time
-  * computeIfAbsent artifacts), so its numbers measure the serving read, not
-  * the stream. This main times each query's FIRST invocation — replay
+  * re-reads of the cached snapshot (each streaming run executes once per
+  * input listing), so its numbers measure the serving read, not the
+  * stream. This main times each query's FIRST invocation — replay
   * staging + the full micro-batch stream + snapshot materialization — once
   * per query in a fresh JVM-wide cache, which IS the streaming cost a scale
   * study needs.

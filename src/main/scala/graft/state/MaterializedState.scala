@@ -13,12 +13,13 @@ import graft.operators.StockAggregation
 import graft.util.Fs
 
 /** The serving-side materialized state table (S5's read half): the aggregate
-  * snapshot written ONCE, which the interactive-query functions then read —
-  * mirroring the reference, where IQ queries hit the pre-materialized RocksDB
-  * store (`streams/KafkaStreamsService.java:84-90`) rather than re-consuming
-  * the input topic. Re-computing the aggregation from raw events on every key
-  * lookup (rounds 1–2 here) would re-scan the raw table at 100 TB; serving
-  * from the snapshot makes a key query O(matching row-groups).
+  * snapshot written once per input listing, which the interactive-query
+  * functions then read — mirroring the reference, where IQ queries hit the
+  * pre-materialized RocksDB store (`streams/KafkaStreamsService.java:84-90`)
+  * rather than re-consuming the input topic. Re-computing the aggregation
+  * from raw events on every key lookup (rounds 1–2 here) would re-scan the
+  * raw table at 100 TB; serving from the snapshot makes a key query
+  * O(matching row-groups).
   *
   * [[read]] serves the snapshot one of two ways, decided on every call from
   * the session's conf by the rule Spark uses to broadcast a relation:
@@ -53,32 +54,32 @@ import graft.util.Fs
   */
 object MaterializedState {
 
-  private val built = new ConcurrentHashMap[String, String]()
-
   // the prefix keeps the leaf visible: Spark's file listing treats a name
   // starting with `_` or `.` (an absolute dir sanitizes to `_root_...`) as
   // hidden and logs "All paths were ignored" on every read
-  private def stateDir(sfDir: String): Path =
+  private[graft] def stateDir(sfDir: String): Path =
     Paths.get("target", "state", "snapshot" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_"))
       .toAbsolutePath
 
-  /** Write the snapshot for this scale factor (once per JVM); returns its
-    * path.
+  /** Write the snapshot for this scale factor (once per input listing,
+    * [[ParquetRelations.derived]]); returns its path.
     */
   def ensure(spark: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(sfDir, _ => {
+    ParquetRelations.derived(spark, sfDir, "snapshot") {
       val dir = stateDir(sfDir)
       StockAggregation.aggregate(Tables.transactions(spark, sfDir))
         .repartitionByRange(8, col("symbol"))
         .sortWithinPartitions("symbol")
         .write.mode("overwrite").parquet(dir.toString)
       dir.toString
-    })
+    }
 
   /** The serving table: driver-resident at or below Spark's broadcast
     * threshold, otherwise the file-skipping scan (see the object doc).
     *
-    * Both start from [[ParquetRelations.read]]: the snapshot is listed and
+    * Each call first lists the files under `sfDir` ([[ensure]]), so an input
+    * rewritten there rebuilds the snapshot before it is served. Both paths
+    * then start from [[ParquetRelations.read]]: the snapshot is listed and
     * its schema inferred once per session, and each later call only
     * re-fingerprints the directory — the sorted (relative file, length,
     * mtime) of its files plus the schema-inference settings, no data read —
@@ -113,52 +114,39 @@ object MaterializedState {
       .get(KeySortedRows.sort(RelationBridge.collectLocal(scan), "symbol")))
   }
 
-  // private[graft] so the fresh-JVM rerun spec can clear the memo and
-  // re-enter the build path against a pre-existing on-disk layout
-  private[graft] val bucketedBuilt = new ConcurrentHashMap[String, (String, String)]()
-
   /** Co-located serving tables: the aggregate snapshot AND a per-symbol
-    * latest-event-time table, both written once as parquet tables BUCKETED by
-    * `symbol` into the same bucket count. A join between them then needs NO
-    * exchange on either side — the bucket layout IS the join partitioning,
-    * which is the storage-level answer to "minimize shuffles" for repeated
-    * large-large keyed joins (broadcast covers small-large;
-    * `q_multi_key_large`). At cluster scale this is a bucketed warehouse
-    * table; the bucket count is sized to data volume, not hardcoded — 8 keeps
-    * files non-trivial at the test SFs.
+    * latest-event-time table, both written once per input listing as parquet
+    * tables BUCKETED by `symbol` into the same bucket count. A join between
+    * them then needs NO exchange on either side — the bucket layout IS the
+    * join partitioning, which is the storage-level answer to "minimize
+    * shuffles" for repeated large-large keyed joins (broadcast covers
+    * small-large; `q_multi_key_large`). At cluster scale this is a bucketed
+    * warehouse table; the bucket count is sized to data volume, not
+    * hardcoded — 8 keeps files non-trivial at the test SFs.
     */
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (aggT, mtsT) = bucketedBuilt.computeIfAbsent(sfDir, _ => {
-      // sanitized name + exact-dir hash: sanitization alone (and the
-      // catalog's case folding) would collide distinct dirs onto one table
-      // name, and the tableExists guard would then serve the wrong data
-      val suffix = sfDir.replaceAll("[^A-Za-z0-9]+", "_").toLowerCase +
-        "_" + java.lang.Integer.toHexString(sfDir.hashCode)
-      val aggT = s"graft_agg$suffix"
-      val mtsT = s"graft_maxts$suffix"
-      val base = stateDir(sfDir).resolveSibling(
-        stateDir(sfDir).getFileName.toString + "_bucketed")
-      if (!spark.catalog.tableExists(aggT)) {
-        // catalog is per-JVM but the external path persists: a fresh JVM with
-        // a stale directory would fail the CTAS (non-empty location) — clear
-        // it first, mirroring how ensure() tolerates leftover state
-        Fs.deleteRecursively(base.resolve("agg"))
-        StockAggregation.aggregate(Tables.transactions(spark, sfDir))
-          .write.bucketBy(8, "symbol").sortBy("symbol")
-          .option("path", base.resolve("agg").toString)
-          .mode("overwrite").format("parquet").saveAsTable(aggT)
-      }
-      if (!spark.catalog.tableExists(mtsT)) {
-        Fs.deleteRecursively(base.resolve("mts"))
-        Tables.transactionsWithTs(spark, sfDir)
-          .groupBy("symbol")
-          .agg(max(unix_millis(col("ts"))).as("max_ts_ms"))
-          .write.bucketBy(8, "symbol").sortBy("symbol")
-          .option("path", base.resolve("mts").toString)
-          .mode("overwrite").format("parquet").saveAsTable(mtsT)
-      }
-      (aggT, mtsT)
-    })
+    // sanitized name + exact-dir hash: sanitization alone (and the catalog's
+    // case folding) would collide distinct dirs onto one table name
+    val suffix = sfDir.replaceAll("[^A-Za-z0-9]+", "_").toLowerCase +
+      "_" + java.lang.Integer.toHexString(sfDir.hashCode)
+    val aggT = s"graft_agg$suffix"
+    val mtsT = s"graft_maxts$suffix"
+    ParquetRelations.derived(spark, sfDir, "bucketed") {
+      val base = Paths.get(s"${stateDir(sfDir)}_bucketed")
+      // the catalog is per JVM but the external path persists, and a CTAS
+      // fails on a non-empty location: clear it, then overwrite both tables
+      Fs.deleteRecursively(base)
+      StockAggregation.aggregate(Tables.transactions(spark, sfDir))
+        .write.bucketBy(8, "symbol").sortBy("symbol")
+        .option("path", base.resolve("agg").toString)
+        .mode("overwrite").format("parquet").saveAsTable(aggT)
+      Tables.transactionsWithTs(spark, sfDir)
+        .groupBy("symbol")
+        .agg(max(unix_millis(col("ts"))).as("max_ts_ms"))
+        .write.bucketBy(8, "symbol").sortBy("symbol")
+        .option("path", base.resolve("mts").toString)
+        .mode("overwrite").format("parquet").saveAsTable(mtsT)
+    }
     spark.table(aggT).join(spark.table(mtsT), "symbol")
   }
 

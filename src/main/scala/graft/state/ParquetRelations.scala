@@ -69,7 +69,8 @@ object ParquetRelations {
   /** One memo entry, valid for one fingerprint. The value is computed under
     * the entry's own lock, never inside the map's: concurrent first readers
     * share one computation, and a computation may consult another entry of
-    * the same map (the artifact memo's radii need its centroids).
+    * the same map (the artifact memo's radii need its centroids; a streaming
+    * twin's run replays the aggregate run's staging).
     */
   private[state] final class Entry[V](val fingerprint: Option[Fingerprint]) {
     private var value: Option[V] = None
@@ -86,6 +87,31 @@ object ParquetRelations {
       fp: Option[Fingerprint]): Entry[V] =
     memo.compute(key, (_, old) =>
       if (old != null && fp.isDefined && old.fingerprint == fp) old else new Entry[V](fp))
+
+  private val derivedTables = new ConcurrentHashMap[(String, String), Entry[Any]]()
+
+  /** The table `name` derived from the inputs under `inputs` (the
+    * materialized snapshot, the bucketed serving tables, each streaming run):
+    * `build` runs once per listing of the files under `inputs`, JVM-wide, and
+    * later calls return its value. A rewritten input rebuilds on its next
+    * call; an input that cannot be listed rebuilds on every call (and a
+    * missing one raises Spark's own error there).
+    *
+    * The key is the listing's files alone, not the session settings of
+    * [[Fingerprint]]: `Tables.events` sets `nanosAsLong` inside the first
+    * build, so a key taken before that build must match one taken after.
+    * The key holds the `inputs` path, so hard links to one file under two
+    * directories derive two tables.
+    */
+  private[graft] def derived[V](spark: SparkSession, inputs: String, name: String)(build: => V): V =
+    entryFor(derivedTables, (inputs, name), fingerprint(spark, inputs).map(_.copy(settings = Nil)))
+      .get(build).asInstanceOf[V]
+
+  /** TEST HOOK: forget the derived table `name` of `inputs`, so its next
+    * call builds it as a fresh JVM's would.
+    */
+  private[graft] def forgetDerivedForTest(inputs: String, name: String): Unit =
+    derivedTables.remove((inputs, name))
 
   private val sessions =
     new WeakHashMap[SparkSession, ConcurrentHashMap[String, Entry[LogicalRelation]]]()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,6 +10,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.operators.StockAggregation
 import graft.sources.{Serdes, Transport}
+import graft.state.ParquetRelations
 import graft.util.Fs
 
 /** The streaming twin of the batch aggregation — the reference's core write
@@ -53,7 +53,9 @@ import graft.util.Fs
   *   - `checkpoint/`: the query's offsets, commits and RocksDB state;
   *   - `out/`: the sink (append parquet, or an idempotent per-batch
   *     changelog).
-  * A run executes once per JVM; later calls read its `out/`.
+  * A run executes once per input listing (every input a twin reads lives
+  * under `sfDir`, [[ParquetRelations.derived]]); later calls read its
+  * `out/`, and an input rewritten under `sfDir` replays it again.
   *
   * Scale notes: the changelog is append-only partitioned writes (no shuffle on
   * the write path beyond the aggregation's own exchange); the snapshot compact
@@ -154,31 +156,29 @@ object StreamingState {
       .start()
   }
 
-  // run directory -> its out/ (one streaming run per run directory per JVM;
-  // queries serve from the materialized output, as the reference's IQ
-  // functions serve from the store rather than re-consuming the topic)
-  private val runs = new ConcurrentHashMap[String, String]()
-
-  /** The replay-once seam: on the first call for `run` in this JVM, wipe
-    * `<run>/`, stage its input (`input`, given the run directory — usually
+  /** The replay-once seam: on the first call for `run` per listing of the
+    * files under `sfDir` ([[ParquetRelations.derived]]), wipe `<run>/`,
+    * stage its input (`input`, given the run directory — usually
     * [[staged]]), run `pipeline` over the replay to completion with
     * `Trigger.AvailableNow` into `sink`, and return `<run>/out`. Later calls
-    * return the memoized `out` without starting a query.
+    * return that `out` without starting a query; queries serve from it, as
+    * the reference's IQ functions serve from the store rather than
+    * re-consuming the topic.
     *
     * `run` carries the twin's parameters (sanitized here), so differently
-    * parameterized runs never share a directory or a memo entry. A run
-    * depending on another run must complete that one BEFORE calling this:
-    * a nested call would re-enter the memo's compute.
+    * parameterized runs never share a directory or a memo entry. A run that
+    * replays another run's output ([[aggregateReplay]]) is keyed on the same
+    * listing, so a rewritten input replays both.
     */
   private def replayOnce[T](
-      sfDir: String, run: String, input: Path => Replay, sink: Sink = appendParquet)(
-      pipeline: Replay => Dataset[T]): String = {
+      spark: SparkSession, sfDir: String, run: String, input: Path => Replay,
+      sink: Sink = appendParquet)(pipeline: Replay => Dataset[T]): String = {
     val dir = runDir(sfDir, run)
-    runs.computeIfAbsent(dir.toString, _ => {
+    ParquetRelations.derived(spark, sfDir, dir.toString) {
       Fs.deleteRecursively(dir)
       start(dir, input(dir), sink, pipeline, Trigger.AvailableNow()).awaitTermination()
       dir.resolve("out").toString
-    })
+    }
   }
 
   /** The full transport seam (S1→A2→S4) over a replay: wire-shaped source
@@ -192,17 +192,16 @@ object StreamingState {
       r.spark, Transport.SourceFormat.FileReplay(r.staging.toString, r.schema))))
 
   /** Run the streaming pipeline to completion for this scale factor (once per
-    * JVM) and return the changelog directory. Stages one parquet file per
+    * input listing) and return the changelog directory. Stages one parquet file per
     * chunk, so the events replay as NumChunks deterministic micro-batches.
     */
   def ensureRun(spark: SparkSession, sfDir: String): String =
-    replayOnce(sfDir, "aggregate",
+    replayOnce(spark, sfDir, "aggregate",
       staged(Tables.transactionsChunked(spark, sfDir, NumChunks)), changelogSink)(
       aggregatePipeline)
 
   /** The aggregation run's staging, for twins that replay it instead of
-    * staging their own. Completes that run first (outside any other run's
-    * memo compute).
+    * staging their own; completes that run first.
     */
   private def aggregateReplay(spark: SparkSession, sfDir: String): Replay = {
     val out = Paths.get(ensureRun(spark, sfDir))
@@ -373,10 +372,10 @@ object StreamingState {
     * scheduling, but the key set is deterministic (oracle: SELECT DISTINCT).
     */
   def streamingDedupKeys(spark: SparkSession, sfDir: String): DataFrame = {
-    val replay = aggregateReplay(spark, sfDir)
-    spark.read.parquet(replayOnce(sfDir, "dedup_keys", _ => replay) {
-      _.source.dropDuplicates("symbol").select(col("symbol"))
-    })
+    spark.read.parquet(
+      replayOnce(spark, sfDir, "dedup_keys", _ => aggregateReplay(spark, sfDir)) {
+        _.source.dropDuplicates("symbol").select(col("symbol"))
+      })
   }
 
   /** BOUNDED-state streaming dedup — the 100 TB form of
@@ -413,7 +412,7 @@ object StreamingState {
       .withColumn("dts",
         min(col("ts")).over(Window.partitionBy(col("symbol"), col("chunk"))))
       .select(col("dts"), col("symbol"), col("chunk").as("emit_chunk"), col("chunk")))
-    spark.read.parquet(replayOnce(sfDir, s"bounded_dedup_$delay", txns) {
+    spark.read.parquet(replayOnce(spark, sfDir, s"bounded_dedup_$delay", txns) {
       _.source
         .withWatermark("dts", delay)
         .dropDuplicatesWithinWatermark("symbol")
@@ -471,7 +470,7 @@ object StreamingState {
   def perRecordChangelog(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val out = replayOnce(sfDir, "perrecord",
+    val out = replayOnce(spark, sfDir, "perrecord",
       staged(Tables.transactionsIdChunked(spark, sfDir, NumChunks))) {
       _.source.as[TxnEvent]
         .groupByKey(_.symbol)
@@ -553,7 +552,7 @@ object StreamingState {
   def funnelSnapshot(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val out = replayOnce(sfDir, "funnel", staged(timeOrderedEvents(spark, sfDir,
+    val out = replayOnce(spark, sfDir, "funnel", staged(timeOrderedEvents(spark, sfDir,
       Seq(col("event_id"), col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))))) {
       _.source.as[UserEvent]
         .groupByKey(_.user_id)
@@ -625,7 +624,7 @@ object StreamingState {
       tombstoneType: String = "error"): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val out = replayOnce(sfDir, "cdc", staged(timeOrderedEvents(spark, sfDir,
+    val out = replayOnce(spark, sfDir, "cdc", staged(timeOrderedEvents(spark, sfDir,
       Seq(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("value"))))) {
       _.source.as[CdcEvent]
@@ -709,7 +708,7 @@ object StreamingState {
       spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    trendingBoard(spark, replayOnce(sfDir, s"trending_$k",
+    trendingBoard(spark, replayOnce(spark, sfDir, s"trending_$k",
       staged(trendingReplay(spark, sfDir))) {
       _.source.as[TrendEvent]
         .groupByKey(_.ws)
@@ -825,7 +824,7 @@ object StreamingState {
     */
   def trendingSnapshotTws(
       spark: SparkSession, sfDir: String, k: Int = 3): DataFrame =
-    trendingBoard(spark, replayOnce(sfDir, s"trending_tws_$k",
+    trendingBoard(spark, replayOnce(spark, sfDir, s"trending_tws_$k",
       staged(trendingReplay(spark, sfDir)))(trendingTws(k)))
 
   /** The [[TrendingProcessor]] pipeline: one plan for the normal and the
@@ -904,7 +903,7 @@ object StreamingState {
   def kmvSnapshot(spark: SparkSession, sfDir: String, k: Int = 256): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val out = replayOnce(sfDir, s"kmv_$k", staged(timeOrderedEvents(spark, sfDir,
+    val out = replayOnce(spark, sfDir, s"kmv_$k", staged(timeOrderedEvents(spark, sfDir,
       Seq(col("event_type").as("grp"),
         md5(unix_micros(col("ts")).cast("string").cast("binary")).as("h"))))) {
       _.source.as[KmvRow]
@@ -1012,7 +1011,7 @@ object StreamingState {
   def rateLimitEmissions(spark: SparkSession, sfDir: String, perDay: Int = 5): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    admissions(spark, replayOnce(sfDir, s"ratelimit_$perDay",
+    admissions(spark, replayOnce(spark, sfDir, s"ratelimit_$perDay",
       staged(rateLimitReplay(spark, sfDir))) { r =>
       rateLimitSource(r)
         .groupByKey(e => (e.user_id, e.day))
@@ -1218,7 +1217,7 @@ object StreamingState {
     */
   def rateLimitEmissionsTwsSwept(
       spark: SparkSession, sfDir: String, perDay: Int = 5): DataFrame =
-    admissions(spark, replayOnce(sfDir, s"ratelimit_tws2_$perDay",
+    admissions(spark, replayOnce(spark, sfDir, s"ratelimit_tws2_$perDay",
       staged(rateLimitReplay(spark, sfDir)))(rateLimitSwept(perDay)))
 
   /** The [[RateLimitSweepProcessor]] pipeline: one plan for the normal and
@@ -1278,7 +1277,7 @@ object StreamingState {
       spark: SparkSession, sfDir: String, perDay: Int = 5): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    admissions(spark, replayOnce(sfDir, s"ratelimit_tws_$perDay",
+    admissions(spark, replayOnce(spark, sfDir, s"ratelimit_tws_$perDay",
       staged(rateLimitReplay(spark, sfDir))) { r =>
       rateLimitSource(r)
         .groupByKey(e => (e.user_id, e.day))
@@ -1376,7 +1375,7 @@ object StreamingState {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
     val half = NumChunks / 2
-    val out = Paths.get(replayOnce(sfDir, "restore", dir => {
+    val out = Paths.get(replayOnce(spark, sfDir, "restore", dir => {
       val txns = Tables.transactionsWithId(spark, sfDir)
         .withColumn("chunk", (col("event_id") % NumChunks).cast("int"))
       // the "restored store": the aggregate a prior instance had materialized
@@ -1433,7 +1432,7 @@ object StreamingState {
           Transport.writeBatchIdempotent(
             graft.operators.Dedup.incrementalNearDedup(existing, batch), batchId, out)
         }
-    val out = replayOnce(sfDir, "incdedup", staged(Tables.withOrderedChunks(
+    val out = replayOnce(spark, sfDir, "incdedup", staged(Tables.withOrderedChunks(
       docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
       NumChunks, Seq(col("doc_id")))), verdicts)(_.source)
     spark.read.parquet(out).select("doc_id", "matched_id", "jaccard")
@@ -1453,8 +1452,8 @@ object StreamingState {
     * and checked against the same oracle.
     */
   def enrichedSnapshot(spark: SparkSession, sfDir: String): DataFrame = {
-    val replay = aggregateReplay(spark, sfDir)
-    val out = replayOnce(sfDir, "enriched", _ => replay, batchChangelog) { r =>
+    val out = replayOnce(spark, sfDir, "enriched", _ => aggregateReplay(spark, sfDir),
+        batchChangelog) { r =>
       val staticDim = Tables.transactionsWithTs(spark, sfDir)
         .groupBy(col("symbol"))
         .agg(max(unix_millis(col("ts"))).as("max_ts_ms"))
@@ -1498,7 +1497,7 @@ object StreamingState {
       spark: SparkSession, sfDir: String,
       windowDuration: String = "1 hour",
       watermarkDelay: String = "1 hour"): DataFrame =
-    spark.read.parquet(windowedRun(sfDir, "windowed",
+    spark.read.parquet(windowedRun(spark, sfDir, "windowed",
       Tables.transactionsTimeChunked(spark, sfDir, NumChunks), windowDuration, watermarkDelay))
       .groupBy(col("window_start_s"), col("symbol"))
       .agg(
@@ -1513,9 +1512,9 @@ object StreamingState {
     * the time-ordered replay.
     */
   private[graft] def windowedRun(
-      sfDir: String, run: String, frame: => DataFrame,
+      spark: SparkSession, sfDir: String, run: String, frame: => DataFrame,
       windowDuration: String, watermarkDelay: String): String =
-    replayOnce(sfDir, s"${run}_${windowDuration}_$watermarkDelay", staged(frame),
+    replayOnce(spark, sfDir, s"${run}_${windowDuration}_$watermarkDelay", staged(frame),
       batchChangelog) { r =>
       StockAggregation
         .aggregateWindowed(r.source.withWatermark("ts", watermarkDelay), windowDuration)
@@ -1559,7 +1558,7 @@ object StreamingState {
       NumChunks, Seq(gap, watermarkDelay))(Seq(lit(FlushSymbol).as("symbol"),
       lit(true).as("buy"), lit(0.0).as("amount"), lit(0).as("number_shares"))),
       NumChunks + 1)
-    val out = replayOnce(sfDir, s"session_${gap}_$watermarkDelay", txns) { r =>
+    val out = replayOnce(spark, sfDir, s"session_${gap}_$watermarkDelay", txns) { r =>
       // literally the batch operator over the watermarked stream — the same
       // code, not a hand-maintained copy, so the shared oracle cannot drift
       StockAggregation.aggregateSessions(r.source.withWatermark("ts", watermarkDelay), gap)
@@ -1644,7 +1643,7 @@ object StreamingState {
       window: String = "30 minutes",
       watermarkDelay: String = "1 hour"): DataFrame = {
     requireLossless("streamStreamJoin", window, watermarkDelay)
-    val out = replayOnce(sfDir, s"ssj_${window}_$watermarkDelay",
+    val out = replayOnce(spark, sfDir, s"ssj_${window}_$watermarkDelay",
       staged(timeOrderedTxns(spark, sfDir))) {
       intervalJoin(_, window, watermarkDelay, "inner")
     }
@@ -1687,7 +1686,7 @@ object StreamingState {
     val txns = staged(withFlush(timeOrderedTxns(spark, sfDir), NumChunks,
       Seq(window, watermarkDelay))(sentinel(-1L, buy = true), sentinel(-2L, buy = false)),
       NumChunks + 1)
-    val out = replayOnce(sfDir, s"ssjo_${window}_$watermarkDelay", txns) {
+    val out = replayOnce(spark, sfDir, s"ssjo_${window}_$watermarkDelay", txns) {
       intervalJoin(_, window, watermarkDelay, "leftOuter")
     }
     spark.read.parquet(out)
@@ -1761,7 +1760,7 @@ object StreamingState {
       withFlush(arr, NumChunks + 2, Seq(windowDuration, watermarkDelay))(
         Seq(lit(FlushSymbol).as("symbol")))
     }
-    val out = replayOnce(sfDir,
+    val out = replayOnce(spark, sfDir,
       s"latedrop_${windowDuration}_${watermarkDelay}_${lateEvery}_$lateHorizonHours",
       staged(arrivals, NumChunks + 3)) {
       _.source.withWatermark("ts", watermarkDelay)

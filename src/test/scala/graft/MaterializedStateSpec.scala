@@ -125,7 +125,7 @@ class MaterializedStateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .collect().map(_.name).filter(_.startsWith("graft_"))
     assert(tables.nonEmpty, "expected bucketed graft_* tables in catalog")
     tables.foreach(t => spark.sql(s"DROP TABLE $t"))
-    MaterializedState.bucketedBuilt.clear()
+    ParquetRelations.forgetDerivedForTest(sfDir, "bucketed")
     val againRows = MaterializedState.bucketedJoin(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(againRows == firstRows)

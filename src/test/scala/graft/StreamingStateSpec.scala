@@ -162,7 +162,7 @@ class StreamingStateSpec extends AnyFunSuite {
     // Reuse the round-robin (event_id % N) staging: every chunk spans the full
     // time range, so from micro-batch 2 on, almost every row is older than
     // (max ts seen - 0s) and must be dropped by the watermark.
-    val out = StreamingState.windowedRun(sfDir, "spec_ooo",
+    val out = StreamingState.windowedRun(spark, sfDir, "spec_ooo",
       Tables.transactionsChunkedTs(spark, sfDir, StreamingState.NumChunks),
       "1 hour", "0 seconds")
     val finalShares = spark.read.parquet(out)
