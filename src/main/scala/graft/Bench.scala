@@ -26,7 +26,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // shuffle partitions must SCALE WITH DATA, not stay pinned at the core
     // count: at sf10 a fixed 32 partitions means 10× bigger partitions that
     // spill (measured: q_olap_heavy 14.8×/decade from spill alone, SCALING.md)
@@ -98,12 +98,7 @@ object Bench {
       name -> med
     }.filter { case (name, _) => !errors.contains(name) }
 
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    import Json.{quote => q}
     val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0

@@ -4,6 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local session builder every main and the test suite use. */
 object GraftSession {
+  /** The local core count every main runs on: `SPARK_GRAFT_CPUS`, else
+    * every core this JVM sees. */
+  val cpus: String = sys.env.getOrElse(
+    "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def builder(cpus: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")

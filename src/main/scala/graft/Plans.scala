@@ -27,7 +27,7 @@ object Plans {
         sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(cpus, cpus).getOrCreate()
     val names =
       if (qlist == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -12,7 +12,7 @@ package graft
 object Probe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val b = GraftSession.builder(cpus, cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

@@ -82,7 +82,7 @@ object ScaleData {
     val fixedKeys = mode == "fixedkeys"
     val factor = factorStr.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(cpus, cpus).getOrCreate()
 
     def replicate(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =

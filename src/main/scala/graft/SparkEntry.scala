@@ -344,10 +344,8 @@ object SparkEntry {
     "q_similarity_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qids = Seq(0L, 1L, 2L, 3L, 4L)
-      Similarity.ivfExactTopK(emb, qids, k = 10, cents(dir, emb),
-        precomputedRadii = Some(radii(dir, emb)),
-        precomputedSeeds = Some(seeds(dir, emb, qids, 10)),
-        precomputedQVecs = Some(qvecs(dir, emb, qids)))
+      Similarity.ivfExactTopK(emb, k = 10, cents(dir, emb), radii(dir, emb),
+        seeds(dir, emb, qids, 10), qvecs(dir, emb, qids))
     }),
     // embedding-space dedup survivors: connected-components min-label
     // propagation (same as q_dedup_survivors) over WITHIN-CELL ε-pairs
@@ -385,10 +383,8 @@ object SparkEntry {
       val qids = Seq(0L, 1L, 2L, 3L, 4L)
       val annScored = Similarity.annScored(emb, qids)
       Similarity.recallAudit(
-        Similarity.ivfExactTopK(emb, qids, k = 10, cents(dir, emb),
-          precomputedRadii = Some(radii(dir, emb)),
-          precomputedSeeds = Some(seeds(dir, emb, qids, 10)),
-          precomputedQVecs = Some(qvecs(dir, emb, qids))),
+        Similarity.ivfExactTopK(emb, k = 10, cents(dir, emb), radii(dir, emb),
+          seeds(dir, emb, qids, 10), qvecs(dir, emb, qids)),
         Similarity.topKPerQuery(annScored, 10),
         annScored, emb, qids, k = 10)
     }),
@@ -403,10 +399,8 @@ object SparkEntry {
       // identical subtrees let AQE reuse the exchange instead of re-scoring
       val scored = Similarity.ivfScored(emb, qids, c)
       Similarity.recallAudit(
-        Similarity.ivfExactTopK(emb, qids, k = 10, c,
-          precomputedRadii = Some(radii(dir, emb)),
-          precomputedSeeds = Some(seeds(dir, emb, qids, 10)),
-          precomputedQVecs = Some(qvecs(dir, emb, qids))),
+        Similarity.ivfExactTopK(emb, k = 10, c, radii(dir, emb),
+          seeds(dir, emb, qids, 10), qvecs(dir, emb, qids)),
         Similarity.topKPerQuery(scored, 10),
         scored, emb, qids, k = 10)
     }),
@@ -433,14 +427,11 @@ object SparkEntry {
       // the PQ scoring scan once per invocation instead of once per consumer
       val books = ArtifactStore.memo(s, embT(dir), "pq_codebooks_m4_k16_i2")(
         Similarity.trainPqCodebooks(emb, m = 4, k = 16, iters = 2))
-      val shortlist = Similarity.pqShortlist(emb, qids, books, l = 50,
-        precomputedQVecs = Some(qvecs(dir, emb, qids)))
+      val shortlist = Similarity.pqShortlist(emb, qids, books, qvecs(dir, emb, qids), l = 50)
         .localCheckpoint()
       Similarity.recallAudit(
-        Similarity.ivfExactTopK(emb, qids, k = 10, cents(dir, emb),
-          precomputedRadii = Some(radii(dir, emb)),
-          precomputedSeeds = Some(seeds(dir, emb, qids, 10)),
-          precomputedQVecs = Some(qvecs(dir, emb, qids))),
+        Similarity.ivfExactTopK(emb, k = 10, cents(dir, emb), radii(dir, emb),
+          seeds(dir, emb, qids, 10), qvecs(dir, emb, qids)),
         Similarity.rerankExact(emb, shortlist, qids, k = 10),
         shortlist, emb, qids, k = 10)
     }),
@@ -829,8 +820,7 @@ object SparkEntry {
     // means, sequential double distance folds, ties to the lowest cell)
     "q_embed_clusters" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.kmeansAssignments(emb, k = 8, iters = 3,
-        precomputedCentroids = Some(kcents(dir, emb)))
+      Similarity.kmeansAssignments(emb, kcents(dir, emb))
     }),
     // fine-partition seed routing — the k > 64 branch of the two-level
     // centroid kernel under the oracle gate (r10 verdict task 3: at gate
@@ -844,8 +834,10 @@ object SparkEntry {
     // oracle replays that arithmetic step for step (sequential double
     // means over members in ascending cell order, strict-less ties to the
     // lowest id at every argmin) and FAILS if the routing drifts
-    "q_embed_route_fine" -> ((s, dir) =>
-      Similarity.kmeansAssignments(Tables.embeddings(s, dir), k = 80, iters = 0)),
+    "q_embed_route_fine" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 80, iters = 0))
+    }),
     // SemDeDup: the full semantic-dedup composition — k-means cells (k
     // scaled ∝ N/250, the Abbas-et-al. regime; 8 at every gate sf) +
     // WITHIN-CELL exact cosine ε-pairs → min-id dominance keep/drop per
@@ -857,8 +849,7 @@ object SparkEntry {
     "q_pipeline_semdedup" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val k = semdedupK(embCount(dir, emb))
-      val asg = Similarity.kmeansAssignments(emb, k = k, iters = 3,
-        precomputedCentroids = Some(kcents(dir, emb, k)))
+      val asg = Similarity.kmeansAssignments(emb, kcents(dir, emb, k))
         .select(col("vec_id"), col("cell"))
       // the PAIR SEARCH (the quadratic side) runs on map-side cells (r16);
       // asg still feeds semDedupKeep's per-vector keep/drop joins
@@ -870,8 +861,7 @@ object SparkEntry {
     // purity, decimal-exact mean distance-to-centroid
     "q_embed_cluster_profile" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.kmeansProfile(emb, k = 8, iters = 3,
-        precomputedCentroids = Some(kcents(dir, emb)))
+      Similarity.kmeansProfile(emb, kcents(dir, emb))
     }),
     // cluster-balanced curation sample: cap every semantic cluster at a
     // fixed quota by deterministic md5 rank (bounded per-cell heaps, no
@@ -880,8 +870,7 @@ object SparkEntry {
     // survive whole, dominant cells are capped
     "q_sample_clusters" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val asg = Similarity.kmeansAssignments(emb, k = 8, iters = 3,
-        precomputedCentroids = Some(kcents(dir, emb)))
+      val asg = Similarity.kmeansAssignments(emb, kcents(dir, emb))
         .select("vec_id", "label", "cell")
       Sampling.stratifiedSampleBounded(asg, "cell", "vec_id", quota = 24)
     }),
@@ -1170,7 +1159,7 @@ object SparkEntry {
     "q_similarity_negatives" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.hardNegativesPruned(emb, Seq(0L, 1L, 2L, 3L, 4L), k = 10,
-        cents(dir, emb), precomputedRadii = Some(radii(dir, emb)))
+        cents(dir, emb), radii(dir, emb))
     }),
     // per-customer rolling order-history features (sequence index, lag
     // price, gap, trailing-3 spend, lifetime spend): ONE window spec — a

@@ -44,19 +44,14 @@ object StreamingBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = GraftSession.cpus
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val spark = GraftSession.builder(cpus, shufflePartitions).getOrCreate()
 
     val names = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSeq).getOrElse(DefaultQueries)
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    import Json.{quote => q}
     val errors = scala.collection.mutable.Map.empty[String, String]
     val heapGb = Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024)
     val config = s"""{"cpus":${q(cpus)},"shuffle_partitions":${q(shufflePartitions)},""" +

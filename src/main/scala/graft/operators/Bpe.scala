@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Encoding at scale: real tokenizer runtimes memoize word → tokens; here
   * the memo IS the model artifact (type-level tokenization of the training
-  * vocabulary), applied as a broadcast hash join against the exploded words
-  * — per-doc cost is split + join probe + ordered reassembly, no shuffle
-  * beyond the final per-doc aggregate, and the memo is bounded by vocabCap
+  * vocabulary), applied map-side by the compiled
+  * [[graft.functions.BpeMemoKernel]] — per-doc cost is split + one memo
+  * lookup per word, no shuffle, and the memo is bounded by vocabCap
   * regardless of corpus size. Out-of-vocabulary words take an explicit
   * `<unk>` token (the capped-vocab policy; `encodeWord` remains exact for
   * any string and is what a memo-miss fallback pass would run).
@@ -271,9 +271,7 @@ object Bpe {
     * collect_list/array_sort reassembly shuffled one struct row per corpus
     * WORD into a doc-keyed aggregate (measured at sf10: 27.5M exploded
     * rows, a 2.76 GB exchange) to rebuild an order the scan already had.
-    * Zero-word documents are absent, exactly like the aggregate form
-    * ([[encodeComposed]] — kept as the executable semantics,
-    * differential-tested in BpeSpec).
+    * Zero-word documents are absent.
     */
   def encode(docs: DataFrame, textCol: String, model: Model): DataFrame = {
     val kernel = memoKernel(model)
@@ -298,36 +296,6 @@ object Bpe {
     val entries = model.memo.toSeq.sortBy(_._1)
     new graft.functions.BpeMemoKernel(
       entries.map(_._1).toArray, entries.map(_._2.toArray).toArray)
-  }
-
-  /** The aggregate (explode → broadcast memo join → collect/sort/flatten)
-    * form of [[encode]] — the executable definition the map-side kernel is
-    * differential-tested against; spec-side only since r16.
-    */
-  def encodeComposed(docs: DataFrame, textCol: String, model: Model): DataFrame = {
-    val spark = docs.sparkSession
-    import org.apache.spark.sql.types._
-    val memoSchema = StructType(Seq(
-      StructField("w", StringType, nullable = false),
-      StructField("toks", ArrayType(StringType, containsNull = false), nullable = false)))
-    val memoRows = model.memo.toSeq.sortBy(_._1)
-      .map { case (w, t) => Row(w, t) }
-    val memo = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(memoRows: _*), memoSchema))
-    docs
-      .select(col("doc_id"), posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
-      .filter(length(col("w")) > 0)
-      .join(memo, Seq("w"), "left")
-      .select(col("doc_id"), col("pos"),
-        coalesce(col("toks"), array(lit("<unk>"))).as("toks"))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_words"),
-        sum(size(col("toks"))).as("n_tokens"),
-        md5(concat_ws(" ",
-          flatten(transform(
-            array_sort(collect_list(struct(col("pos"), col("toks")))),
-            x => x.getField("toks"))))).as("tokens_hash"))
   }
 
   /** Per-document subword token counts only — the packing/budgeting input

@@ -9,7 +9,7 @@ import graft.functions.NativeExpressions
   * reference extension (SURVEY §2.5 north star) over the `embeddings` table.
   *
   * Scoring runs on the native `vec_dot` kernel (floats widened to double
-  * element-wise, accumulated in array order), with norms precomputed ONCE
+  * element-wise, accumulated in array order), with norms computed ONCE
   * per row as scalars — so every scored pair costs one dot + one division,
   * and the scores are reproducible bit-for-bit against the DuckDB oracles,
   * which are written to the same arithmetic.
@@ -26,12 +26,18 @@ import graft.functions.NativeExpressions
   *     LSH — an equi-join on (table, bucket) keys — then re-ranks candidates
   *     exactly. Hyperplanes are deterministic pseudo-vectors derived from
   *     xxhash64, so results are stable across runs and partitionings.
-  *   - the SERVING exact paths ([[cosinePairsPruned]], [[ivfExactTopK]])
-  *     never plan an all-pairs join: IVF cells + the angular triangle
-  *     inequality prune cell pairs / per-query cells with proven-exact
-  *     bounds, then re-check candidates with the exact cosine. The
-  *     brute-force forms ([[cosinePairs]], [[bruteForceTopK]]) remain as
-  *     spec-side differential baselines only.
+  *   - the exact paths never plan an all-pairs join: IVF cells + the
+  *     angular triangle inequality prune cell pairs / per-query cells with
+  *     proven-exact bounds, then re-check candidates with the exact cosine.
+  *     [[ivfExactTopK]] and [[hardNegativesPruned]] serve registered
+  *     queries. The global forms [[cosinePairsPruned]] and [[knnJoinExact]]
+  *     are spec-side exactness baselines: the registered dedup and kNN-graph
+  *     queries search within k-means cells ([[cosinePairsWithinCells]],
+  *     [[knnJoinWithinCells]]). The brute-force forms ([[cosinePairs]],
+  *     [[bruteForceTopK]]) remain as spec-side differential baselines only.
+  *   - every trained model (centroids, cell radii, seed floors, query
+  *     vectors, codebooks) is a parameter of the operator that uses it; the
+  *     registry trains each once per table listing (`ArtifactStore.memo`).
   */
 object Similarity {
 
@@ -65,7 +71,7 @@ object Similarity {
   }
 
   /** Exact cosine top-k: score every (query, corpus) pair via a broadcast of
-    * the query set, then bounded top-k. Norms are precomputed once per row on
+    * the query set, then bounded top-k. Norms are computed once per row on
     * each side (same arithmetic as recomputing per pair — sqrt(dot(v,v)) —
     * just not repeated per pair). Scores are rounded to 6 dp before ranking
     * so that rank order (with the id tie-break) is engine-portable.
@@ -87,7 +93,7 @@ object Similarity {
 
   /** All pairs with cosine >= threshold — the exact ε-neighbor listing.
     * Inherently quadratic (no bucketing can be exact for arbitrary vectors);
-    * kept as the exactness baseline. Norms are precomputed ONCE per row as a
+    * kept as the exactness baseline. Norms are computed ONCE per row as a
     * scalar, so each pair costs one native float dot + a division — and the
     * cross join carries the original float arrays, not widened double copies
     * (the join materializes both sides per pair; halving the array bytes
@@ -312,21 +318,17 @@ object Similarity {
           .as("cang"))
   }
 
-  /** Per-cell angular radius r_c = max angle(member, centroid) — a bounded
-    * model artifact (≤ k rows), one hash aggregate.
-    */
-  private def cellRadii(assigned: DataFrame): Map[Int, Double] =
-    assigned.groupBy("cell").agg(max(col("cang")).as("r"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-
-  /** The per-cell angular radii as a cacheable trained artifact (≤ k
-    * doubles) — like the centroids themselves, computed once per corpus and
-    * reused by every pruned-exact query (callers pass it back via the
-    * `radii` parameter of [[cosinePairsPruned]] / [[ivfExactTopK]]).
+  /** Per-cell angular radius r_c = max angle(member, centroid) as a
+    * trained artifact (≤ k doubles, one hash aggregate) — like the centroids
+    * themselves, computed once per corpus and passed to every pruned-exact
+    * operator ([[cosinePairsPruned]], [[ivfExactTopK]], [[knnJoinExact]],
+    * [[hardNegativesPruned]]).
     */
   def trainCellRadii(
       embeddings: DataFrame, centroids: Array[Array[Float]]): Map[Int, Double] =
-    cellRadii(assignCells(embeddings, centroids))
+    assignCells(embeddings, centroids)
+      .groupBy("cell").agg(max(col("cang")).as("r"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
   /** The per-query seed floors δ_q (k-th best probed score; −2 when a query
     * has fewer than k seed candidates) as a cacheable trained artifact
@@ -362,11 +364,10 @@ object Similarity {
   def cosinePairsPruned(
       embeddings: DataFrame, threshold: Double,
       centroids: Array[Array[Float]],
-      precomputedRadii: Option[Map[Int, Double]] = None): DataFrame = {
+      radii: Map[Int, Double]): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val assigned = assignCells(embeddings, centroids)
-    val radii = precomputedRadii.getOrElse(cellRadii(assigned))
     val theta = math.acos(math.max(-1.0, math.min(1.0, threshold)))
     // directed admissible pairs: (i,j) AND (j,i) for i<j, (i,i) once —
     // after the join, vec_a < vec_b keeps each vector pair exactly once
@@ -394,12 +395,15 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("score"))
   }
 
-  /** Exact top-k with a non-quadratic plan — two bound-pruned phases:
+  /** Exact top-k with a non-quadratic plan — two bound-pruned phases over
+    * three trained artifacts: the cell `radii` ([[trainCellRadii]]), the
+    * query vectors `qvecs` ([[collectQueryVecs]]; they name the query set)
+    * and the `seeds`:
     *
-    *  1. seed floor: [[ivfTopK]] over the `nprobe` nearest cells gives each
-    *     query a LOWER bound δ_q = its k-th best candidate score (a ≤|q|-row
-    *     collect — bounded model artifact; δ_q = −∞ when a query has fewer
-    *     than k seed candidates).
+    *  1. seed floor ([[trainSeedFloors]]): [[ivfTopK]] over the `nprobe`
+    *     nearest cells gives each query a LOWER bound δ_q = its k-th best
+    *     candidate score (a ≤|q|-row collect; δ_q = −∞ when a query has
+    *     fewer than k seed candidates).
     *  2. cell pruning: cell c can hold a better-than-δ_q neighbor only if
     *     its best POSSIBLE score cos(max(0, angle(q, c_c) − r_c)) ≥ δ_q − ε
     *     (reverse triangle inequality). Each query probes exactly its
@@ -417,31 +421,20 @@ object Similarity {
     */
   def ivfExactTopK(
       embeddings: DataFrame,
-      queryIds: Seq[Long],
       k: Int,
       centroids: Array[Array[Float]],
-      nprobe: Int = 4,
-      precomputedRadii: Option[Map[Int, Double]] = None,
-      precomputedSeeds: Option[Map[Long, Double]] = None,
-      precomputedQVecs: Option[Seq[(Long, Array[Float])]] = None): DataFrame = {
+      radii: Map[Int, Double],
+      seeds: Map[Long, Double],
+      qvecs: Seq[(Long, Array[Float])]): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val assigned = assignCells(embeddings, centroids)
-    val radii = precomputedRadii.getOrElse(cellRadii(assigned))
-    // phase 1: per-query floor from the approximate probe (≤ |q| rows)
-    val seed = precomputedSeeds.getOrElse(
-      trainSeedFloors(embeddings, queryIds, k, centroids, nprobe))
-    // query vectors driver-side (|q| × dim — bounded artifact; callers that
-    // run several probe pipelines over the same query set pass them in so
-    // the collect job runs once, not once per pipeline — r15, guide §1.2)
-    val qVecs = precomputedQVecs.getOrElse(collectQueryVecs(embeddings, queryIds))
-      .toMap
     val margin = 2e-6 // 6-dp rounding (5e-7) + float slack, admit-only
     val probe = for {
-      (qid, qv) <- qVecs.toSeq.sortBy(_._1)
+      (qid, qv) <- qvecs.toMap.toSeq.sortBy(_._1)
       (cell, r) <- radii.toSeq.sortBy(_._1)
       best = math.cos(math.max(0.0, driverAngle(qv, centroids(cell)) - r))
-      if best >= seed.getOrElse(qid, -2.0) - margin
+      if best >= seeds.getOrElse(qid, -2.0) - margin
     } yield (qid, qv.toSeq, cell)
     val queries = broadcast(
       probe.toDF("query_id", "qv", "cell")
@@ -500,9 +493,8 @@ object Similarity {
   def knnJoinExact(
       embeddings: DataFrame, k: Int,
       centroids: Array[Array[Float]],
-      precomputedRadii: Option[Map[Int, Double]] = None): DataFrame = {
+      radii: Map[Int, Double]): DataFrame = {
     val assigned = assignCells(embeddings, centroids)
-    val radii = precomputedRadii.getOrElse(cellRadii(assigned))
     val nSide = assigned.select(col("vec_id").as("neighbor_id"),
       col("v").as("nv"), col("nrm").as("nn"), col("cell"))
     val probes = knnProbesFrom(assigned, k, centroids, radii)
@@ -521,11 +513,8 @@ object Similarity {
   def knnProbes(
       embeddings: DataFrame, k: Int,
       centroids: Array[Array[Float]],
-      precomputedRadii: Option[Map[Int, Double]] = None): DataFrame = {
-    val assigned = assignCells(embeddings, centroids)
-    knnProbesFrom(assigned, k, centroids,
-      precomputedRadii.getOrElse(cellRadii(assigned)))
-  }
+      radii: Map[Int, Double]): DataFrame =
+    knnProbesFrom(assignCells(embeddings, centroids), k, centroids, radii)
 
   /** Phases 1–2 of the exact self-KNN: own-cell seed floors, then map-side
     * triangle-inequality cell admission (see [[knnJoinExact]]'s scaladoc for
@@ -626,11 +615,11 @@ object Similarity {
   def hardNegativesPruned(
       embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       centroids: Array[Array[Float]],
-      precomputedRadii: Option[Map[Int, Double]] = None,
+      radii: Map[Int, Double],
       nprobe: Int = 4): DataFrame = {
     val corpus = negCorpus(embeddings, centroids)
     val queries = hardNegativeProbes(
-      embeddings, queryIds, k, centroids, precomputedRadii, nprobe)
+      embeddings, queryIds, k, centroids, radii, nprobe)
     val scored = corpus.join(queries, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id") &&
         col("n_label") =!= col("q_label"))
@@ -647,11 +636,10 @@ object Similarity {
   def hardNegativeProbes(
       embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       centroids: Array[Array[Float]],
-      precomputedRadii: Option[Map[Int, Double]] = None,
+      radii: Map[Int, Double],
       nprobe: Int = 4): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val radii = precomputedRadii.getOrElse(trainCellRadii(embeddings, centroids))
     // anchors are a training-batch-sized driver artifact (|q| × dim)
     val qVecs = embeddings.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id"), col("embedding"), col("label")).collect()
@@ -1066,11 +1054,9 @@ object Similarity {
     * the very end (nothing downstream consumes the rounded value).
     */
   def kmeansAssignments(
-      embeddings: DataFrame, k: Int = 8, iters: Int = 3,
-      precomputedCentroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val cents = precomputedCentroids.getOrElse(trainKmeans(embeddings, k, iters))
+      embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
     val nd = NativeExpressions.nearestCentroidDist(
-      col("embedding"), new NativeExpressions.DoubleCentroidIndex(cents))
+      col("embedding"), new NativeExpressions.DoubleCentroidIndex(centroids))
     embeddings
       .select(col("vec_id"), col("label"), nd.as("nd"))
       .select(
@@ -1078,32 +1064,6 @@ object Similarity {
         round(sqrt(col("nd.d2")), 6).as("dist"))
   }
 
-  /** Per-cluster curation profile over the final k-means assignment:
-    * size, majority label (ties to the lowest label), purity, and the
-    * decimal-exact mean distance-to-centroid — the "is this cluster one
-    * coherent topic or a junk drawer" signal a mixture-balancing pipeline
-    * reads before sampling per cluster. One (cell,label) hash-aggregate +
-    * one k-row reduction; empty cells simply have no row.
-    */
-  /** SemDeDup keep/drop decisions — the full semantic-dedup composition
-    * (Abbas et al.: cluster the embedding space, drop near-identical vectors
-    * within each cluster, keep one representative). Inputs are two already-
-    * verified artifacts: k-means [[kmeansAssignments]] cells and the exact
-    * cosine ε-pair list ([[cosinePairsPruned]] — IVF + triangle-pruned,
-    * identical to brute force). The keep rule is MIN-ID DOMINANCE, stated
-    * exactly: drop v iff some same-cell u < v has cos(u, v) ≥ the pair
-    * threshold. Deterministic, single-pass relational — no iteration, no
-    * driver loop — and coarser than connected-components-min only on chains
-    * whose middle link was itself dropped (documented choice: at 100 TB the
-    * dominance rule is one distinct + one anti-join over the pair list,
-    * while CC needs the label-propagation loop).
-    *
-    * Scale shape: pair list ⋈ assignments (two key equi-joins, pair-list-
-    * sized), one distinct over dominated ids, one left-anti-shaped join back
-    * to the corpus. Everything rides the already-pruned pair plan.
-    *
-    * Returns (vec_id, label, cell, keep).
-    */
   /** Exact cosine ε-pairs WITHIN cluster cells only — SemDeDup's candidate
     * generator, planned as the cluster-bounded self-join the algorithm is
     * DEFINED over (Abbas et al. compare embeddings within a k-means cluster,
@@ -1115,7 +1075,7 @@ object Similarity {
     * tens-of-thousands-of-clusters regime) the per-cell quadratic term is a
     * CONSTANT, making the whole composition linear in the corpus regardless
     * of geometry. Same score arithmetic as [[cosinePairs]]: one native float
-    * dot per candidate, norms precomputed per row, threshold on the
+    * dot per candidate, norms computed once per row, threshold on the
     * unrounded cosine, 6-dp round on output.
     */
   def cosinePairsWithinCells(
@@ -1162,15 +1122,6 @@ object Similarity {
       norm(col("embedding")).as("nrm"),
       nearestByDist2(col("embedding"), cents).as("cell"))
 
-  /** Every unordered same-cell pair scored EXACTLY ONCE (vec_a < vec_b, raw
-    * = unrounded cosine). The cell equi-join enumerates each unordered pair
-    * in both orders; keeping a < b halves the rows that reach the dot-product
-    * projection — the scoring arithmetic is symmetric bit-for-bit (IEEE
-    * multiplication commutes; [[NativeExpressions.vecDot]] accumulates in
-    * the same index order on either side), so consumers needing both
-    * directions mirror the scored row instead of re-scoring it
-    * ([[knnJoinWithinCells]]).
-    */
   /** Block-decomposition factor for the within-cell pair join: each side is
     * salted by hash(vec_id) % S and replicated S times, so one cell's m²
     * scoring work splits into S² independent blocks — (a, b) lands in block
@@ -1180,6 +1131,15 @@ object Similarity {
     */
   private val PairBlocks = 4
 
+  /** Every unordered same-cell pair scored EXACTLY ONCE (vec_a < vec_b, raw
+    * = unrounded cosine). The cell equi-join enumerates each unordered pair
+    * in both orders; keeping a < b halves the rows that reach the dot-product
+    * projection — the scoring arithmetic is symmetric bit-for-bit (IEEE
+    * multiplication commutes; [[NativeExpressions.vecDot]] accumulates in
+    * the same index order on either side), so consumers needing both
+    * directions mirror the scored row instead of re-scoring it
+    * ([[knnJoinWithinCells]]).
+    */
   private def pairsOnceWithinCells(sides0: DataFrame): DataFrame = {
     // Two measured pathologies at sf10 (plans/r16, OPTIMIZATION_r16.md):
     // (1) AQE sizes partitions by shuffle BYTES, but this exchange feeds a
@@ -1264,6 +1224,25 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
+  /** SemDeDup keep/drop decisions — the full semantic-dedup composition
+    * (Abbas et al.: cluster the embedding space, drop near-identical vectors
+    * within each cluster, keep one representative). Inputs are two already-
+    * verified artifacts: k-means [[kmeansAssignments]] cells and the exact
+    * cosine ε-pair list ([[cosinePairsPruned]] — IVF + triangle-pruned,
+    * identical to brute force). The keep rule is MIN-ID DOMINANCE, stated
+    * exactly: drop v iff some same-cell u < v has cos(u, v) ≥ the pair
+    * threshold. Deterministic, single-pass relational — no iteration, no
+    * driver loop — and coarser than connected-components-min only on chains
+    * whose middle link was itself dropped (documented choice: at 100 TB the
+    * dominance rule is one distinct + one anti-join over the pair list,
+    * while CC needs the label-propagation loop).
+    *
+    * Scale shape: pair list ⋈ assignments (two key equi-joins, pair-list-
+    * sized), one distinct over dominated ids, one left-anti-shaped join back
+    * to the corpus. Everything rides the already-pruned pair plan.
+    *
+    * Returns (vec_id, label, cell, keep).
+    */
   def semDedupKeep(
       embeddings: DataFrame, assignments: DataFrame, pairs: DataFrame): DataFrame = {
     val sameCell = pairs
@@ -1281,10 +1260,16 @@ object Similarity {
         col("dom").isNull.as("keep"))
   }
 
+  /** Per-cluster curation profile over the final k-means assignment:
+    * size, majority label (ties to the lowest label), purity, and the
+    * decimal-exact mean distance-to-centroid — the "is this cluster one
+    * coherent topic or a junk drawer" signal a mixture-balancing pipeline
+    * reads before sampling per cluster. One (cell,label) hash-aggregate +
+    * one k-row reduction; empty cells simply have no row.
+    */
   def kmeansProfile(
-      embeddings: DataFrame, k: Int = 8, iters: Int = 3,
-      precomputedCentroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val a = kmeansAssignments(embeddings, k, iters, precomputedCentroids)
+      embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
+    val a = kmeansAssignments(embeddings, centroids)
     val byLabel = a.groupBy("cell", "label").agg(
       count(lit(1)).as("n"),
       sum(col("dist").cast("decimal(18,6)")).as("dist_sum"))
@@ -1534,19 +1519,6 @@ object Similarity {
       (Seq(col("vec_id"), col("label")) ++ codeCols :+ err): _*)
   }
 
-  /** ADC shortlist: per query, the `l` corpus vectors with the highest
-    * APPROXIMATE cosine — dot(q, x) estimated as the sum of per-subspace
-    * lookup-table entries lut_s[code_s(x)] (the m×k table of
-    * query-subvector · codebook-centroid dots, computed once per query on
-    * the driver), divided by ‖q‖ and the EXACT stored ‖x‖ (the one extra
-    * scalar per vector that makes IP-trained PQ serve cosine — codes alone
-    * cannot carry the norm).
-    *
-    * Scale shape: the scan touches only the m code columns and the norm —
-    * never the float vectors — as one map-only pass per query branch over
-    * the shared encode, and the per-query top-l is the size-capped
-    * [[graft.functions.BoundedTopKAgg]]; shuffle ≤ queries × partitions × l.
-    */
   /** The |q|-row driver-side query-vector collect every probe pipeline
     * needs — exposed so one collect can feed several pipelines over the
     * same query set (ivf-exact, PQ shortlist, re-rank) instead of each
@@ -1560,12 +1532,26 @@ object Similarity {
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).toSeq
 
+  /** ADC shortlist: per query, the `l` corpus vectors with the highest
+    * APPROXIMATE cosine — dot(q, x) estimated as the sum of per-subspace
+    * lookup-table entries lut_s[code_s(x)] (the m×k table of
+    * query-subvector · codebook-centroid dots, computed once per query on
+    * the driver), divided by ‖q‖ and the EXACT stored ‖x‖ (the one extra
+    * scalar per vector that makes IP-trained PQ serve cosine — codes alone
+    * cannot carry the norm). `qvecs` ([[collectQueryVecs]]) must hold a
+    * vector for every id in `queryIds`.
+    *
+    * Scale shape: the scan touches only the m code columns and the norm —
+    * never the float vectors — as one map-only pass per query branch over
+    * the shared encode, and the per-query top-l is the size-capped
+    * [[graft.functions.BoundedTopKAgg]]; shuffle ≤ queries × partitions × l.
+    */
   def pqShortlist(
       embeddings: DataFrame,
       queryIds: Seq[Long],
       codebooks: Array[Array[Array[Double]]],
-      l: Int = 50,
-      precomputedQVecs: Option[Seq[(Long, Array[Float])]] = None): DataFrame = {
+      qvecs: Seq[(Long, Array[Float])],
+      l: Int = 50): DataFrame = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     val codeCols = (0 until m).map { s =>
@@ -1576,15 +1562,14 @@ object Similarity {
     val base = embeddings.select(
       (Seq(col("vec_id").as("neighbor_id"),
         norm(col("embedding")).as("nn")) ++ codeCols): _*)
-    val qvecs = precomputedQVecs.getOrElse(collectQueryVecs(embeddings, queryIds))
-      .map { case (id, v) => id -> v.map(_.toDouble) }
     require(qvecs.length == queryIds.distinct.length,
       s"pqShortlist: ${queryIds.distinct.length} query ids, found ${qvecs.length}")
     // ONE scan for all queries: the code columns are query-INDEPENDENT, so
     // the per-query scores stack as an inline exploded array over the same
     // computed codes — where a union of per-query branches would re-scan
     // the corpus and recompute every m×k code distance |q| times
-    val perQuery = qvecs.map { case (qid, q) =>
+    val perQuery = qvecs.map { case (qid, v) =>
+      val q = v.map(_.toDouble)
       val qn = math.sqrt(q.map(x => x * x).sum)
       val approxDot = (0 until m).map { s =>
         val lut = codebooks(s).map { c =>

@@ -212,13 +212,6 @@ object TextAnalysis {
       .filter(col("matched_ngrams") > 0)
   }
 
-  /** Convenience overload: train on `labeled`, then score `docs`. */
-  def languageId(docs: DataFrame, labeled: DataFrame, profileSize: Int): DataFrame =
-    languageId(docs, trainLanguageProfiles(labeled, profileSize))
-
-  def languageId(docs: DataFrame, labeled: DataFrame): DataFrame =
-    languageId(docs, labeled, 50)
-
   /** Train per-language trigram profiles (see [[languageId]]): the
     * `profileSize` most frequent trigrams per language, ties broken by
     * trigram; languages sorted for determinism (profile-set order does not

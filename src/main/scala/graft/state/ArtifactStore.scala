@@ -23,13 +23,12 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
   *
   * [[memo]] is the one entry point. It keeps one in-JVM entry per (table,
   * name), valid for one fingerprint; behind it, [[loadOrTrain]] persists the
-  * value at `<root>/<md5(table|fingerprint)>/<name>`, where root resolves
-  * from the session conf `spark.graft.artifacts.dir`, then the env
-  * `SPARK_GRAFT_ARTIFACTS`, then `target/artifacts`. A table rewritten under
-  * the same path has a new fingerprint, so it trains a new artifact in this
-  * JVM and in every later one. Artifact NAMES embed their training
-  * parameters (k, iters, query ids), so a parameter change trains a NEW
-  * artifact rather than silently serving a stale one.
+  * value at `<root>/<md5(table|fingerprint)>/<name>`, where root is the
+  * session conf `spark.graft.artifacts.dir`, else `target/artifacts`. A
+  * table rewritten under the same path has a new fingerprint, so it trains
+  * a new artifact in this JVM and in every later one. Artifact NAMES embed
+  * their training parameters (k, iters, query ids), so a parameter change
+  * trains a NEW artifact rather than silently serving a stale one.
   *
   * The codec is Spark's own: the value is written as a one-row `Dataset[T]`
   * through `ExpressionEncoder[T]` and read back with `.as[T].head()`, so
@@ -51,9 +50,7 @@ object ArtifactStore {
   val trainsThisJvm = new java.util.concurrent.atomic.AtomicLong(0)
 
   def root(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.artifacts.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_ARTIFACTS"))
-      .getOrElse("target/artifacts")
+    spark.conf.get("spark.graft.artifacts.dir", "target/artifacts")
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

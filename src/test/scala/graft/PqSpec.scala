@@ -71,7 +71,8 @@ class PqSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val qids = Seq(0L, 1L, 2L, 3L, 4L)
     val books = Similarity.trainPqCodebooks(emb, m = 4, k = 16, iters = 2)
-    val shortlist = Similarity.pqShortlist(emb, qids, books, l = 50)
+    val shortlist = Similarity.pqShortlist(emb, qids, books,
+      Similarity.collectQueryVecs(emb, qids), l = 50)
     val rerank = Similarity.rerankExact(emb, shortlist, qids, k = 10)
     val plan = rerank.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
@@ -92,7 +93,8 @@ class PqSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val qids = Seq(0L, 1L)
     val books = Similarity.trainPqCodebooks(emb, m = 4, k = 16, iters = 2)
-    val sl = Similarity.pqShortlist(emb, qids, books, l = 1000000)
+    val sl = Similarity.pqShortlist(emb, qids, books,
+      Similarity.collectQueryVecs(emb, qids), l = 1000000)
     val counts = sl.groupBy("query_id").count().as[(Long, Long)].collect().toMap
     val n = emb.count()
     assert(counts.values.forall(_ == n - 1), s"per-query candidate counts: $counts")
@@ -106,7 +108,8 @@ class PqSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val qids = Seq(0L, 1L, 2L, 3L, 4L)
     val books = Similarity.trainPqCodebooks(emb, m = 4, k = 16, iters = 2)
-    val plan = Similarity.pqShortlist(emb, qids, books, l = 50)
+    val plan = Similarity.pqShortlist(emb, qids, books,
+      Similarity.collectQueryVecs(emb, qids), l = 50)
       .queryExecution.executedPlan.toString
     val scans = "Scan parquet".r.findAllIn(plan).size
     assert(scans == 1, s"expected 1 corpus scan, plan has $scans:\n$plan")

@@ -139,7 +139,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("pruned exact pairs == brute-force pairs on the real corpus (plan is equi-join)") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
-    val pruned = Similarity.cosinePairsPruned(emb, 0.45, centroids)
+    val pruned = Similarity.cosinePairsPruned(emb, 0.45, centroids,
+      Similarity.trainCellRadii(emb, centroids))
 
     val plan = pruned.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
@@ -163,7 +164,8 @@ class SimilaritySpec extends AnyFunSuite {
     val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
     val got = graft.operators.Dedup.nearDedupLabels(
       emb.select(col("vec_id")),
-      Similarity.cosinePairsPruned(emb, 0.45, centroids)
+      Similarity.cosinePairsPruned(emb, 0.45, centroids,
+          Similarity.trainCellRadii(emb, centroids))
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
       idCol = "vec_id")
       .as[(Long, Long)].collect().toMap
@@ -194,7 +196,8 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val df = vecs(rows: _*)
     val centroids = Similarity.trainIvfCentroids(df, k = 4, iters = 5)
-    val pruned = Similarity.cosinePairsPruned(df, 0.9, centroids)
+    val pruned = Similarity.cosinePairsPruned(df, 0.9, centroids,
+      Similarity.trainCellRadii(df, centroids))
     val brute = Similarity.cosinePairs(df, 0.9)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val got = pruned.select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
@@ -208,7 +211,10 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val queryIds = Seq(0L, 1L, 2L, 3L, 4L)
     val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
-    val exact = Similarity.ivfExactTopK(emb, queryIds, k = 10, centroids)
+    val exact = Similarity.ivfExactTopK(emb, k = 10, centroids,
+      Similarity.trainCellRadii(emb, centroids),
+      Similarity.trainSeedFloors(emb, queryIds, 10, centroids),
+      Similarity.collectQueryVecs(emb, queryIds))
 
     val plan = exact.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
@@ -228,7 +234,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("knnJoinExact == bruteForceKnnJoin on the real corpus (plan is equi-join)") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
-    val knn = Similarity.knnJoinExact(emb, k = 5, centroids)
+    val knn = Similarity.knnJoinExact(emb, k = 5, centroids,
+      Similarity.trainCellRadii(emb, centroids))
 
     val plan = knn.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
@@ -256,7 +263,7 @@ class SimilaritySpec extends AnyFunSuite {
     val nCells = math.min(128, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
     val centroids = Similarity.trainIvfCentroids(emb, k = nCells)
     val radii = Similarity.trainCellRadii(emb, centroids)
-    val probed = Similarity.knnProbes(emb, k = 5, centroids, Some(radii)).count()
+    val probed = Similarity.knnProbes(emb, k = 5, centroids, radii).count()
     val full = n * nCells
     assert(probed < 0.2 * full,
       s"prune did not engage on clustered data: $probed probes of $full (N x cells)")
@@ -264,7 +271,7 @@ class SimilaritySpec extends AnyFunSuite {
     val brute = Similarity.bruteForceKnnJoin(emb, k = 5)
       .select("query_id", "rank", "neighbor_id", "score")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val got = Similarity.knnJoinExact(emb, k = 5, centroids, Some(radii))
+    val got = Similarity.knnJoinExact(emb, k = 5, centroids, radii)
       .select("query_id", "rank", "neighbor_id", "score")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(got == brute, s"missing=${brute -- got}, extra=${got -- brute}")
@@ -289,7 +296,7 @@ class SimilaritySpec extends AnyFunSuite {
     // exactness on the clustered corpus as well
     val brute = Similarity.cosinePairs(emb, 0.9)
       .select("vec_a", "vec_b", "score").as[(Long, Long, Double)].collect().toSet
-    val got = Similarity.cosinePairsPruned(emb, 0.9, centroids, Some(radii))
+    val got = Similarity.cosinePairsPruned(emb, 0.9, centroids, radii)
       .select("vec_a", "vec_b", "score").as[(Long, Long, Double)].collect().toSet
     assert(got == brute,
       s"pruned pairs must be EXACT: missing=${brute -- got}, extra=${got -- brute}")
@@ -308,7 +315,8 @@ class SimilaritySpec extends AnyFunSuite {
     val brute = Similarity.bruteForceKnnJoin(df, k = 2)
       .select("query_id", "rank", "neighbor_id", "score")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val got = Similarity.knnJoinExact(df, k = 2, centroids)
+    val got = Similarity.knnJoinExact(df, k = 2, centroids,
+      Similarity.trainCellRadii(df, centroids))
       .select("query_id", "rank", "neighbor_id", "score")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(got == brute, s"missing=${brute -- got}, extra=${got -- brute}")
@@ -406,7 +414,7 @@ class SimilaritySpec extends AnyFunSuite {
     val df = lvecs(
       (0L, 0, Seq(10f, 10f)), (2L, 0, Seq(11f, 10f)), (4L, 0, Seq(10f, 11f)),
       (1L, 1, Seq(-10f, -10f)), (3L, 1, Seq(-11f, -10f)), (5L, 1, Seq(-10f, -11f)))
-    val out = Similarity.kmeansAssignments(df, k = 2, iters = 3)
+    val out = Similarity.kmeansAssignments(df, Similarity.trainKmeans(df, k = 2, iters = 3))
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     // seeds: vec 0 (blob A) -> cell 0, vec 1 (blob B) -> cell 1
     assert(Seq(0L, 2L, 4L).forall(out(_) == 0), out.toSeq.sorted)
@@ -415,9 +423,10 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("kmeans: assignments invariant under repartitioning (decimal means)") {
     val emb = Tables.embeddings(spark, sfDir)
-    val a = Similarity.kmeansAssignments(emb, k = 4, iters = 2)
+    val a = Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 4, iters = 2))
       .select("vec_id", "cell", "dist").as[(Long, Int, Double)].collect().toSet
-    val b = Similarity.kmeansAssignments(emb.repartition(7), k = 4, iters = 2)
+    val emb7 = emb.repartition(7)
+    val b = Similarity.kmeansAssignments(emb7, Similarity.trainKmeans(emb7, k = 4, iters = 2))
       .select("vec_id", "cell", "dist").as[(Long, Int, Double)].collect().toSet
     assert(a == b)
     assert(a.size == emb.count())
@@ -432,7 +441,7 @@ class SimilaritySpec extends AnyFunSuite {
     // back — the retained centroid REVIVES, textbook Lloyd
     val df = lvecs(
       (0L, 0, Seq(1f, 1f)), (1L, 0, Seq(1f, 1f)), (2L, 0, Seq(1.5f, 1f)))
-    val out = Similarity.kmeansAssignments(df, k = 2, iters = 2)
+    val out = Similarity.kmeansAssignments(df, Similarity.trainKmeans(df, k = 2, iters = 2))
       .select("vec_id", "cell", "dist").as[(Long, Int, Double)].collect()
       .sortBy(_._1)
     assert(out.map(_._2).toSeq == Seq(1, 1, 0), out.toSeq)
@@ -443,7 +452,7 @@ class SimilaritySpec extends AnyFunSuite {
     val df = lvecs(
       (0L, 7, Seq(10f, 10f)), (2L, 7, Seq(11f, 10f)), (4L, 3, Seq(10f, 11f)),
       (1L, 5, Seq(-10f, -10f)), (3L, 5, Seq(-11f, -10f)))
-    val p = Similarity.kmeansProfile(df, k = 2, iters = 2)
+    val p = Similarity.kmeansProfile(df, Similarity.trainKmeans(df, k = 2, iters = 2))
       .select("cell", "n_vecs", "majority_label", "n_majority", "purity")
       .as[(Int, Long, Int, Long, Double)].collect().sortBy(_._1)
     assert(p.toSeq == Seq((0, 3L, 7, 2L, 0.666667), (1, 2L, 5, 2L, 1.0)))
@@ -452,14 +461,14 @@ class SimilaritySpec extends AnyFunSuite {
     val tied = lvecs(
       (0L, 9, Seq(1f, 0f)), (2L, 4, Seq(1f, 0.1f)),
       (4L, 9, Seq(1f, -0.1f)), (6L, 4, Seq(1f, 0.2f)))
-    val mj = Similarity.kmeansProfile(tied, k = 1, iters = 1)
+    val mj = Similarity.kmeansProfile(tied, Similarity.trainKmeans(tied, k = 1, iters = 1))
       .select("majority_label").as[Int].collect()
     assert(mj.toSeq == Seq(4))
   }
 
   test("cluster-balanced sample: quota caps each cell, small cells kept whole") {
     val emb = Tables.embeddings(spark, sfDir)
-    val asg = Similarity.kmeansAssignments(emb, k = 4, iters = 2)
+    val asg = Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 4, iters = 2))
       .select("vec_id", "label", "cell")
     val cellSizes = asg.groupBy("cell").count()
       .as[(Int, Long)].collect().toMap
@@ -535,7 +544,8 @@ class SimilaritySpec extends AnyFunSuite {
     val qids = Seq(0L, 1L, 2L)
     val full = Similarity.hardNegatives(emb, qids, k = 5, centroids)
       .as[(Long, Int, Int, Long, Int, Double)].collect().toSet
-    val pruned = Similarity.hardNegativesPruned(emb, qids, k = 5, centroids)
+    val pruned = Similarity.hardNegativesPruned(emb, qids, k = 5, centroids,
+      Similarity.trainCellRadii(emb, centroids))
       .as[(Long, Int, Int, Long, Int, Double)].collect().toSet
     assert(pruned == full,
       s"pruned negatives must be exact: missing=${full -- pruned}, extra=${pruned -- full}")
@@ -560,14 +570,14 @@ class SimilaritySpec extends AnyFunSuite {
     val cCents = Similarity.trainIvfCentroids(cl, k = 8, iters = 5)
     val cRadii = Similarity.trainCellRadii(cl, cCents)
     val probes = Similarity.hardNegativeProbes(
-      cl, cQids, k = 5, cCents, Some(cRadii)).count()
+      cl, cQids, k = 5, cCents, cRadii).count()
     val fullCoverage = cQids.size.toLong * cCents.length
     assert(probes < 0.5 * fullCoverage,
       s"negative-mining prune did not engage: $probes probes of $fullCoverage")
     val clFull = Similarity.hardNegatives(cl, cQids, k = 5, cCents)
       .as[(Long, Int, Int, Long, Int, Double)].collect().toSet
     val clPruned = Similarity.hardNegativesPruned(
-      cl, cQids, k = 5, cCents, Some(cRadii))
+      cl, cQids, k = 5, cCents, cRadii)
       .as[(Long, Int, Int, Long, Int, Double)].collect().toSet
     assert(clPruned == clFull,
       s"missing=${clFull -- clPruned}, extra=${clPruned -- clFull}")
@@ -604,7 +614,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("knnJoinWithinCells == brute-force top-k over the same-cell candidate set") {
     val emb = Tables.embeddings(spark, sfDir)
-    val asg = Similarity.kmeansAssignments(emb, k = 8, iters = 3)
+    val asg = Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 8, iters = 3))
       .select(col("vec_id"), col("cell"))
     val got = Similarity.knnJoinWithinCells(emb, asg, k = 5)
     // brute-force twin: all same-cell ordered pairs scored, window-ranked
@@ -634,7 +644,7 @@ class SimilaritySpec extends AnyFunSuite {
     // subset of the global ε-pair list (the composition's previous input),
     // on the real corpus with a real k-means assignment
     val emb = Tables.embeddings(spark, sfDir)
-    val asg = Similarity.kmeansAssignments(emb, k = 8, iters = 3)
+    val asg = Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 8, iters = 3))
       .select(col("vec_id"), col("cell"))
     val within = Similarity.cosinePairsWithinCells(emb, asg, threshold = 0.45)
     val global = Similarity.cosinePairs(emb, threshold = 0.45)
@@ -654,8 +664,7 @@ class SimilaritySpec extends AnyFunSuite {
     // mirroring relies on bit-exact cosine symmetry)
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Similarity.trainKmeans(emb, k = 8, iters = 3)
-    val asg = Similarity.kmeansAssignments(emb, k = 8, iters = 3,
-      precomputedCentroids = Some(cents))
+    val asg = Similarity.kmeansAssignments(emb, cents)
       .select(col("vec_id"), col("cell"))
     val knnJoin = Similarity.knnJoinWithinCells(emb, asg, k = 5)
     val knnCents = Similarity.knnJoinWithinCells(emb, cents, k = 5)

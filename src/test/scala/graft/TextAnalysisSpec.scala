@@ -63,7 +63,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (4L, "zyzy zzyy zzzy yyzz zyyz", "zz")
     ).toDF("doc_id", "text", "lang")
     val unknown = corpus((10L, "aaba abab aaab"), (11L, "zzyz zyzz yzzy"))
-    val pred = TextAnalysis.languageId(unknown, labeled)
+    val pred = TextAnalysis.languageId(unknown, TextAnalysis.trainLanguageProfiles(labeled))
       .select("doc_id", "predicted_lang").as[(Long, String)].collect().toMap
     assert(pred(10L) == "aa")
     assert(pred(11L) == "zz")
@@ -71,7 +71,7 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("languageId over the real corpus predicts a language for every doc") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val preds = TextAnalysis.languageId(docs, docs)
+    val preds = TextAnalysis.languageId(docs, TextAnalysis.trainLanguageProfiles(docs))
     assert(preds.count() == docs.count())
     assert(preds.filter(col("predicted_lang").isNull).count() == 0)
   }
