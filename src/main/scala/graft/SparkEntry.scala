@@ -306,8 +306,7 @@ object SparkEntry {
     "q_dedup_survivors" -> ((s, dir) => textLabels(s, dir)),
     // simhash near-dup: banded fingerprint join (pigeonhole-complete recall)
     // over md5-derived 60-bit portable fingerprints — the oracle replays the
-    // whole vote/band/hamming pipeline in SQL; the xxhash64 native-kernel
-    // variant stays spec-pinned (DedupSpec) as the scale path
+    // whole vote/band/hamming pipeline in SQL
     "q_dedup_simhash" -> ((s, dir) =>
       Dedup.simhashNearDuplicatesPortable(Tables.documents(s, dir), maxHamming = 3)),
     // span-level exact dedup: verbatim 8-word windows repeated across docs —
@@ -350,22 +349,17 @@ object SparkEntry {
     // embedding-space dedup survivors: connected-components min-label
     // propagation (same as q_dedup_survivors) over WITHIN-CELL ε-pairs
     // (k-means cells, k ∝ N/250), so candidate generation is Σ_c m_c² ≈
-    // N·250 and assignment ~2√k per row — linear end to end. Re-planned in
-    // round 11 (r10 verdict task 2): the registered plan previously ran the
-    // GLOBAL pruned pair search (cosinePairsPruned), which the r10 decade
-    // study measured superlinear on any geometry (9.7×/decade at constant
-    // duplicate density) — that exact global closure is now spec-side only
-    // (SimilaritySpec "global ε-closure labels"), the same demotion the
-    // other exact embedding forms got. Semantics trade, stated: near-dup
-    // groups straddling a cell boundary are split (the SemDeDup trade); the
-    // oracle replays the clustering AND the closure over the cell-restricted
-    // pair graph
+    // N·250 and assignment ~2√k per row — linear end to end (a global
+    // exact pair search measured superlinear on any geometry, 9.7×/decade
+    // at constant duplicate density; SCALING.md). Semantics trade, stated:
+    // near-dup groups straddling a cell boundary are split (the SemDeDup
+    // trade); the oracle replays the clustering AND the closure over the
+    // cell-restricted pair graph
     "q_similarity_dedup" -> ((s, dir) =>
       ArtifactStore.sessionMemo(s, embT(dir), "semdedup_labels_t0.45") {
         val emb = Tables.embeddings(s, dir)
         val k = semdedupK(embCount(dir, emb))
-        // centroid-model pair search (r16): cells computed map-side from the
-        // trained matrix — the kmeansAssignments-join-back frame is gone
+        // cells computed map-side from the trained centroid matrix
         Dedup.nearDedupLabels(
           emb.select(col("vec_id")),
           Similarity.cosinePairsWithinCells(emb, kcents(dir, emb, k),
@@ -437,20 +431,18 @@ object SparkEntry {
     }),
     // cluster-bounded self-KNN (the kNN-graph primitive, REGISTERED in its
     // linear form): top-5 neighbors within each vector's k-means cell, the
-    // cluster count scaled ∝ N/250 like SemDeDup's. The UNBOUNDED exact
-    // self-KNN (knnJoinExact — IVF seed floors + triangle pruning) is
-    // spec-side only: the measured salted decades (r9: 17.2×/decade capped,
-    // r10: 21×/decade uncapped at √N cells; 7.2×/decade even on the
-    // clusterized twin, whose geometry fixes the cluster count so clusters
-    // grow ∝ N) prove no exact unbounded form is linear once neighbor
-    // structure densifies with N — bounding the candidate set IS the
-    // operator a 100 TB kNN-graph build runs. Oracle: k-means replay +
-    // within-cell brute force.
+    // cluster count scaled ∝ N/250 like SemDeDup's. An UNBOUNDED exact
+    // self-KNN measured superlinear in the salted decades (r9: 17.2×/decade
+    // capped, r10: 21×/decade uncapped at √N cells; 7.2×/decade even on a
+    // clustered corpus, whose geometry fixes the cluster count so clusters
+    // grow ∝ N; SCALING.md) — bounding the candidate set IS the operator a
+    // 100 TB kNN-graph build runs. Oracle: k-means replay + within-cell
+    // brute force.
     "q_similarity_knn_bounded" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val k = semdedupK(embCount(dir, emb))
-      // centroid-model form (r16): cells map-side, no assignments join; the
-      // unordered pair is scored once and mirrored (see knnJoinWithinCells)
+      // cells map-side from the trained centroid matrix; the unordered
+      // pair is scored once and mirrored (see knnJoinWithinCells)
       Similarity.knnJoinWithinCells(emb, kcents(dir, emb, k), k = 5)
     }),
     // ---- Beyond-reference: text analysis over `documents` ----------------
@@ -894,13 +886,11 @@ object SparkEntry {
     // replay — union of per-batch emissions equals the batch rate limit
     "q_streaming_rate_limit" -> ((s, dir) =>
       StreamingState.rateLimitEmissions(s, dir, perDay = 5)),
-    // the transformWithState form, RE-PLANNED r12: the original
-    // per-(user × day)-timer processor measured 4.0×/decade from its timer
-    // column family (BENCH_r11_tws_sf{1,10}.jsonl) and was demoted to the
-    // StreamingStateSpec API-parity differential; this registration is the
-    // epoch-SWEPT re-plan — user-keyed MapState day counters + ONE timer
-    // per user at the earliest pending eviction epoch, swept on fire —
-    // measured at the fMGWS form's decade (BENCH_r12_tws2_sf{1,10}.jsonl)
+    // the transformWithState form: user-keyed MapState day counters + ONE
+    // timer per user at the earliest pending eviction epoch, swept on fire
+    // — measured at the fMGWS form's decade (BENCH_r12_tws2_sf{1,10}.jsonl),
+    // where one timer per (user × day) measured 4.0×/decade from its timer
+    // column family (BENCH_r11_tws_sf{1,10}.jsonl)
     "q_streaming_rate_limit_tws" -> ((s, dir) =>
       StreamingState.rateLimitEmissionsTwsSwept(s, dir, perDay = 5)),
     // hourly active users, exact + HLL audit per tumbling window — the
@@ -1071,8 +1061,6 @@ object SparkEntry {
     // HLL++ sketch AUDIT — error-as-data: exact accounting + the verdict
     // that the estimate landed inside its bound, in one aggregation pass;
     // the oracle recomputes the exact side and asserts the verdict TRUE
-    // (raw estimate queries stay available as Sketches.vocabBySourceApprox,
-    // error pinned by SketchesSpec)
     "q_sketch_vocab" -> ((s, dir) => Sketches.vocabAudit(Tables.documents(s, dir))),
     // Greenwald-Khanna audit of q_text_token_dist, same error-as-data move
     "q_sketch_token_dist" -> ((s, dir) =>
@@ -2685,7 +2673,7 @@ object SparkEntry {
     // nothing evicted yet → counts)
     "q_streaming_late_drop" ->
       s"""WITH tc AS (SELECT event_id,
-         |        concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol,
+         |        ${Tables.txnSymbolSql},
          |        epoch_ns(ts) // 1000000 AS ms,
          |        ntile(${StreamingState.NumChunks}) OVER (
          |          ORDER BY epoch_ns(ts) // 1000, event_id) - 1 AS c

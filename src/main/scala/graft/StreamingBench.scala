@@ -36,8 +36,7 @@ object StreamingBench {
     // API (or the initial-state bootstrap) shows up in the artifact of
     // record. Since r12 q_streaming_trending IS the transformWithState
     // MapState form (_fmgws = the flatMapGroupsWithState twin) and
-    // q_streaming_rate_limit_tws is the epoch-SWEPT re-plan (the original
-    // per-group-timer form, 4.0×/decade, lives spec-side only).
+    // q_streaming_rate_limit_tws keeps one epoch-SWEPT timer per user.
     // Totals are not comparable across rounds; per-query values are.
     "q_streaming_trending_fmgws", "q_streaming_rate_limit_tws",
     "q_streaming_restore")

@@ -96,6 +96,24 @@ object Tables {
     (col("event_id") % 1000 + 1).cast("int").as("number_shares")
   )
 
+  /** DuckDB-SQL twin of `txnCols`, one select item per column, in the same
+    * order — every SQL twin below composes from it.
+    */
+  private val txnColsSql: Seq[String] = Seq(
+    "concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol",
+    "event_id % 2 = 0 AS buy",
+    "value AS amount",
+    "CAST(event_id % 1000 + 1 AS INT) AS number_shares")
+
+  /** The `symbol` select item of the SQL twin, for oracles that need only
+    * the key.
+    */
+  val txnSymbolSql: String = txnColsSql.head
+
+  /** `SELECT <items> FROM events` — a CTE body over the events table. */
+  private def fromEvents(items: Seq[String]): String =
+    items.mkString("SELECT ", ",\n       ", "\nFROM events")
+
   /** Txns with the unique event id retained — the deterministic per-key
     * arrival order used by the per-record changelog (the reference's
     * cache=0 emission, one update per input record).
@@ -110,22 +128,10 @@ object Tables {
     events(spark, dir).select(col("event_id") +: col("ts") +: txnCols: _*)
 
   /** DuckDB-SQL twin of [[transactionsWithIdTs]], as a CTE body. */
-  val txnsIdTsCte: String =
-    """SELECT event_id, ts,
-      |       concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol,
-      |       event_id % 2 = 0 AS buy,
-      |       value AS amount,
-      |       CAST(event_id % 1000 + 1 AS INT) AS number_shares
-      |FROM events""".stripMargin
+  val txnsIdTsCte: String = fromEvents("event_id" +: "ts" +: txnColsSql)
 
   /** DuckDB-SQL twin of [[transactionsWithId]], as a CTE body. */
-  val txnsIdCte: String =
-    """SELECT event_id,
-      |       concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol,
-      |       event_id % 2 = 0 AS buy,
-      |       value AS amount,
-      |       CAST(event_id % 1000 + 1 AS INT) AS number_shares
-      |FROM events""".stripMargin
+  val txnsIdCte: String = fromEvents("event_id" +: txnColsSql)
 
   /** Txn stream with a deterministic chunk id (`event_id % nChunks`) used by
     * the streaming twin to stage the events into N replay files — each chunk
@@ -146,12 +152,7 @@ object Tables {
 
   /** DuckDB-SQL twin of [[transactionsChunked]], as a CTE body. */
   def txnsChunkCte(nChunks: Int): String =
-    s"""SELECT concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol,
-       |       event_id % 2 = 0 AS buy,
-       |       value AS amount,
-       |       CAST(event_id % 1000 + 1 AS INT) AS number_shares,
-       |       CAST(event_id % $nChunks AS INT) AS chunk
-       |FROM events""".stripMargin
+    fromEvents(txnColsSql :+ s"CAST(event_id % $nChunks AS INT) AS chunk")
 
   /** DuckDB-SQL twin of [[transactionsTimeChunked]] (symbol + event-time
     * millis only), as a CTE body. Ordering replicates Spark's view of `ts`
@@ -162,10 +163,8 @@ object Tables {
     * which is the unit all watermark arithmetic runs in.
     */
   def txnsTimeChunkMsCte(nChunks: Int): String =
-    s"""SELECT concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol,
-       |       epoch_ns(ts) // 1000000 AS ms,
-       |       ntile($nChunks) OVER (ORDER BY epoch_ns(ts) // 1000, event_id) - 1 AS chunk
-       |FROM events""".stripMargin
+    fromEvents(Seq(txnSymbolSql, "epoch_ns(ts) // 1000000 AS ms",
+      s"ntile($nChunks) OVER (ORDER BY epoch_ns(ts) // 1000, event_id) - 1 AS chunk"))
 
   /** Appends an ordered `chunk` column — the value `ntile(nChunks) OVER
     * (ORDER BY order…) − 1` would produce — WITHOUT the single-partition
@@ -251,13 +250,7 @@ object Tables {
       nChunks, Seq(col("ts"), col("event_id"))).drop("event_id")
 
   /** The DuckDB-SQL twin of [[transactionsWithTs]], as a CTE body. */
-  val txnsTsCte: String =
-    """SELECT ts,
-      |       concat('U', lpad(CAST(user_id AS VARCHAR), 6, '0')) AS symbol,
-      |       event_id % 2 = 0 AS buy,
-      |       value AS amount,
-      |       CAST(event_id % 1000 + 1 AS INT) AS number_shares
-      |FROM events""".stripMargin
+  val txnsTsCte: String = fromEvents("ts" +: txnColsSql)
 
   /** The DuckDB-SQL twin of [[transactions]] — composed from [[txnsTsCte]].
     * Oracle queries use it via `WITH txns AS (<txnsCte>) SELECT ...`.

@@ -82,14 +82,12 @@ object NativeExpressions {
     }
   }
   /** Serializable carrier for a trained FLOAT centroid matrix (reference-
-    * object pattern like [[ProfileMatcher]]): nearest-cell assignment and
-    * triangle-inequality cell admission run as ONE compiled loop over the
-    * matrix instead of a k-element literal array-of-structs expression. At
-    * k = √N cells (the self-KNN index regime — hundreds to thousands of
-    * cells) the literal form is a ~30k-node expression tree per use
-    * (serialized per task, codegen-split, interpreted-fallback risk); the
-    * carrier keeps plan size O(1) while the row cost stays k·dim fused
-    * multiply-adds.
+    * object pattern like [[ProfileMatcher]]): nearest-cell assignment runs
+    * as ONE compiled loop over the matrix instead of a k-element literal
+    * array-of-structs expression. At hundreds to thousands of cells the
+    * literal form is a ~30k-node expression tree per use (serialized per
+    * task, codegen-split, interpreted-fallback risk); the carrier keeps plan
+    * size O(1) while the row cost stays k·dim fused multiply-adds.
     *
     * Arithmetic is BIT-IDENTICAL to the Column-combinator forms it replaces
     * (differential-pinned in NativeKernelsSpec): |c|² accumulates left-to-
@@ -97,15 +95,12 @@ object NativeExpressions {
     * [[Kernels.dotFloat]]'s accumulation order; argmin ties go to the lowest
     * cell (struct-min / first-position semantics).
     */
-  final class FloatCentroidIndex(
-      val centroids: Array[Array[Float]],
-      val radii: Array[Double]) extends Serializable {
+  final class FloatCentroidIndex(val centroids: Array[Array[Float]]) extends Serializable {
     @transient private lazy val c2: Array[Double] = centroids.map { c =>
       var s = 0.0; var j = 0
       while (j < c.length) { s += c(j).toDouble * c(j).toDouble; j += 1 }
       s
     }
-    @transient private lazy val cnorms: Array[Double] = c2.map(math.sqrt)
 
     /** (cell, dot-with-that-centroid) of the nearest centroid by
       * |c|² − 2 v·c, ties to the lowest cell id.
@@ -130,42 +125,6 @@ object NativeExpressions {
       }
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](bestCell, bestDot))
-    }
-
-    /** Cells whose best-POSSIBLE member score cos(max(0, angle(v,c)−r_c))
-      * reaches `floor − margin` — the map-side triangle-inequality admission
-      * of the exact self-KNN probe phase, over all cells in one compiled
-      * scan. Clamp semantics mirror the Column form's least/greatest chain
-      * (NaN cosine clamps to 1 → angle 0 → admitted; sound — admission may
-      * only over-approximate).
-      */
-    def admissible(
-        v: org.apache.spark.sql.catalyst.util.ArrayData,
-        nrm: Double, floor: Double, margin: Double)
-        : org.apache.spark.sql.catalyst.util.ArrayData = {
-      val dim = v.numElements()
-      val out = new Array[Int](centroids.length)
-      var n = 0
-      var cell = 0
-      while (cell < centroids.length) {
-        val c = centroids(cell)
-        if (c.length != dim) throw new IllegalArgumentException(
-          s"admissible_cells: vector dim $dim != centroid dim ${c.length}")
-        var dot = 0.0
-        var j = 0
-        while (j < dim) { dot += v.getFloat(j).toDouble * c(j).toDouble; j += 1 }
-        val cosRaw = dot / (nrm * cnorms(cell))
-        val clamped =
-          if (java.lang.Double.isNaN(cosRaw)) 1.0
-          else math.min(1.0, math.max(-1.0, cosRaw))
-        val angle = math.acos(clamped)
-        val r = if (cell < radii.length) radii(cell) else 0.0
-        val best = math.cos(math.max(0.0, angle - r))
-        if (best >= floor - margin) { out(n) = cell; n += 1 }
-        cell += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        java.util.Arrays.copyOf(out, n))
     }
   }
 
@@ -486,16 +445,6 @@ object NativeExpressions {
     carrier(index, "nearest", StructType(Seq(
       StructField("cell", IntegerType, nullable = false),
       StructField("d2", DoubleType, nullable = false))), v -> floatVector)
-
-  /** `array<int>` — the triangle-inequality-admissible cells of a vector
-    * given its norm and its per-query floor (see
-    * [[FloatCentroidIndex.admissible]]).
-    */
-  def admissibleCells(
-      v: Column, nrm: Column, floor: Column,
-      index: FloatCentroidIndex, margin: Double): Column =
-    carrier(index, "admissible", ints,
-      v -> floatVector, nrm -> DoubleType, floor -> DoubleType, param(margin, DoubleType))
 
   /** `int` — first index at which two equal-length long arrays agree, -1
     * when none (see [[Kernels.firstIndexEqual]]): the banded-LSH join-side

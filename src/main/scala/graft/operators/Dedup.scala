@@ -650,9 +650,9 @@ object Dedup {
     * fingerprints spread.
     *
     * Convenience single-Column form — the 64 per-bit votes each re-derive the
-    * shingle pipeline, fine for fixtures. Corpus-scale callers use
-    * [[fingerprintDF]], which materializes the shingle-hash array once per
-    * row (see the expression-structure note on
+    * shingle pipeline, fine for fixtures. The served form is
+    * [[fingerprintDFPortable]], which materializes the shingle-hash array
+    * once per row (see the expression-structure note on
     * [[minhashSignatureFromHashes]]).
     */
   def simhash64(text: Column, n: Int = 3): Column =
@@ -671,37 +671,24 @@ object Dedup {
     bits.reduce(_ + _)
   }
 
-  /** (id, fp) simhash fingerprints via the native kernels: shingle hashes
-    * straight off the text bytes, then all 64 vote counters in one pass over
-    * the hash array.
-    */
-  def fingerprintDF(docs: DataFrame, n: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        NativeExpressions.shingleHashes(col(textCol), n).as("hs"))
-      // docs with no shingles have no content signal: without this filter
-      // they would all fingerprint to 0 and emit each other as hamming-0
-      // "near-duplicates"
-      .filter(size(col("hs")) > 0)
-      .select(col("id"), NativeExpressions.simhash64(col("hs")).as("fp"))
-
   /** (id, fp) simhash fingerprints from ENGINE-PORTABLE shingle hashes: each
     * distinct word-n-gram shingle hashes to the first 15 hex chars of its md5
     * read as a base-16 integer — a 60-bit value both Spark (`conv`) and a SQL
     * oracle (hex-nibble arithmetic) can recompute exactly. The 60-bit hashes
-    * feed the same one-pass native vote kernel as [[fingerprintDF]]: bits
-    * 60–63 are 0 in every hash, so their votes are all −1 and those
+    * feed the one-pass native vote kernel (`NativeExpressions.simhash64`):
+    * bits 60–63 are 0 in every hash, so their votes are all −1 and those
     * fingerprint bits come out 0 — i.e. the kernel computes precisely the
-    * 60-bit simhash. This is the oracle-checkable twin of [[fingerprintDF]]
-    * (whose xxhash64 hashes no other engine can replay); same move as
-    * [[graft.functions.NativeExpressions.wordWindowMd5]].
+    * 60-bit simhash. md5, not xxhash64, so that the oracle can replay it;
+    * same move as [[graft.functions.NativeExpressions.wordWindowMd5]].
     */
   def fingerprintDFPortable(docs: DataFrame, n: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs
       .select(col(idCol).as("id"),
         NativeExpressions.shingleMd5Hashes60(col(textCol), n).as("hs"))
+      // docs with no shingles have no content signal: without this filter
+      // they would all fingerprint to 0 and emit each other as hamming-0
+      // "near-duplicates"
       .filter(size(col("hs")) > 0)
       .select(col("id"), NativeExpressions.simhash64(col("hs")).as("fp"))
 
@@ -715,26 +702,16 @@ object Dedup {
     transform(shingles(text, n),
       s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))
 
-  /** Near-duplicate pairs by SimHash hamming distance <= maxHamming, with
-    * band-join candidate generation: the 64-bit fingerprint splits into
+  /** Near-duplicate pairs by SimHash hamming distance <= maxHamming over
+    * the md5-derived portable fingerprints ([[fingerprintDFPortable]]), with
+    * band-join candidate generation: the fingerprint splits into
     * (maxHamming + 1) bands, and by pigeonhole any pair within maxHamming
     * bit flips agrees exactly on at least one band — so the band equi-join
-    * has GUARANTEED recall, no all-pairs comparison anywhere.
+    * has GUARANTEED recall, no all-pairs comparison anywhere. 60-bit
+    * fingerprints band exactly like 64-bit ones whose top 4 bits are
+    * constant-0, and the DuckDB oracle replays the whole pipeline.
     *
     * Returns (doc_a, doc_b, hamming) with doc_a < doc_b.
-    */
-  def simhashNearDuplicates(
-      docs: DataFrame,
-      maxHamming: Int = 3,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    simhashBandPairs(
-      fingerprintDF(docs, textCol = textCol, idCol = idCol), maxHamming)
-
-  /** [[simhashNearDuplicates]] over the md5-derived portable fingerprints —
-    * identical banding/recall structure (60-bit fingerprints band exactly
-    * like 64-bit ones whose top 4 bits are constant-0), fully replayable by
-    * the DuckDB oracle.
     */
   def simhashNearDuplicatesPortable(
       docs: DataFrame,
@@ -744,8 +721,8 @@ object Dedup {
     simhashBandPairs(
       fingerprintDFPortable(docs, textCol = textCol, idCol = idCol), maxHamming)
 
-  /** The banded pair join over an (id, fp) fingerprint table — shared by the
-    * xxhash64 and portable fingerprint front ends.
+  /** The banded pair join over an (id, fp) fingerprint table (see
+    * [[simhashNearDuplicatesPortable]]).
     */
   def simhashBandPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 63,

@@ -26,15 +26,13 @@ import graft.functions.NativeExpressions
   *     LSH — an equi-join on (table, bucket) keys — then re-ranks candidates
   *     exactly. Hyperplanes are deterministic pseudo-vectors derived from
   *     xxhash64, so results are stable across runs and partitionings.
-  *   - the exact paths never plan an all-pairs join: IVF cells + the
-  *     angular triangle inequality prune cell pairs / per-query cells with
-  *     proven-exact bounds, then re-check candidates with the exact cosine.
-  *     [[ivfExactTopK]] and [[hardNegativesPruned]] serve registered
-  *     queries. The global forms [[cosinePairsPruned]] and [[knnJoinExact]]
-  *     are spec-side exactness baselines: the registered dedup and kNN-graph
+  *   - the exact top-k paths never plan an all-pairs join: IVF cells + the
+  *     angular triangle inequality prune per-query cells with proven-exact
+  *     bounds, then re-check candidates with the exact cosine
+  *     ([[ivfExactTopK]], [[hardNegativesPruned]]). The dedup and kNN-graph
   *     queries search within k-means cells ([[cosinePairsWithinCells]],
   *     [[knnJoinWithinCells]]). The brute-force forms ([[cosinePairs]],
-  *     [[bruteForceTopK]]) remain as spec-side differential baselines only.
+  *     [[bruteForceTopK]]) are the specs' differential baselines.
   *   - every trained model (centroids, cell radii, seed floors, query
   *     vectors, codebooks) is a parameter of the operator that uses it; the
   *     registry trains each once per table listing (`ArtifactStore.memo`).
@@ -115,30 +113,6 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("score"))
   }
 
-  /** Deterministic CLUSTERED twin of the embedding corpus — tight label-wise
-    * blobs, the data profile the IVF triangle-inequality prune is built for
-    * (SemDeDup-style corpora: near-duplicate documents embed into tight
-    * clusters). The synthetic test embeddings are near-isotropic, which is
-    * exactly the regime where the angular bound cannot engage (median cell
-    * radius ≈ 76°); this transform derives a clusterable corpus from the SAME
-    * table so the prune's engagement is demonstrable and oracle-checkable.
-    *
-    * Per vector: the dimension indexed by `label mod dim` is REPLACED by
-    * 10.0 and every other dimension is scaled by 0.125 — all label-ℓ vectors
-    * land within a few degrees of the axis e_{ℓ mod dim}, labels far apart.
-    * Both operations are EXACT in float (replacement, and a power-of-two
-    * scale), so a SQL oracle reproduces the vectors bit-for-bit — no
-    * float-addition rounding to coordinate across engines. Map-side
-    * projection; keeps (vec_id, embedding, label).
-    */
-  def clusterize(embeddings: DataFrame): DataFrame =
-    embeddings.select(
-      col("vec_id"),
-      transform(col("embedding"), (x, i) =>
-        when(i === pmod(col("label"), size(col("embedding"))), lit(10.0f))
-          .otherwise(x * lit(0.125f))).as("embedding"),
-      col("label"))
-
   /** Train IVF (inverted-file) centroids: Lloyd's k-means over the corpus,
     * deterministic end-to-end — seeds are the k lowest-vec_id vectors, and
     * per-dimension means accumulate in DECIMAL so the result is independent
@@ -199,7 +173,7 @@ object Similarity {
     */
   private def nearestCell(v: Column, centroids: Array[Array[Float]]): Column =
     NativeExpressions.nearestCellInfo(
-      v, new NativeExpressions.FloatCentroidIndex(centroids, Array.empty))
+      v, new NativeExpressions.FloatCentroidIndex(centroids))
       .getField("cell")
 
   /** IVF approximate top-k: corpus vectors are assigned to their nearest
@@ -249,27 +223,23 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------
-  // Exact similarity WITHOUT all-pairs plans: IVF cells + the triangle
+  // Exact top-k WITHOUT all-pairs plans: IVF cells + the triangle
   // inequality on angular distance. Angular distance (the angle between
-  // vectors) is a metric on the unit sphere, so for a vector v in cell c
-  // with angular radius r_c = max angle(member, centroid):
-  //   angle(a, b) <= angle(a, c_a) + angle(c_a, c_b) + angle(c_b, b)
-  // which lets whole CELL PAIRS be pruned when even their closest possible
-  // members cannot reach the cosine threshold, and per-query CELLS be
-  // pruned when their best possible score cannot reach the running top-k
-  // floor. Every surviving candidate is re-checked with the exact cosine,
-  // so results are IDENTICAL to the brute-force baselines — the candidate
-  // generation only ever over-approximates. The plans are equi-joins on
-  // cell id (broadcast small side): no cartesian anywhere.
+  // vectors) is a metric on the unit sphere, so for a query q and a cell c
+  // with angular radius r_c = max angle(member, centroid), every member m
+  // of c satisfies angle(q, m) >= angle(q, c_c) - r_c — which lets a
+  // query's CELLS be pruned when their best possible score cannot reach
+  // the query's top-k floor. Every surviving candidate is re-checked with
+  // the exact cosine, so results are IDENTICAL to the brute-force
+  // baselines — the candidate generation only ever over-approximates. The
+  // plans are equi-joins on cell id (broadcast small side): no cartesian
+  // anywhere.
   //
-  // Pruning power is data-adaptive: clustered corpora (the real-world
-  // case — embeddings of near-duplicate documents cluster tightly) prune
-  // most cell pairs; an adversarially ISOTROPIC corpus (the synthetic
-  // test data) admits most of them, in which case the cost degrades
-  // toward the brute-force total while the PLAN stays an equi-join that
-  // shuffles by cell — partitionable, spillable, AQE-balanceable —
-  // rather than a broadcast nested loop. That asymmetry (worst case no
-  // worse, typical case far better, always exact) is the point.
+  // Pruning power is data-adaptive: clustered corpora prune most cells; an
+  // ISOTROPIC corpus (the synthetic test data) admits most of them, in
+  // which case the cost degrades toward the brute-force total while the
+  // PLAN stays an equi-join that shuffles by cell — partitionable,
+  // spillable, AQE-balanceable — rather than a broadcast nested loop.
   // ------------------------------------------------------------------
 
   /** Clamped arccos — angle in [0, π]; null (zero-norm) → π, the
@@ -292,11 +262,6 @@ object Similarity {
     else math.acos(math.max(-1.0, math.min(1.0, dp / (math.sqrt(na) * math.sqrt(nb)))))
   }
 
-  /** Driver-side angle between two vectors — exposed so specs can count the
-    * admissible cell pairs with the same arithmetic the prune uses.
-    */
-  def driverAngleForSpec(a: Array[Float], b: Array[Float]): Double = driverAngle(a, b)
-
   /** Corpus with nearest-cell assignment and the angle to that centroid:
     * (vec_id, v, nrm, cell, cang). Assignment is identical to
     * [[nearestCell]] (argmin by (d, cell) — the extra struct field rides
@@ -305,7 +270,7 @@ object Similarity {
   private def assignCells(
       embeddings: DataFrame, centroids: Array[Array[Float]]): DataFrame = {
     val v = col("embedding")
-    val idx = new NativeExpressions.FloatCentroidIndex(centroids, Array.empty)
+    val idx = new NativeExpressions.FloatCentroidIndex(centroids)
     val cnorms = centroids.map(c => math.sqrt(c.map(x => x.toDouble * x.toDouble).sum))
     embeddings.select(
       col("vec_id"), v.as("v"), norm(v).as("nrm"),
@@ -321,8 +286,7 @@ object Similarity {
   /** Per-cell angular radius r_c = max angle(member, centroid) as a
     * trained artifact (≤ k doubles, one hash aggregate) — like the centroids
     * themselves, computed once per corpus and passed to every pruned-exact
-    * operator ([[cosinePairsPruned]], [[ivfExactTopK]], [[knnJoinExact]],
-    * [[hardNegativesPruned]]).
+    * operator ([[ivfExactTopK]], [[hardNegativesPruned]]).
     */
   def trainCellRadii(
       embeddings: DataFrame, centroids: Array[Array[Float]]): Map[Int, Double] =
@@ -343,57 +307,6 @@ object Similarity {
       .agg(min(col("score")).as("kth"), count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) ->
         (if (r.getLong(2) >= k) r.getDouble(1) else -2.0)).toMap
-
-  // pruning bounds inflate by this margin so double rounding can only ever
-  // ADMIT extra candidates (re-checked exactly), never drop a true one
-  private val PruneEps = 1e-6
-
-  /** Exact cosine ε-pair listing with a non-quadratic plan: cell pairs
-    * (i, j) survive only if
-    *   angle(c_i, c_j) <= r_i + r_j + arccos(threshold) + eps
-    * (no member pair across a pruned cell pair can reach the threshold, by
-    * two applications of the angular triangle inequality); survivors join
-    * on cell id and re-check the EXACT cosine. Result is identical to
-    * [[cosinePairs]] — differential-tested in SimilaritySpec, and both
-    * serve the same DuckDB brute-force oracle.
-    *
-    * Scale shape: map-side assignment, one ≤k-row radius aggregate, then
-    * corpus ⋈ admissible-cell-pairs (broadcast, ≤k² rows) ⋈ corpus — both
-    * joins equi-joins on cell id, shuffled/partitionable by cell.
-    */
-  def cosinePairsPruned(
-      embeddings: DataFrame, threshold: Double,
-      centroids: Array[Array[Float]],
-      radii: Map[Int, Double]): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val assigned = assignCells(embeddings, centroids)
-    val theta = math.acos(math.max(-1.0, math.min(1.0, threshold)))
-    // directed admissible pairs: (i,j) AND (j,i) for i<j, (i,i) once —
-    // after the join, vec_a < vec_b keeps each vector pair exactly once
-    val cells = radii.keys.toSeq.sorted
-    val admissible = for {
-      i <- cells; j <- cells
-      // (i,i) is trivially admissible (angle(c,c)=0); cross-cell pairs
-      // survive only within the triangle-inequality reach
-      if i == j ||
-        driverAngle(centroids(i), centroids(j)) <= radii(i) + radii(j) + theta + PruneEps
-    } yield (i, j)
-    val pairsDf = broadcast(admissible.toDF("cell_a", "cell_b"))
-    val a = assigned.select(col("vec_id").as("vec_a"), col("v").as("va"),
-      col("nrm").as("na"), col("cell").as("cell_a"))
-    val b = assigned.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-      col("nrm").as("nb"), col("cell").as("cell_b"))
-    a.join(pairsDf, Seq("cell_a"))
-      .join(b, Seq("cell_b"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (NativeExpressions.vecDot(col("va"), col("vb")) /
-          (col("na") * col("nb"))).as("raw"))
-      // threshold on the UNROUNDED cosine, exactly like cosinePairs
-      .filter(col("raw") >= threshold)
-      .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("score"))
-  }
 
   /** Exact top-k with a non-quadratic plan — two bound-pruned phases over
     * three trained artifacts: the cell `radii` ([[trainCellRadii]]), the
@@ -449,113 +362,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Exact self-KNN join — the top-k cosine neighbors of EVERY corpus
-    * vector (the SemDeDup / kNN-graph primitive), with a fully distributed
-    * non-quadratic plan. Unlike [[ivfExactTopK]] (whose query set is small
-    * enough to collect floors driver-side), here every vector is a query, so
-    * both pruning phases stay in the engine:
-    *
-    *  1. seed floor: each vector scores only its OWN IVF cell's members
-    *     (equi-join on cell) and takes a bounded top-k; δ_v = its k-th best
-    *     seed score, or −2 when the cell has fewer than k other members.
-    *     δ_v is a lower bound on the true k-th best (seed candidates are a
-    *     subset of all candidates).
-    *  2. cell pruning: map-side, per vector, cell c is admissible iff its
-    *     best POSSIBLE score cos(max(0, angle(v, c_c) − r_c)) ≥ δ_v − ε
-    *     (angular triangle inequality, as in [[ivfExactTopK]]). The floor
-    *     rides back onto the corpus via one thin vec_id-keyed join; the
-    *     admissible (vector, cell) probes explode map-side and equi-join the
-    *     cell-assigned corpus for the EXACT re-score.
-    *
-    * Every true top-k neighbor's cell is admissible (its exact score ≥ the
-    * true k-th ≥ δ_v, and the bound over-approximates), so the result is
-    * IDENTICAL to the brute-force self-KNN — same 6-dp rounding, same
-    * (score desc, neighbor_id asc) tie-break; differential-tested in
-    * SimilaritySpec and served against a brute-force DuckDB oracle.
-    *
-    * Scale shape: seed join cost is Σ_c m_c² (per-cell quadratic — bounded
-    * by sizing cells, exactly the IVF knob), probe join is candidate-pruned;
-    * BOTH are cell-keyed equi-joins — partitionable, spillable,
-    * AQE-balanceable — and the top-k aggregates are size-capped, so the
-    * shuffle carries at most |corpus| × partitions × k candidate rows.
-    *
-    * Measured degradation (sf0.1, 2000×64-dim near-uniform vectors): median
-    * cell radius ≈ 76° and seed floors ≈ 0.25 cosine, so the angular bound
-    * admits EVERY cell — the curse of dimensionality, not an implementation
-    * gap — and the plan degrades gracefully to the cell-partitioned
-    * all-pairs equi-join, which is the exact-KNN lower bound on such data
-    * (the cost is then the n² exact scores themselves: a codegen'd
-    * sum(score) over the same pair stream measures within ~15% of the full
-    * query). On clusterable corpora the same code prunes; for scale serving
-    * on unclusterable ones the registered ANN recall audits (annTopK /
-    * ivfTopK) are the path — exactness is what this operator sells.
-    */
-  def knnJoinExact(
-      embeddings: DataFrame, k: Int,
-      centroids: Array[Array[Float]],
-      radii: Map[Int, Double]): DataFrame = {
-    val assigned = assignCells(embeddings, centroids)
-    val nSide = assigned.select(col("vec_id").as("neighbor_id"),
-      col("v").as("nv"), col("nrm").as("nn"), col("cell"))
-    val probes = knnProbesFrom(assigned, k, centroids, radii)
-    val scored = probes.join(nSide, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("score"))
-    topKPerQuery(scored, k)
-  }
-
-  /** The per-vector admissible (query, cell) probe set of [[knnJoinExact]] —
-    * exposed so specs can MEASURE the prune's engagement (probe rows vs the
-    * N × cells full-coverage total) instead of arguing it. Returns
-    * (query_id, qv, qn, cell).
-    */
-  def knnProbes(
-      embeddings: DataFrame, k: Int,
-      centroids: Array[Array[Float]],
-      radii: Map[Int, Double]): DataFrame =
-    knnProbesFrom(assignCells(embeddings, centroids), k, centroids, radii)
-
-  /** Phases 1–2 of the exact self-KNN: own-cell seed floors, then map-side
-    * triangle-inequality cell admission (see [[knnJoinExact]]'s scaladoc for
-    * the proof sketch).
-    */
-  private def knnProbesFrom(
-      assigned: DataFrame, k: Int,
-      centroids: Array[Array[Float]],
-      radii: Map[Int, Double]): DataFrame = {
-    val margin = 2e-6 // 6-dp rounding (5e-7) + float slack, admit-only
-    val nSide = assigned.select(col("vec_id").as("neighbor_id"),
-      col("v").as("nv"), col("nrm").as("nn"), col("cell"))
-    // phase 1: own-cell seed floor (distributed — no driver artifact)
-    val seedScored = assigned
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"))
-      .join(nSide, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("score"))
-    val floors = topKPerQuery(seedScored, k)
-      .groupBy("query_id")
-      .agg(min(col("score")).as("kth"), count(lit(1)).as("nseed"))
-      .select(col("query_id").as("vec_id"),
-        when(col("nseed") >= k, col("kth")).otherwise(lit(-2.0)).as("floor"))
-    // phase 2: per-vector admissible cells, computed map-side by the
-    // FloatCentroidIndex kernel (one compiled scan over centroids+radii —
-    // the previous per-cell struct-literal array was a k·dim-literal plan
-    // at the √N-cell index sizes); empty cells keep radius 0 and simply
-    // join to nothing
-    val idx = new NativeExpressions.FloatCentroidIndex(
-      centroids,
-      centroids.indices.map(j => radii.getOrElse(j, 0.0)).toArray)
-    assigned.join(floors, Seq("vec_id"), "left")
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(NativeExpressions.admissibleCells(
-          col("v"), col("nrm"), coalesce(col("floor"), lit(-2.0)), idx, margin))
-          .as("cell"))
-  }
-
   /** Hard-negative mining — for each anchor vector, the k MOST similar
     * corpus vectors with a DIFFERENT label: the contrastive-training data
     * op (the negatives that matter are the ones the model currently
@@ -609,7 +415,7 @@ object Similarity {
     * bound over-approximates every member's score, so its cell is always
     * admissible — the result is IDENTICAL to [[hardNegatives]]
     * (differential-tested in SimilaritySpec, which also measures the probe
-    * reduction on the clusterized corpus). The label constraint still
+    * reduction on a clustered fixture). The label constraint still
     * applies BEFORE the bounded top-k.
     */
   def hardNegativesPruned(
@@ -629,8 +435,8 @@ object Similarity {
   }
 
   /** The admissible (anchor, cell) probe set of [[hardNegativesPruned]] —
-    * exposed (like [[knnProbes]]) so specs can measure the prune against the
-    * |anchors| × cells full-coverage total. Returns
+    * exposed so specs can measure the prune against the |anchors| × cells
+    * full-coverage total. Returns
     * (query_id, qv, qn, q_label, cell), broadcast-sized.
     */
   def hardNegativeProbes(
@@ -722,22 +528,6 @@ object Similarity {
         (c2 - 2.0 * dp, i)
       }
       .sorted.take(nprobe).map(_._2)
-
-  /** Brute-force self-KNN — every pair scored via a cross join. Spec-side
-    * differential baseline for [[knnJoinExact]] ONLY (quadratic by
-    * construction; never registered as a serving plan).
-    */
-  def bruteForceKnnJoin(embeddings: DataFrame, k: Int): DataFrame = {
-    def side(idName: String, vName: String, nName: String) =
-      embeddings.select(col("vec_id").as(idName), col("embedding").as(vName),
-        sqrt(NativeExpressions.vecDot(col("embedding"), col("embedding"))).as(nName))
-    val scored = side("query_id", "qv", "qn")
-      .crossJoin(side("neighbor_id", "nv", "nn"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("score"))
-    topKPerQuery(scored, k)
-  }
 
   /** Symmetric max-abs int8 quantization of the embedding column — the
     * storage/bandwidth step a 100 TB vector corpus runs before indexing
@@ -1069,53 +859,30 @@ object Similarity {
     * DEFINED over (Abbas et al. compare embeddings within a k-means cluster,
     * never across): corpus ⋈ corpus on the cell id, exact cosine re-check,
     * a < b kept once. Identical output to filtering the GLOBAL ε-pair list
-    * to same-cell pairs (what the registered composition previously did via
-    * [[cosinePairsPruned]]), but the cost is Σ_c m_c² instead of the global
-    * pair search — and with k scaled ∝ N/target-cell-size (the paper's
-    * tens-of-thousands-of-clusters regime) the per-cell quadratic term is a
-    * CONSTANT, making the whole composition linear in the corpus regardless
-    * of geometry. Same score arithmetic as [[cosinePairs]]: one native float
-    * dot per candidate, norms computed once per row, threshold on the
-    * unrounded cosine, 6-dp round on output.
-    */
-  def cosinePairsWithinCells(
-      embeddings: DataFrame, assignments: DataFrame, threshold: Double): DataFrame =
-    cosinePairsFromSides(joinedSides(embeddings, assignments), threshold)
-
-  /** Centroid-model form (r16, guide §2.4): the cell is computed MAP-SIDE
-    * from the trained centroid matrix — same kernel, same result as joining
-    * [[kmeansAssignments]] back on vec_id, minus the self-join of the scan
-    * (see [[cellSides]]). Differential-pinned equal to the join form in
-    * SimilaritySpec.
+    * ([[cosinePairs]]) to same-cell pairs, but the cost is Σ_c m_c² instead
+    * of the global pair search — and with k scaled ∝ N/target-cell-size (the
+    * paper's tens-of-thousands-of-clusters regime) the per-cell quadratic
+    * term is a CONSTANT, making the whole composition linear in the corpus
+    * regardless of geometry. Same score arithmetic as [[cosinePairs]]: one
+    * native float dot per candidate, norms computed once per row, threshold
+    * on the unrounded cosine, 6-dp round on output. Cells come from the
+    * trained k-means centroid matrix `cents` (see [[cellSides]]).
     */
   def cosinePairsWithinCells(
       embeddings: DataFrame, cents: Array[Array[Double]],
       threshold: Double): DataFrame =
-    cosinePairsFromSides(cellSides(embeddings, cents), threshold)
-
-  private def cosinePairsFromSides(sides: DataFrame, threshold: Double): DataFrame =
-    pairsOnceWithinCells(sides)
+    pairsOnceWithinCells(cellSides(embeddings, cents))
       .filter(col("raw") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("score"))
-
-  /** (vec_id, v, nrm, cell) candidate sides under an EXTERNAL assignment
-    * frame — one vec_id equi-join attaches the cell. The generic form: any
-    * assignment source works, at the cost of re-keying the corpus by vec_id.
-    */
-  private def joinedSides(embeddings: DataFrame, assignments: DataFrame): DataFrame =
-    embeddings
-      .select(col("vec_id"), col("embedding").as("v"),
-        norm(col("embedding")).as("nrm"))
-      .join(assignments.select(col("vec_id"), col("cell")), Seq("vec_id"))
 
   /** (vec_id, v, nrm, cell) candidate sides under a trained centroid model,
     * computed in the SCAN's own projection (r16, guide §2.4): cell is a pure
     * per-row function of the embedding under a fixed centroid matrix — the
     * identical [[NativeExpressions.DoubleCentroidIndex]] argmin
     * [[kmeansAssignments]] runs — so attaching it via
-    * (embeddings ⋈ assignments-on-vec_id) was a self-join of the same scan:
-    * two extra exchanges + one join to recover a value the projection
-    * already had in hand.
+    * (embeddings ⋈ assignments-on-vec_id) would be a self-join of the same
+    * scan: two extra exchanges + one join to recover a value the projection
+    * already has in hand.
     */
   private def cellSides(embeddings: DataFrame, cents: Array[Array[Double]]): DataFrame =
     embeddings.select(col("vec_id"), col("embedding").as("v"),
@@ -1173,36 +940,24 @@ object Similarity {
   }
 
   /** Cluster-bounded exact self-KNN — every vector's top-k cosine neighbors
-    * AMONG ITS OWN CLUSTER'S members (k-means cells with the cluster count
-    * scaled ∝ N/target-cell-size). This is the REGISTERED kNN-graph serving
-    * form: the measured salted decades (SCALING.md, rounds 9–10) prove exact
-    * UNBOUNDED self-KNN is superlinear on any geometry once true neighbor
-    * structure densifies with N — isotropic data admits every cell, and
-    * clusterable data grows each cluster ∝ N when the cluster count is fixed
-    * by geometry — so the only linear exact form is the one whose candidate
-    * set is bounded by construction, exactly the move real kNN-graph
-    * builders make (cluster/bucket first, search within). Global exact
-    * self-KNN ([[knnJoinExact]]) stays spec-side as the exactness baseline.
+    * AMONG ITS OWN CLUSTER'S members (k-means cells from the trained
+    * centroid matrix `cents`, the cluster count scaled ∝ N/target-cell-size).
+    * This is the kNN-graph serving form: the measured salted decades
+    * (SCALING.md, rounds 9–10) showed exact UNBOUNDED self-KNN superlinear on
+    * any geometry once true neighbor structure densifies with N — isotropic
+    * data admits every cell, and clusterable data grows each cluster ∝ N
+    * when the cluster count is fixed by geometry — so the only linear exact
+    * form is the one whose candidate set is bounded by construction, the
+    * move real kNN-graph builders make (cluster/bucket first, search
+    * within).
     *
     * Plan: corpus ⋈ corpus on the cell id (Σ_c m_c² ≈ N × cell-size scored
     * candidates — linear when k ∝ N), size-capped [[topKPerQuery]] heaps.
     * Same score arithmetic and (score desc, neighbor_id asc) tie-break as
     * every other top-k here; singleton-cell vectors have no candidates and
     * are absent, like the brute force over the same candidate set.
-    */
-  def knnJoinWithinCells(
-      embeddings: DataFrame, assignments: DataFrame, k: Int): DataFrame =
-    knnFromSides(joinedSides(embeddings, assignments), k)
-
-  /** Centroid-model form (r16): map-side cells, no assignments join — see
-    * [[cellSides]]. Differential-pinned equal to the join form in
-    * SimilaritySpec.
-    */
-  def knnJoinWithinCells(
-      embeddings: DataFrame, cents: Array[Array[Double]], k: Int): DataFrame =
-    knnFromSides(cellSides(embeddings, cents), k)
-
-  /** Scoring shape (r16, guide §1.2/§2.3): each unordered same-cell pair is
+    *
+    * Scoring shape (r16, guide §1.2/§2.3): each unordered same-cell pair is
     * scored ONCE ([[pairsOnceWithinCells]]) and the scored row is MIRRORED
     * into both directed rows by a 2-element explode before the bounded
     * heaps — at sf10 the `query ≠ neighbor` join emitted 229.5M rows
@@ -1212,8 +967,9 @@ object Similarity {
     * the heap input row set — and hence the ranking under the
     * (score desc, neighbor_id asc) tie-break — is unchanged.
     */
-  private def knnFromSides(sides: DataFrame, k: Int): DataFrame = {
-    val scored = pairsOnceWithinCells(sides)
+  def knnJoinWithinCells(
+      embeddings: DataFrame, cents: Array[Array[Double]], k: Int): DataFrame = {
+    val scored = pairsOnceWithinCells(cellSides(embeddings, cents))
       .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("score"))
       .select(explode(array(
         struct(col("vec_a").as("query_id"), col("vec_b").as("neighbor_id"),
@@ -1227,9 +983,9 @@ object Similarity {
   /** SemDeDup keep/drop decisions — the full semantic-dedup composition
     * (Abbas et al.: cluster the embedding space, drop near-identical vectors
     * within each cluster, keep one representative). Inputs are two already-
-    * verified artifacts: k-means [[kmeansAssignments]] cells and the exact
-    * cosine ε-pair list ([[cosinePairsPruned]] — IVF + triangle-pruned,
-    * identical to brute force). The keep rule is MIN-ID DOMINANCE, stated
+    * verified artifacts: k-means [[kmeansAssignments]] cells and an exact
+    * cosine ε-pair list (the registered query passes the within-cell pairs
+    * of [[cosinePairsWithinCells]]). The keep rule is MIN-ID DOMINANCE, stated
     * exactly: drop v iff some same-cell u < v has cos(u, v) ≥ the pair
     * threshold. Deterministic, single-pass relational — no iteration, no
     * driver loop — and coarser than connected-components-min only on chains
@@ -1404,7 +1160,7 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
       .sortBy(_._1)
-    val qArtifact = array(qvecs.map { case (id, v) =>
+    val qArtifact = array(qvecs.toIndexedSeq.map { case (id, v) =>
       struct(lit(id).as("query_id"), typedLit(v).as("qv"))
     }: _*)
     def cosAt(d: Column): Column = {

@@ -391,28 +391,13 @@ object TextAnalysis {
       .na.fill(0L, langs)
   }
 
-  /** Winnowing document fingerprints (rolling-hash k-grams + sliding-window
-    * minima — the MOSS scheme): every window of `w` consecutive k-gram hashes
-    * contributes its minimum, and the distinct minima are the document's
-    * fingerprint set. Guarantees any shared substring of length >= k + w - 1
-    * between two documents shares at least one fingerprint.
+  /** Winnowing document fingerprints (k-grams + sliding-window minima — the
+    * MOSS scheme): every window of `w` consecutive k-gram hashes contributes
+    * its minimum, and the distinct minima are the document's fingerprint
+    * set. Guarantees any shared substring of length >= k + w - 1 between two
+    * documents shares at least one fingerprint.
     *
-    * Returns (doc_id, n_fingerprints, min_fingerprint) — per-row expression
-    * work only, no shuffle.
-    */
-  def fingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
-    // fingerprint set in its own projection: referencing a Column val twice
-    // would embed the kernel twice (no cross-use sharing for inline exprs)
-    docs
-      .select(col("doc_id"),
-        NativeExpressions.winnowingFingerprints(col("text"), k, w).as("fps"))
-      .select(
-        col("doc_id"),
-        size(col("fps")).as("n_fingerprints"),
-        array_min(col("fps")).as("min_fingerprint"))
-
-  /** ENGINE-PORTABLE winnowing fingerprints: same k-gram/window-min scheme as
-    * [[fingerprints]], but each k-gram hashes to its md5 HEX STRING and the
+    * ENGINE-PORTABLE: each k-gram hashes to its md5 HEX STRING and the
     * window minimum is the lexicographic string minimum — both recomputable
     * by a SQL oracle character-for-character (the [[graft.operators.Dedup]]
     * `wordWindowMd5` move, applied to character k-grams). Served by the
@@ -420,10 +405,8 @@ object TextAnalysis {
     * form ([[portableFingerprintSet]], kept as the executable definition and
     * differential-tested) made the registered query ~19× slower at sf0.1.
     *
-    * Returns (doc_id, n_fingerprints, min_fingerprint) — the registered,
-    * oracle-checked form; the xxhash64 native-kernel [[fingerprints]] stays
-    * the scale path for non-oracle callers, pinned by
-    * TextAnalysisSpec/NativeKernelsSpec.
+    * Returns (doc_id, n_fingerprints, min_fingerprint) — per-row expression
+    * work only, no shuffle.
     */
   def fingerprintsPortable(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
     docs

@@ -1039,74 +1039,13 @@ object StreamingState {
     })
   }
 
-  /** The per-(user, day) admission counter as a Spark-4
-    * [[org.apache.spark.sql.streaming.StatefulProcessor]] — the state logic
-    * of [[rateLimitEmissions]] re-expressed on `transformWithState`, the
-    * API that supersedes `flatMapGroupsWithState` for arbitrary keyed state
-    * (SPARK-46815): the counter is a NAMED, TYPED `ValueState[Int]` in the
-    * RocksDB store (not an opaque encoder blob), and the event-time TTL is
-    * an EXPLICIT registered timer (end of the group's day + one grace day)
-    * whose expiry callback clears the state — where the fMGWS form threads
-    * the same eviction through `GroupStateTimeout.EventTimeTimeout` +
-    * `setTimeoutTimestamp` on every invocation. Admission semantics are
-    * identical by construction (same sort, same counter, same cap), so both
-    * forms share one DuckDB oracle.
-    */
-  private final class RateLimitProcessor(perDay: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Long, Int), DayEventT, RateLimitEmit] {
-    import org.apache.spark.sql.streaming.{
-      ExpiredTimerInfo, OutputMode, TTLConfig, TimeMode, TimerValues, ValueState}
-
-    @transient private var count: ValueState[Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      // lifetime is governed by the event-time timer below, not a
-      // processing-time TTL — wall-clock eviction would break replay
-      // determinism (a slow run could evict a day mid-replay)
-      count = getHandle.getValueState[Int](
-        "count", org.apache.spark.sql.Encoders.scalaInt, TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (Long, Int), rows: Iterator[DayEventT],
-        timerValues: TimerValues): Iterator[RateLimitEmit] = {
-      var n = if (count.exists()) count.get() else {
-        // first sight of this (user, day): arm the eviction timer once —
-        // fires when the watermark passes the day's close + one grace day
-        getHandle.registerTimer((key._2.toLong + 2) * 86400000L)
-        0
-      }
-      // materialize + sort BEFORE state.update: admission order must be the
-      // batch form's ORDER BY us, event_id within this batch slice
-      val admitted = rows.toArray.sortBy(e => (e.us, e.event_id))
-        .iterator.takeWhile(_ => n < perDay).map { e =>
-          n += 1
-          RateLimitEmit(e.event_id, e.user_id, e.day, e.us, n)
-        }.toArray
-      count.update(n)
-      admitted.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: (Long, Int), timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[RateLimitEmit] = {
-      // Clearing the counter does NOT itself prevent re-admission: a row
-      // slipping past the watermark for an evicted (user, day) would
-      // re-register a (past) timer and re-admit up to perDay on a fresh
-      // counter. Re-admission is prevented by the time-ordered replay + 1h
-      // watermark grace (no row arrives behind the watermark), the same
-      // watermark-loss contract as the fMGWS form's state.remove().
-      count.clear()
-      Iterator.empty
-    }
-  }
-
-  /** The SCALE-CORRECT transformWithState rate limiter — the re-plan that
-    * fixes what [[RateLimitProcessor]] measures badly. That form keys by
-    * (user, day) and registers ONE TIMER PER GROUP, so the RocksDB timer
-    * column family carries user × day entries and its maintenance measured
-    * 4.0×/decade (`BENCH_r11_tws_sf{1,10}.jsonl`). This form keys by USER
-    * and collapses the per-day timers into one EPOCH-SWEPT timer per user:
+  /** The transformWithState rate limiter: the per-(user, day) admission
+    * counter of [[rateLimitEmissions]] on a Spark-4
+    * [[org.apache.spark.sql.streaming.StatefulProcessor]]. Keying by
+    * (user, day) with ONE TIMER PER GROUP puts user × day entries in the
+    * RocksDB timer column family, whose maintenance measured 4.0×/decade
+    * (`BENCH_r11_tws_sf{1,10}.jsonl`); this processor keys by USER and
+    * keeps one EPOCH-SWEPT timer per user:
     *
     *   - `dayCounts: MapState[Int, Int]` — the admission counter per OPEN
     *     day rides in its own column family, one entry per (user, open
@@ -1119,7 +1058,7 @@ object StreamingState {
     *     watermark has passed (not just the fired epoch), then re-arms at
     *     the minimum remaining epoch — so timer registrations AND fires are
     *     ~one per (user, day-transition), and the live timer set is ~#users,
-    *     ~30× below the per-group form at the r11 measurement's cardinality.
+    *     ~30× below one timer per group at the r11 measurement's cardinality.
     *
     * Admission semantics are IDENTICAL to [[rateLimitEmissions]] by
     * construction: the user's batch slice is sorted by the same total
@@ -1127,7 +1066,7 @@ object StreamingState {
     * each day's counter admits the first `perDay` events, and eviction only
     * touches days the watermark has closed — on the time-ordered replay
     * with 1h grace no row for an evicted day can still arrive, the same
-    * watermark-loss contract as both other forms. Shared oracle.
+    * watermark-loss contract as the fMGWS form. Shared oracle.
     */
   private final class RateLimitSweepProcessor(perDay: Int)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -1212,8 +1151,8 @@ object StreamingState {
   }
 
   /** [[RateLimitSweepProcessor]] wired to the shared replay/source — the
-    * registered transformWithState rate limiter (r12; see the processor doc
-    * for why this form replaces the demoted per-(user, day)-timer one).
+    * registered transformWithState rate limiter (see the processor doc for
+    * why it keeps one timer per user, not one per (user, day)).
     */
   def rateLimitEmissionsTwsSwept(
       spark: SparkSession, sfDir: String, perDay: Int = 5): DataFrame =
@@ -1252,38 +1191,6 @@ object StreamingState {
     val (out, before, staged) = runKillRestart(sfDir, s"ratelimit_tws2r_$perDay",
       n => rateLimitReplay(spark, sfDir, n), chunks)(rateLimitSwept(perDay))
     (admissions(spark, out), before, staged)
-  }
-
-  /** Streaming rate limiter on the `transformWithState` API — identical
-    * replay, admission decisions, and output rows as [[rateLimitEmissions]]
-    * (one shared replay helper), differing only in the state API (see
-    * [[RateLimitProcessor]]).
-    *
-    * SPEC-SIDE ONLY since r12 (was `q_streaming_rate_limit_tws`): its own
-    * alternating cold decade measured 4.0×/10× (mins 23.8 → 95.8 s,
-    * `BENCH_r11_tws_sf{1,10}.jsonl`) vs 1.9× for the fMGWS form — one
-    * explicit timer per (user × day) group writes a RocksDB timer column
-    * family whose maintenance degrades at exactly the group cardinality a
-    * real rate limiter sees, where fMGWS's `EventTimeTimeout` rides in the
-    * state row it already writes. The repo rule is that a registered query
-    * IS a serving path, so the registry keeps only the measured-linear
-    * fMGWS primary; this form remains the transformWithState API-parity +
-    * correctness pin via `StreamingStateSpec`'s row-for-row differential —
-    * the same demotion precedent as the r10 exact-embedding forms. (For
-    * multi-entry per-key state the measurement goes the OTHER way — see
-    * [[TrendingProcessor]], the registered trending primary.)
-    */
-  def rateLimitEmissionsTws(
-      spark: SparkSession, sfDir: String, perDay: Int = 5): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import spark.implicits._
-    admissions(spark, replayOnce(spark, sfDir, s"ratelimit_tws_$perDay",
-      staged(rateLimitReplay(spark, sfDir))) { r =>
-      rateLimitSource(r)
-        .groupByKey(e => (e.user_id, e.day))
-        .transformWithState(
-          new RateLimitProcessor(perDay), TimeMode.EventTime(), OutputMode.Append())
-    })
   }
 
   /** One restored-store row / one post-restore update. The emission carries

@@ -468,7 +468,7 @@ class NativeKernelsSpec extends AnyFunSuite {
     // the retired Column form, rebuilt verbatim: per-cell struct
     // (|c|²−2·v·c, cell, dot), array_min, lexicographic tie to lowest cell
     val cents = Similarity.trainIvfCentroids(emb, k = 23, iters = 2)
-    val idx = new NativeExpressions.FloatCentroidIndex(cents, Array.empty)
+    val idx = new NativeExpressions.FloatCentroidIndex(cents)
     val v = col("embedding")
     val scored = array(cents.zipWithIndex.toIndexedSeq.map { case (c, i) =>
       val cLit = typedlit(c)
@@ -629,41 +629,6 @@ class NativeKernelsSpec extends AnyFunSuite {
     assert(SparkEntry.semdedupK(16000L) == 64 && SparkEntry.semdedupK(16001L) == 65)
   }
 
-  test("FloatCentroidIndex.admissible == per-cell cos/angle filter form") {
-    val cents = Similarity.trainIvfCentroids(emb, k = 23, iters = 2)
-    val radii = Similarity.trainCellRadii(emb, cents)
-    val idx = new NativeExpressions.FloatCentroidIndex(
-      cents, cents.indices.map(j => radii.getOrElse(j, 0.0)).toArray)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x.toDouble * x.toDouble).sum))
-    val margin = 2e-6
-    def angleCol(cosine: org.apache.spark.sql.Column) =
-      coalesce(acos(least(greatest(cosine, lit(-1.0)), lit(1.0))), lit(math.Pi))
-    val v = col("embedding")
-    val nrm = sqrt(NativeExpressions.vecDot(v, v))
-    val cellBest = array(cents.indices.map { j =>
-      cos(greatest(lit(0.0),
-        angleCol(NativeExpressions.vecDot(v, typedlit(cents(j))) /
-          (nrm * lit(cnorms(j)))) - lit(radii.getOrElse(j, 0.0))))
-    }: _*)
-    // sweep floors across the whole admit/reject range, vec-dependent
-    val floor = (pmod(col("vec_id"), lit(20)).cast("double") / 10.0) - lit(1.0)
-    val rows = emb.select(
-      col("vec_id"),
-      NativeExpressions.admissibleCells(v, nrm, floor, idx, margin).as("adm"),
-      filter(cellBest, (b: org.apache.spark.sql.Column) =>
-        b >= floor - lit(margin)).as("twin_best"),
-      cellBest.as("all_best")).collect()
-    rows.foreach { r =>
-      val adm = r.getSeq[Int](1)
-      val floorV = (r.getLong(0) % 20).toDouble / 10.0 - 1.0
-      val all = r.getSeq[Double](3)
-      val twin = all.zipWithIndex.collect {
-        case (b, j) if b >= floorV - margin => j
-      }
-      assert(adm == twin, s"admissible mismatch at vec ${r.getLong(0)}")
-    }
-  }
-
   test("interpreted eval matches codegen (eval path exercised via filter on driver)") {
     // Expression.eval is exercised when Catalyst constant-folds literals
     val lit1 = NativeExpressions.shingleHashes(lit("a b c d"), 3)
@@ -681,7 +646,7 @@ class NativeKernelsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import graft.functions.{BpeMemoKernel, NativeFunctions}
     val cents = emb.select("embedding").limit(4).collect().map(_.getSeq[Float](0).toArray)
-    val floatIdx = new NativeExpressions.FloatCentroidIndex(cents, Array.fill(cents.length)(0.1))
+    val floatIdx = new NativeExpressions.FloatCentroidIndex(cents)
     val doubleIdx = new NativeExpressions.DoubleCentroidIndex(cents.map(_.map(_.toDouble)))
     val bloom = NativeExpressions.BloomRef(
       org.apache.spark.util.sketch.BloomFilter.create(100, 0.01))
@@ -713,9 +678,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       "vecDot" -> NativeExpressions.vecDot(v, v),
       "lshBuckets" -> NativeExpressions.lshBuckets(v, 4, 5),
       "nearestCellInfo" -> NativeExpressions.nearestCellInfo(v, floatIdx),
-      "nearestCentroidDist" -> NativeExpressions.nearestCentroidDist(v, doubleIdx),
-      "admissibleCells" -> NativeExpressions.admissibleCells(
-        v, lit(1.0), lit(0.5), floatIdx, 0.01))
+      "nearestCentroidDist" -> NativeExpressions.nearestCentroidDist(v, doubleIdx))
     def finalPlan(p: SparkPlan): SparkPlan = p match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case other => other

@@ -136,24 +136,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pairs == Set((0L, 1L), (0L, 3L), (1L, 3L)))
   }
 
-  test("pruned exact pairs == brute-force pairs on the real corpus (plan is equi-join)") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
-    val pruned = Similarity.cosinePairsPruned(emb, 0.45, centroids,
-      Similarity.trainCellRadii(emb, centroids))
-
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"pruned pair plan must not be all-pairs:\n$plan")
-
-    val brute = Similarity.cosinePairs(emb, 0.45)
-      .select("vec_a", "vec_b", "score").as[(Long, Long, Double)].collect().toSet
-    val got = pruned
-      .select("vec_a", "vec_b", "score").as[(Long, Long, Double)].collect().toSet
-    assert(got == brute,
-      s"pruned pairs must be EXACT: missing=${brute -- got}, extra=${got -- brute}")
-  }
-
   test("global ε-closure labels == driver union-find over brute-force pairs " +
     "(spec-side exactness gate for the retired global q_similarity_dedup plan)") {
     // Round 11 re-planned q_similarity_dedup onto the within-cell pair
@@ -161,18 +143,16 @@ class SimilaritySpec extends AnyFunSuite {
     // unrestricted ε-pair graph — lives here as the exactness baseline the
     // bounded registered form is a stated approximation of.
     val emb = Tables.embeddings(spark, sfDir)
-    val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
     val got = graft.operators.Dedup.nearDedupLabels(
       emb.select(col("vec_id")),
-      Similarity.cosinePairsPruned(emb, 0.45, centroids,
-          Similarity.trainCellRadii(emb, centroids))
+      Similarity.cosinePairs(emb, 0.45)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
       idCol = "vec_id")
       .as[(Long, Long)].collect().toMap
 
     // driver-side union-find over the brute-force pair list
     val ids = emb.select("vec_id").as[Long].collect()
-    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    val parent = scala.collection.mutable.Map(ids.toIndexedSeq.map(i => i -> i): _*)
     def find(x: Long): Long =
       if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
     Similarity.cosinePairs(emb, 0.45)
@@ -184,27 +164,6 @@ class SimilaritySpec extends AnyFunSuite {
     val want = ids.map(i => i -> find(i)).toMap
     assert(got == want,
       s"global closure labels diverge: ${(got.toSet -- want.toSet).take(5)}")
-  }
-
-  test("pruned exact pairs prune cross-cluster cell pairs on clustered data") {
-    // two antipodal tight clusters: every cross-cluster cell pair is
-    // unreachable at threshold 0.9, so the admissible pair list (and thus
-    // the candidate count) must be strictly below all-pairs
-    val rows = (0 until 40).map { i =>
-      val sign = if (i < 20) 1f else -1f
-      (i.toLong, Seq(sign * 10f, 0.01f * (i % 5), 0.01f * (i % 3), 0f))
-    }
-    val df = vecs(rows: _*)
-    val centroids = Similarity.trainIvfCentroids(df, k = 4, iters = 5)
-    val pruned = Similarity.cosinePairsPruned(df, 0.9, centroids,
-      Similarity.trainCellRadii(df, centroids))
-    val brute = Similarity.cosinePairs(df, 0.9)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val got = pruned.select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    assert(got == brute)
-    // no cross-cluster pair can score >= 0.9, and pruning must have removed
-    // those cell pairs: every returned pair stays within one sign-cluster
-    assert(got.forall { case (a, b) => (a < 20) == (b < 20) })
   }
 
   test("ivfExactTopK == bruteForceTopK on the real corpus (plan is equi-join)") {
@@ -229,97 +188,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == brute,
       s"exact IVF top-k must match brute force rank-for-rank: " +
         s"missing=${brute -- got}, extra=${got -- brute}")
-  }
-
-  test("knnJoinExact == bruteForceKnnJoin on the real corpus (plan is equi-join)") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
-    val knn = Similarity.knnJoinExact(emb, k = 5, centroids,
-      Similarity.trainCellRadii(emb, centroids))
-
-    val plan = knn.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"exact self-KNN plan must not be all-pairs:\n$plan")
-
-    val brute = Similarity.bruteForceKnnJoin(emb, k = 5)
-      .select("query_id", "rank", "neighbor_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    val got = knn
-      .select("query_id", "rank", "neighbor_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    assert(got == brute,
-      s"exact self-KNN must match brute force rank-for-rank: " +
-        s"missing=${brute -- got}, extra=${got -- brute}")
-  }
-
-  test("clustered corpus: the exact-KNN triangle prune ENGAGES (probes << N x cells)") {
-    // The isotropic corpus admits every cell (documented degradation); this
-    // asserts the OTHER side of the claim — on clusterable data (tight
-    // label-wise blobs, the SemDeDup profile) the angular bound prunes most
-    // (vector, cell) probes, so the candidate join is far below the
-    // cell-partitioned all-pairs fallback.
-    val emb = Similarity.clusterize(Tables.embeddings(spark, sfDir))
-    val n = emb.count()
-    val nCells = math.min(128, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
-    val centroids = Similarity.trainIvfCentroids(emb, k = nCells)
-    val radii = Similarity.trainCellRadii(emb, centroids)
-    val probed = Similarity.knnProbes(emb, k = 5, centroids, radii).count()
-    val full = n * nCells
-    assert(probed < 0.2 * full,
-      s"prune did not engage on clustered data: $probed probes of $full (N x cells)")
-    // and the pruned result is still EXACT
-    val brute = Similarity.bruteForceKnnJoin(emb, k = 5)
-      .select("query_id", "rank", "neighbor_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    val got = Similarity.knnJoinExact(emb, k = 5, centroids, radii)
-      .select("query_id", "rank", "neighbor_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    assert(got == brute, s"missing=${brute -- got}, extra=${got -- brute}")
-  }
-
-  test("cosinePairsPruned admits << all cell pairs on the clustered corpus") {
-    val emb = Similarity.clusterize(Tables.embeddings(spark, sfDir))
-    val centroids = Similarity.trainIvfCentroids(emb, k = 16, iters = 5)
-    val radii = Similarity.trainCellRadii(emb, centroids)
-    val theta = math.acos(0.9)
-    val cells = radii.keys.toSeq.sorted
-    val admissible = (for {
-      i <- cells; j <- cells
-      if i < j
-    } yield (i, j)).count { case (i, j) =>
-      Similarity.driverAngleForSpec(centroids(i), centroids(j)) <=
-        radii(i) + radii(j) + theta + 1e-6
-    }
-    val all = cells.size * (cells.size - 1) / 2
-    assert(admissible < 0.5 * all,
-      s"cell-pair prune did not engage: $admissible of $all cross pairs admitted")
-    // exactness on the clustered corpus as well
-    val brute = Similarity.cosinePairs(emb, 0.9)
-      .select("vec_a", "vec_b", "score").as[(Long, Long, Double)].collect().toSet
-    val got = Similarity.cosinePairsPruned(emb, 0.9, centroids, radii)
-      .select("vec_a", "vec_b", "score").as[(Long, Long, Double)].collect().toSet
-    assert(got == brute,
-      s"pruned pairs must be EXACT: missing=${brute -- got}, extra=${got -- brute}")
-  }
-
-  test("knnJoinExact: singleton-cell vectors (floor -2) still get exact neighbors") {
-    // two tight clusters + one isolated vector whose own cell holds < k
-    // other members, forcing the -2 floor path (all cells admissible for it)
-    val a = Seq(1f, 0f, 0f, 0f)
-    val b = Seq(0f, 1f, 0f, 0f)
-    val df = vecs(
-      (0L, a), (1L, a.map(_ * 2f)), (2L, a.map(_ * 3f)),
-      (10L, b), (11L, b.map(_ * 2f)), (12L, b.map(_ * 3f)),
-      (99L, Seq(0.7f, 0.7f, 0.1f, 0f))) // between clusters, likely alone
-    val centroids = Similarity.trainIvfCentroids(df, k = 3, iters = 3)
-    val brute = Similarity.bruteForceKnnJoin(df, k = 2)
-      .select("query_id", "rank", "neighbor_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    val got = Similarity.knnJoinExact(df, k = 2, centroids,
-      Similarity.trainCellRadii(df, centroids))
-      .select("query_id", "rank", "neighbor_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    assert(got == brute, s"missing=${brute -- got}, extra=${got -- brute}")
   }
 
   test("int8 quantization bounds round-trip error and handles zero vectors") {
@@ -614,9 +482,10 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("knnJoinWithinCells == brute-force top-k over the same-cell candidate set") {
     val emb = Tables.embeddings(spark, sfDir)
-    val asg = Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 8, iters = 3))
+    val cents = Similarity.trainKmeans(emb, k = 8, iters = 3)
+    val asg = Similarity.kmeansAssignments(emb, cents)
       .select(col("vec_id"), col("cell"))
-    val got = Similarity.knnJoinWithinCells(emb, asg, k = 5)
+    val got = Similarity.knnJoinWithinCells(emb, cents, k = 5)
     // brute-force twin: all same-cell ordered pairs scored, window-ranked
     val n = emb.select(col("vec_id"), col("embedding").as("v"),
       Similarity.norm(col("embedding")).as("nrm"))
@@ -644,9 +513,10 @@ class SimilaritySpec extends AnyFunSuite {
     // subset of the global ε-pair list (the composition's previous input),
     // on the real corpus with a real k-means assignment
     val emb = Tables.embeddings(spark, sfDir)
-    val asg = Similarity.kmeansAssignments(emb, Similarity.trainKmeans(emb, k = 8, iters = 3))
+    val cents = Similarity.trainKmeans(emb, k = 8, iters = 3)
+    val asg = Similarity.kmeansAssignments(emb, cents)
       .select(col("vec_id"), col("cell"))
-    val within = Similarity.cosinePairsWithinCells(emb, asg, threshold = 0.45)
+    val within = Similarity.cosinePairsWithinCells(emb, cents, threshold = 0.45)
     val global = Similarity.cosinePairs(emb, threshold = 0.45)
       .join(asg.select(col("vec_id").as("vec_a"), col("cell").as("ca")), Seq("vec_a"))
       .join(asg.select(col("vec_id").as("vec_b"), col("cell").as("cb")), Seq("vec_b"))
@@ -654,26 +524,6 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_a"), col("vec_b"), col("score"))
     assert(within.except(global).isEmpty && global.except(within).isEmpty)
     assert(within.count() > 0, "fixture degenerate: no same-cell pairs at all")
-  }
-
-  test("centroid-model within-cells forms == kmeansAssignments-join forms") {
-    // r16: the registered semdedup-family queries compute the cell MAP-SIDE
-    // from the trained centroid matrix instead of joining kmeansAssignments
-    // back on vec_id — same kernel, so both knn and pair outputs must be
-    // row-identical to the join forms (scores included: the pair-once
-    // mirroring relies on bit-exact cosine symmetry)
-    val emb = Tables.embeddings(spark, sfDir)
-    val cents = Similarity.trainKmeans(emb, k = 8, iters = 3)
-    val asg = Similarity.kmeansAssignments(emb, cents)
-      .select(col("vec_id"), col("cell"))
-    val knnJoin = Similarity.knnJoinWithinCells(emb, asg, k = 5)
-    val knnCents = Similarity.knnJoinWithinCells(emb, cents, k = 5)
-    assert(knnCents.except(knnJoin).isEmpty && knnJoin.except(knnCents).isEmpty)
-    assert(knnCents.count() > 0)
-    val pairsJoin = Similarity.cosinePairsWithinCells(emb, asg, threshold = 0.45)
-    val pairsCents = Similarity.cosinePairsWithinCells(emb, cents, threshold = 0.45)
-    assert(pairsCents.except(pairsJoin).isEmpty && pairsJoin.except(pairsCents).isEmpty)
-    assert(pairsCents.count() > 0)
   }
 
   test("matryoshka: hand-built pair, zero-norm prefix guard, exact full-dim") {

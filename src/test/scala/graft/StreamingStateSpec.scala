@@ -343,16 +343,6 @@ class StreamingStateSpec extends AnyFunSuite {
       "generous-watermark snapshot diverged from the batch windowed counts")
   }
 
-  test("transformWithState rate limiter equals the flatMapGroupsWithState form row-for-row") {
-    // two state APIs, one semantics: the Spark-4 StatefulProcessor twin
-    // (typed ValueState + explicit event-time timer) must reproduce the
-    // fMGWS admission stream exactly — same replay, same sort, same cap
-    val fmgws = StreamingState.rateLimitEmissions(spark, sfDir, perDay = 5)
-    val tws = StreamingState.rateLimitEmissionsTws(spark, sfDir, perDay = 5)
-    assert(fmgws.count() > 0)
-    assert(tws.exceptAll(fmgws).isEmpty && fmgws.exceptAll(tws).isEmpty)
-  }
-
   test("epoch-swept transformWithState rate limiter equals the fMGWS form row-for-row") {
     // the r12 re-plan: user-keyed MapState day counters + ONE swept timer
     // per user (vs one per (user, day) group) must reproduce the fMGWS

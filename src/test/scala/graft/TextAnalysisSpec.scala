@@ -98,7 +98,7 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("short docs get empty fingerprint sets, not errors") {
-    val r = TextAnalysis.fingerprints(corpus((1L, "tiny"))).head()
+    val r = TextAnalysis.fingerprintsPortable(corpus((1L, "tiny"))).head()
     assert(r.getAs[Int]("n_fingerprints") == 0)
     assert(r.isNullAt(r.fieldIndex("min_fingerprint")))
   }
